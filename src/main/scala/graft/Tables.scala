@@ -24,7 +24,7 @@ object Tables {
     * `spark.read.parquet` call pays a fresh driver-side file listing +
     * footer schema read + analysis; across a 121-query bench each query
     * re-reads 3-6 fixture tables, so this was 0.1-0.4 s of pure driver
-    * time per query (measured with graft.PlanProfile, r13). The fixture
+    * time per query (measured, r13). The fixture
     * parquet under a dir never changes within a session (testdata is
     * read-only; bench corpora write once to a fresh temp dir before the
     * first read), so reusing the SAME DataFrame object is safe — the

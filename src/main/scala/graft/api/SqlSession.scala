@@ -185,16 +185,6 @@ object SqlSession {
       StructField("data_type", StringType)))
     spark.createDataFrame(rows.asJava, schema)
   }
-
-  /** Build a session from scratch (local default suitable for tests). */
-  def create(master: String = "local[4]", shufflePartitions: Int = 4): SqlSession =
-    wrap(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
 }
 
 /** Textual shims for reference function names Spark spells differently.

@@ -1590,7 +1590,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.functions", name, usage),
         builder))
     }
-    ext.injectOptimizerRule(_ => graft.rules.CombineApproxPercentiles)
-    ext.injectOptimizerRule(_ => graft.rules.MergeSumsToVectorSum)
+    graft.rules.GraftRules.rules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }

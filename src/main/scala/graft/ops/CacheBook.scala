@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
   * a shared subplan (the reference's REMOTE_MATERIALIZED / CTE
   * materialization points — 10 TPC-DS queries plus the CTE-reuse gate)
   * register here instead of calling bare persist(); the consumer
-  * (Bench / Verify / any long-lived host such as the statement server)
+  * (Verify, the benchmark, any long-lived host such as the statement server)
   * calls `drain()` after it has consumed the query's result. Without
   * this, a 99-query suite in one long-lived session accumulates every
   * query's cached aggregates until LRU eviction starts thrashing the

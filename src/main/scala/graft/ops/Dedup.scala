@@ -244,8 +244,8 @@ object Dedup {
       .orderBy("vec_id")
   }
 
-  /** The within-cell duplicate-pair stage shared by semanticDedupSalted
-    * and the skew bench (BenchSkew.scala): for each vector, the smallest
+  /** The within-cell duplicate-pair stage of semanticDedupSalted (pinned
+    * by SkewSpec): for each vector, the smallest
     * earlier vec_id in the SAME cell with cosine >= tau. With salts > 1
     * the probe (a) side is split into `salts` deterministic sub-buckets
     * and the build (b) side replicated to each, so the shuffle key becomes
@@ -366,35 +366,10 @@ object Dedup {
     * 50-word fixture vocabulary collides meaningfully; a crawl run uses
     * k≈50 tokens as in the paper. */
   def substringDup(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val k = 3
     val d = t(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .withColumn("nw", size(col("w")).cast("long"))
-    // grams reduce to 64-bit fingerprints BEFORE any shuffle (C4 itself
-    // dedups on hashed spans, Raffel et al. 2020 §2.2) — the gram-keyed
-    // exchanges move 8-byte longs instead of ~20-byte strings (measured
-    // at 1M docs: 1.5 GiB of gram strings shuffled without this).
-    // Collision bound (accepted trade-off, r12 ADVICE): a 64-bit
-    // xxhash collision merges two unrelated grams and flags a false
-    // duplicate; by the birthday bound, at 10^10 distinct grams
-    // (≈100 TB of text) P(any collision) ≈ n²/2^65 ≈ 0.3 %, and each
-    // collision perturbs ONE gram group — acceptable for a dedup
-    // heuristic (C4 hashes spans too). The DuckDB oracle groups on the
-    // exact gram STRINGS, so the gate would catch a collision at
-    // fixture scale (none exist there); at corpus scale the two
-    // definitions diverge by that ~0.3 % event. A 128-bit fingerprint
-    // (md5 prefix pair) is the swap-in if exactness must hold at scale.
-    // the k word values hash DIRECTLY (multi-arg xxhash64 chains each
-    // value into the running hash, so word boundaries stay distinct) —
-    // no slice() array and no concat'd gram string is ever allocated in
-    // the explode stage (r14, guide §2.3: shuffle/compute narrower rows)
-    val gramHash = (0 until k).map(j => s"w[i + $j]")
-      .mkString("xxhash64(", ", ", ")")
-    val sh = d.filter(col("nw") >= k)
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, int(nw) - $k), i -> $gramHash)")))
-      .toDF("doc_id", "pos", "g")
     // duplicated-gram hits off ONE exchange and NO sort (r14, guide
     // §2.4/§5): the r13 count-over-partition window got the hits off one
     // exchange but its sort buffered the full gram stream (28 GiB
@@ -405,22 +380,12 @@ object Dedup {
     // gram state, not per-row) probed by a shuffled-hash join (build
     // side = duplicated grams only, a subset of distinct grams). The
     // full-stream sort is gone entirely.
-    val parted = sh.repartition(col("g"))
+    val parted = grams(d, k).repartition(col("g"))
     val dup = parted.groupBy("g").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2).select("g")
     val hits = parted.join(dup.hint("shuffle_hash"), "g")
       .select(col("doc_id"), col("pos"))
-    val wOrd = Window.partitionBy("doc_id").orderBy("pos")
-    val wPrev = wOrd.rowsBetween(Window.unboundedPreceding, -1)
-    val spans = hits
-      .withColumn("en", col("pos") + k)
-      .withColumn("prev_max", max(col("en")).over(wPrev))
-      .withColumn("new_isl",
-        when(col("prev_max").isNull || col("pos") > col("prev_max"), 1).otherwise(0))
-      .withColumn("isl", sum(col("new_isl")).over(wOrd))
-      .groupBy(col("doc_id"), col("isl"))
-      .agg(min("pos").as("st"), max("en").as("en"))
-    val per = spans.groupBy("doc_id")
+    val per = islands(hits, k).groupBy("doc_id")
       .agg(count(lit(1)).as("n_spans"),
         sum((col("en") - col("st")).cast("long")).as("dup_words"))
     // shuffled-hash (build = the small per-doc profile): SMJ would sort
@@ -451,30 +416,90 @@ object Dedup {
     * occurrences; removed positions collapse back per doc, reassembly is
     * a per-row projection. No sort and no all-pairs stage anywhere. */
   def spanDedup(s: SparkSession, dir: String): DataFrame = {
-    val k = 3
     val d = t(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .withColumn("nw", size(col("w")).cast("long"))
-    // same direct k-word xxhash64 fingerprints as substringDup: the
-    // per-gram first-occurrence election shuffles longs, not gram strings
+    withRemovedSpans(d, 3)
+      .select(col("doc_id"), col("nw").as("n_words"),
+        coalesce(col("n_rm"), lit(0L)).as("n_removed"),
+        survivingText.as("new_text"))
+      .orderBy("doc_id")
+  }
+
+  /** The k-word gram stream of `d` (doc_id, w, nw): one (doc_id, pos, g)
+    * row per gram of every document with at least k words.
+    *
+    * Grams reduce to 64-bit fingerprints BEFORE any shuffle (C4 itself
+    * dedups on hashed spans, Raffel et al. 2020 §2.2) — the gram-keyed
+    * exchanges move 8-byte longs instead of ~20-byte strings (measured
+    * at 1M docs: 1.5 GiB of gram strings shuffled without this).
+    * Collision bound (accepted trade-off, r12 ADVICE): a 64-bit xxhash
+    * collision merges two unrelated grams and flags a false duplicate; by
+    * the birthday bound, at 10^10 distinct grams (≈100 TB of text)
+    * P(any collision) ≈ n²/2^65 ≈ 0.3 %, and each collision perturbs ONE
+    * gram group — acceptable for a dedup heuristic (C4 hashes spans too).
+    * The DuckDB oracle groups on the exact gram STRINGS, so the gate would
+    * catch a collision at fixture scale (none exist there); at corpus
+    * scale the two definitions diverge by that ~0.3 % event. A 128-bit
+    * fingerprint (md5 prefix pair) is the swap-in if exactness must hold
+    * at scale. The k word values hash DIRECTLY (multi-arg xxhash64 chains
+    * each value into the running hash, so word boundaries stay distinct)
+    * — no slice() array and no concat'd gram string is ever allocated in
+    * the explode stage (r14, guide §2.3: shuffle/compute narrower rows). */
+  private def grams(d: DataFrame, k: Int): DataFrame = {
     val gramHash = (0 until k).map(j => s"w[i + $j]")
       .mkString("xxhash64(", ", ", ")")
-    val sh = d.filter(col("nw") >= k)
+    d.filter(col("nw") >= k)
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, int(nw) - $k), i -> $gramHash)")))
       .toDF("doc_id", "pos", "g")
+  }
+
+  /** Gaps and islands over one doc-keyed window: the [pos, pos + k) word
+    * spans of `hits` (doc_id, pos) merge per document into disjoint
+    * islands (doc_id, isl, st, en). */
+  private def islands(hits: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wOrd = Window.partitionBy("doc_id").orderBy("pos")
+    val wPrev = wOrd.rowsBetween(Window.unboundedPreceding, -1)
+    hits
+      .withColumn("en", col("pos") + k)
+      .withColumn("prev_max", max(col("en")).over(wPrev))
+      .withColumn("new_isl",
+        when(col("prev_max").isNull || col("pos") > col("prev_max"), 1).otherwise(0))
+      .withColumn("isl", sum(col("new_isl")).over(wOrd))
+      .groupBy(col("doc_id"), col("isl"))
+      .agg(min("pos").as("st"), max("en").as("en"))
+  }
+
+  /** `d` (doc_id, w, nw, ...) left-joined with its C4 removal set: per
+    * document, the sorted disjoint word intervals `ivs` (st, en) covered
+    * by a LATER occurrence of a k-gram that occurs more than once, and
+    * their width `n_rm` (both NULL when nothing is removed). Shared by
+    * [[spanDedup]] and `TextAnalysis.pipeline3`; [[survivingText]]
+    * reassembles the text. */
+  private[ops] def withRemovedSpans(d: DataFrame, k: Int): DataFrame = {
     // First-occurrence election WITHOUT the full-stream sort (r14, guide
     // §2.3/§5): the r13 row_number() window sorted every (g, doc_id,
     // pos) row — 85 GiB mem-spill at the 5 M-doc starved-memory bench,
     // the corpus suite's dominant cost. Instead: (doc_id, pos) packs
-    // into ONE order-preserving long (doc_id < 2^31 and pos < 2^32 —
-    // positions are word offsets, ids are sequence numbers; min over a
-    // struct would plan a SortAggregate and bring the sort back), a
-    // per-gram hash aggregate elects min = the first occurrence, and a
-    // shuffled-hash join back against the SAME exchange (ReusedExchange,
-    // build side = duplicated grams only) yields every LATER occurrence.
-    // Exactly the rows rk > 1 produced; no sort anywhere.
-    val parted = sh
+    // into ONE order-preserving long (min over a struct would plan a
+    // SortAggregate and bring the sort back), a per-gram hash aggregate
+    // elects min = the first occurrence, and a shuffled-hash join back
+    // against the SAME exchange (ReusedExchange, build side = duplicated
+    // grams only) yields every LATER occurrence. Exactly the rows rk > 1
+    // produced; no sort anywhere.
+    //
+    // The packing preserves order only while doc_id fits 32 signed bits
+    // (pos, a word offset, always fits the low 32): a wider id would wrap
+    // and elect wrong first occurrences, so it fails the job instead —
+    // one check per document, before the explode.
+    val ids = d.filter(
+      when(!col("doc_id").between(-(1L << 31), (1L << 31) - 1),
+        raise_error(concat(lit("doc_id "), col("doc_id").cast("string"),
+          lit(" does not fit the 32-bit packed (doc_id, pos) span election"))))
+        .otherwise(lit(true)))
+    val parted = grams(ids, k)
       .withColumn("e", shiftleft(col("doc_id"), 32) + col("pos"))
       .repartition(col("g"))
     val firsts = parted.groupBy("g")
@@ -488,35 +513,24 @@ object Dedup {
     // the dropped-gram stream and, past ObjectHashAggregate's 128-key
     // sort fallback, SORTED it — the operator's dominant residual spill.
     // Overlapping/adjacent dropped grams instead merge into disjoint
-    // [st, en) islands per document (the substringDup gaps-and-islands
-    // pass, 1/k-th the rows into the only per-doc sort); distinct
-    // removed-position count = Σ island widths exactly.
-    import org.apache.spark.sql.expressions.Window
-    val wOrd = Window.partitionBy("doc_id").orderBy("pos")
-    val wPrev = wOrd.rowsBetween(Window.unboundedPreceding, -1)
-    val rmSpans = dropped
-      .withColumn("en", col("pos") + k)
-      .withColumn("prev_max", max(col("en")).over(wPrev))
-      .withColumn("new_isl",
-        when(col("prev_max").isNull || col("pos") > col("prev_max"), 1).otherwise(0))
-      .withColumn("isl", sum(col("new_isl")).over(wOrd))
-      .groupBy(col("doc_id"), col("isl"))
-      .agg(min("pos").as("st"), max("en").as("en"))
-    val rmAgg = rmSpans.groupBy("doc_id")
+    // [st, en) islands per document (1/k-th the rows into the only
+    // per-doc sort); distinct removed-position count = Σ island widths
+    // exactly.
+    val rm = islands(dropped, k).groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("st"), col("en")))).as("ivs"),
         sum((col("en") - col("st")).cast("long")).as("n_rm"))
     // shuffled-hash, build = the interval table: a sort-merge join here
     // would SORT the text-payload side — pure spill at corpus scale
-    d.join(rmAgg.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("nw").as("n_words"),
-        coalesce(col("n_rm"), lit(0L)).as("n_removed"),
-        expr("concat_ws(' ', transform(filter(" +
-          "transform(w, (x, i) -> struct(i AS i, x AS x)), " +
-          "s -> ivs IS NULL OR NOT exists(ivs, v -> s.i >= v.st AND s.i < v.en)), " +
-          "s -> s.x))")
-          .as("new_text"))
-      .orderBy("doc_id")
+    d.join(rm.hint("shuffle_hash"), Seq("doc_id"), "left")
   }
+
+  /** The words of `w` outside every [[withRemovedSpans]] interval `ivs`
+    * (NULL: nothing removed), rejoined with single spaces. */
+  private[ops] val survivingText: Column = expr(
+    "concat_ws(' ', transform(filter(" +
+      "transform(w, (x, i) -> struct(i AS i, x AS x)), " +
+      "s -> ivs IS NULL OR NOT exists(ivs, v -> s.i >= v.st AND s.i < v.en)), " +
+      "s -> s.x))")
 
   /** Semantic decontamination — the embedding-space complement of the
     * n-gram collision rule (TextAnalysis.decontaminate): a corpus vector

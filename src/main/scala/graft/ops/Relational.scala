@@ -395,7 +395,7 @@ object Relational {
   }
 
   /** Per-(key, salt) row counts under saltedJoin's exact bucketing — the
-    * partition-size histogram a skew audit reads (BenchSkew, SkewSpec):
+    * partition-size histogram a skew audit reads (SkewSpec):
     * a hot key is healthy when its rows spread over all `buckets` salts
     * with no bucket far above rows/buckets. */
   def saltedShuffleHistogram(big: DataFrame, bigKey: String,

@@ -250,49 +250,11 @@ object TextAnalysis {
           col("nw") >= 0.8) &&
         expr(s"size(filter($stopArr, st -> array_contains(w, st)))") >= 2)
       .select(col("doc_id"), col("lang"), col("source"), col("w"), col("nw"))
-    val k = 3
-    // same shape as Dedup.spanDedup (r14): direct k-word xxhash64 gram
-    // fingerprints (no concat'd gram strings), first-occurrence election
-    // as a per-gram min() over the order-preserving packed (doc_id, pos)
-    // long, later occurrences off a shuffled-hash join against the SAME
-    // gram exchange — the former row_number() window's full-stream sort
-    // (the corpus suite's dominant spill) is gone
-    val gramHash = (0 until k).map(j => s"w[i + $j]")
-      .mkString("xxhash64(", ", ", ")")
-    val sh = gf.filter(col("nw") >= k)
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, int(nw) - $k), i -> $gramHash)")))
-      .toDF("doc_id", "pos", "g")
-    val parted = sh
-      .withColumn("e", shiftleft(col("doc_id"), 32) + col("pos"))
-      .repartition(col("g"))
-    val firsts = parted.groupBy("g")
-      .agg(min(col("e")).as("fe"), count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= 2).select("g", "fe")
-    val dropped = parted.join(firsts.hint("shuffle_hash"), "g")
-      .filter(col("e") =!= col("fe"))
-      .select(col("doc_id"), col("pos"))
-    // merged removal INTERVALS per doc + shuffled-hash reattach — the
-    // same r14 spill cuts as Dedup.spanDedup (see the comments there)
-    val wOrd = Window.partitionBy("doc_id").orderBy("pos")
-    val wPrev = wOrd.rowsBetween(Window.unboundedPreceding, -1)
-    val rmSpans = dropped
-      .withColumn("en", col("pos") + k)
-      .withColumn("prev_max", max(col("en")).over(wPrev))
-      .withColumn("new_isl",
-        when(col("prev_max").isNull || col("pos") > col("prev_max"), 1).otherwise(0))
-      .withColumn("isl", sum(col("new_isl")).over(wOrd))
-      .groupBy(col("doc_id"), col("isl"))
-      .agg(min("pos").as("st"), max("en").as("en"))
-    val rmAgg = rmSpans.groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("st"), col("en")))).as("ivs"))
-    val r2 = gf.join(rmAgg.hint("shuffle_hash"), Seq("doc_id"), "left")
+    // C4 span removal among the filter's survivors: the same removal
+    // set and reassembly as Dedup.spanDedup
+    val r2 = Dedup.withRemovedSpans(gf, 3)
       .select(col("doc_id"), col("lang"), col("source"),
-        expr("concat_ws(' ', transform(filter(" +
-          "transform(w, (x, i) -> struct(i AS i, x AS x)), " +
-          "s -> ivs IS NULL OR NOT exists(ivs, v -> s.i >= v.st AND s.i < v.en)), " +
-          "s -> s.x))")
-          .as("new_text"))
+        Dedup.survivingText.as("new_text"))
     val scored = classifierScores(r2, "new_text")
     val kept = r2.join(
       scored.filter(col("pred_lang") === col("actual_lang"))

@@ -129,7 +129,7 @@ object PreAggregateRollup extends Rule[LogicalPlan] {
       case _ => false
     }
     if (alreadyPreAggregated) return None
-    // cardinality guard (r13, measured at sf1 with graft.ExpandRows):
+    // cardinality guard (r13, measured at sf1, BENCH_rollup_rows_r13.json):
     // ds_q36/q70/q86's facts collapse 6000-87000x at the finest grain,
     // but ds_q18/q27's demographic-sliced facts are near-DISTINCT on
     // their grouping keys (29k rows -> 29k groups) - there the pre-agg

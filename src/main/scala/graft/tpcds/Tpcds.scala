@@ -42,7 +42,7 @@ object Tpcds {
 
   /** Derived-fact access with an optional materialized layout: when the
     * bench has written the derived TPC-DS facts under `dir/_tpcds/<name>`
-    * (Bench.scala, once, outside the timed region — the role of the
+    * ([[materializeFacts]], once, outside the timed region — the role of the
     * reference's tpcds connector generating tables before benchto runs,
     * presto-tpcds/.../TpcdsConnectorFactory.java), read the parquet;
     * otherwise derive from the TPC-H fixtures. Correctness runs never
@@ -87,7 +87,7 @@ object Tpcds {
       // Tables.scan memoizes the DataFrame per (session, path): each
       // spark.read.parquet costs a fresh file listing + footer read +
       // analysis on the driver — per query call that was 0.1-0.3 s
-      // across the 99-query bench (r13, PlanProfile-measured)
+      // across the 99-query bench (r13, measured)
       if (matValidated.contains(path)) graft.Tables.scan(s, path)
       else {
         val derived = derive
@@ -154,7 +154,7 @@ object Tpcds {
   // as a net loss — per-query plan-build time goes UP (q96 0.38s vs 0.14s:
   // per-call spark.read.parquet footer/schema work beats re-analyzing the
   // range-based Projects) and exec gains nothing (tiny scans add task
-  // scheduling). PlanProfile A/B over {q03 q42 q96 q14 q64 q72 q23}:
+  // scheduling). A/B over {q03 q42 q96 q14 q64 q72 q23}:
   // in-memory 8.35s total vs materialized 9.65s.
 
   /** Per-(session, dir) memo of dimension DataFrames: Spark's analyzer
@@ -2993,8 +2993,8 @@ object Tpcds {
       .agg(dsum(col("cr_return_amount"), "refund"))
     // both year-branches semi-filter through the same two derived sets —
     // cache them so the excess-refund item list and the returned-ticket
-    // keys are computed once, not per branch (Bench/Verify clear the
-    // cache between queries)
+    // keys are computed once, not per branch (Verify and the benchmark
+    // clear the cache between queries)
     val csUi = catalogSales(s, dir)
       .groupBy(col("cs_item_sk").as("u_item"))
       .agg(dsum(col("cs_ext_sales_price"), "sale"))

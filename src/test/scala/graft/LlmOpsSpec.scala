@@ -219,6 +219,25 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(removed / total < 0.9, s"removed ${removed / total} of all words")
   }
 
+  test("span removal fails loudly on a doc_id too wide for the packed election") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_wide_ids").toFile
+    try {
+      // (2^32 + 1) << 32 wraps to 2^32, below doc 2's packed 2^33: an
+      // unguarded election would keep the wide doc's copy of the shared
+      // gram and drop doc 2's, the earlier occurrence
+      Seq((2L, "a b c"), ((1L << 32) + 1, "a b c")).toDF("doc_id", "text")
+        .write.parquet(s"$dir/documents.parquet")
+      val e = intercept[Exception](Dedup.spanDedup(spark, dir.getPath).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains(
+          s"doc_id ${(1L << 32) + 1} does not fit")), e)
+    } finally {
+      graft.Tables.invalidate(dir.getPath)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+
   test("cluster balance: over-represented cells shrink, small cells survive") {
     import graft.Tables
     val e = Tables(spark, sf, "embeddings")

@@ -253,6 +253,31 @@ class RulesSpec extends AnyFunSuite {
     } finally spark.experimental.extraOptimizations = Nil
   }
 
+  test("GraftExtensions injects exactly the rules GraftRules.install adds") {
+    import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+    import org.apache.spark.sql.graftbridge.ExtensionsBridge
+    val ext = new SparkSessionExtensions
+    new graft.functions.GraftExtensions().apply(ext)
+    try {
+      spark.experimental.extraOptimizations = Nil
+      graft.rules.GraftRules.install(spark)
+      assert(ExtensionsBridge.optimizerRules(ext, spark) ==
+        spark.experimental.extraOptimizations)
+    } finally spark.experimental.extraOptimizations = Nil
+    // a session that gets the rules only through the extension (nothing
+    // installs extraOptimizations on it) still two-phases a DataFrame rollup
+    val viaExt = SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions).create()
+    try {
+      assert(viaExt.experimental.extraOptimizations.isEmpty)
+      val rolled = viaExt.read.parquet(s"$sf/lineitem.parquet")
+        .rollup("l_returnflag", "l_linestatus")
+        .agg(sum(col("l_quantity").cast("decimal(18,6)")).as("s"))
+      assert(expandAggShape(rolled)._2,
+        "extension-injected rules must two-phase DataFrame rollups")
+    } finally SparkSession.setActiveSession(spark) // create() may claim it
+  }
+
   test("pre-aggregate below Expand: decimal partials carry an overflow " +
       "guard; all-null groups stay exact (r13)") {
     try {

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Skew-hardening pins behind the 100 TB claim (BenchSkew.scala is the
-  * at-volume artifact; these are the deterministic small-scale contracts):
+/** Skew-hardening pins behind the 100 TB claim (BENCH_skew_r10.json holds
+  * the at-volume figures; these are the deterministic small-scale
+  * contracts):
   * the salted join's partition-size histogram spreads a hot key over every
   * salt bucket, and the salted SemDeDup pair stage emits the identical
   * answer as the unsalted gate. */
