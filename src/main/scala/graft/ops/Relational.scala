@@ -270,14 +270,13 @@ object Relational {
 
   /** Materialized-CTE reuse (reference CteProducerNode/CteConsumerNode +
     * LogicalCteOptimizer): one aggregate subplan consumed twice — as the
-    * per-customer rows and as the scalar threshold. The CacheBook-
-    * registered persist marks the shared subplan the way
-    * REMOTE_MATERIALIZED exchanges persist it (and the harness drains it
-    * after consumption); AQE shuffle reuse would kick in even without
-    * it. */
+    * per-customer rows and as the scalar threshold. The plan shares the
+    * subplan the way a REMOTE_MATERIALIZED exchange does: the second
+    * consumer reads the aggregate's exchange as a ReusedExchange instead
+    * of recomputing it. */
   def cteReuse(s: SparkSession, dir: String): DataFrame = {
     val spend = t(s, dir, "orders").groupBy("o_custkey")
-      .agg(dsum(col("o_totalprice"), "spend")).transform(CacheBook.persisted)
+      .agg(dsum(col("o_totalprice"), "spend"))
     val top = spend.agg(max("spend").as("max_spend"))
     val out = spend.crossJoin(broadcast(top))
       .filter(col("spend") >= col("max_spend") * 0.5)

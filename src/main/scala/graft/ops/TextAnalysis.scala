@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Tables
 
 /** Text-analysis operators for training-data pipelines (reference seeds:
@@ -151,7 +152,7 @@ object TextAnalysis {
     * argmax with deterministic score-desc/lang-asc ties. Integer
     * arithmetic end-to-end (the [[lmScore]] trick) so any engine replays
     * the exact scores. Scale shape (r13 rewrite): train from ONE
-    * persisted (lang, bucket) count grid; the exploded token stream
+    * collected (lang, bucket) count grid; the exploded token stream
     * joins straight against the 512-row broadcast pivoted term table and
     * collapses to one partial-agg row per (doc_id, lang) before the only
     * exchange — no (doc, bucket) intermediate aggregate, no doc-keyed
@@ -171,32 +172,32 @@ object TextAnalysis {
       .withColumn("bucket",
         expr(s"CAST(conv(substring(md5(word), 1, 6), 16, 10) AS BIGINT) % $B"))
     // ONE training pass: the (class, bucket) count grid IS the whole
-    // model (≤ |classes| × B rows) — persist it and derive both the
-    // per-class totals (collected: model metadata, O(classes)) and the
-    // pivoted per-bucket term table from the grid, instead of re-scanning
-    // the token stream once per consumer (r13: was 2 corpus passes for
-    // training, now 1).
-    val grid = graft.ops.CacheBook.persisted(
-      toks.groupBy("lang", "bucket").agg(count(lit(1)).as("c_lb")))
-    val langTotals = grid.groupBy("lang").agg(sum(col("c_lb")).as("c_l"))
+    // model (≤ |classes| × B rows) — collect it and derive both the
+    // per-class totals and the pivoted per-bucket term table from it on
+    // the driver, instead of re-scanning the token stream once per
+    // consumer (r13: was 2 corpus passes for training, now 1).
+    val grid = toks.groupBy("lang", "bucket").agg(count(lit(1)).as("c_lb"))
       .orderBy("lang").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val langs = langTotals.map(_._1)
-    val defTerm = langTotals.map { case (_, cl) => 1000000000L / (cl + B) }
-    // model body PIVOTED: one row per bucket with the per-class smoothed
-    // term — the scorer joins the corpus ONCE against a 512-row broadcast
-    // instead of fanning every (doc, bucket) out by |classes| (the
-    // crossJoin formulation measured 12 s at 100k docs; this shape 5×
-    // fewer rows, no per-doc window)
-    val termCols = langs.zipWithIndex.map { case (l, i) =>
-      max(when(col("lang") === l, expr(
-        s"(c_lb + 1L) * 1000000000L DIV (${langTotals(i)._2}L + $B)")))
-        .as(s"t$i")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val langs = grid.map(_._1).distinct
+    val total = grid.groupMapReduce(_._1)(_._3)(_ + _)
+    val counts = grid.map { case (l, b, c) => (l, b) -> c }.toMap
+    // model body PIVOTED: one row per bucket with the per-class add-one
+    // smoothed term (c_lb + 1) * 1e9 DIV (c_l + B), so an unseen
+    // (class, bucket) pair gets 1e9 DIV (c_l + B) — the scorer joins the
+    // corpus ONCE against this B-row broadcast instead of fanning every
+    // (doc, bucket) out by |classes| (the crossJoin formulation measured
+    // 12 s at 100k docs; this shape 5× fewer rows, no per-doc window)
+    val terms = (0L until B).map { b =>
+      Row.fromSeq(b +: langs.map { l =>
+        Math.multiplyExact(counts.getOrElse((l, b), 0L) + 1, 1000000000L) /
+          (total(l) + B)
+      }.toSeq)
     }
-    val fills = langs.indices.map(i => s"t$i" -> defTerm(i)).toMap[String, Any]
-    val bucketTerms = grid
-      .groupBy("bucket").agg(termCols.head, termCols.tail: _*)
-      .na.fill(fills)
+    val bucketTerms = docs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(terms: _*), StructType(
+        StructField("bucket", LongType) +:
+          langs.indices.map(i => StructField(s"t$i", LongType))))
     // scoring: tokens flow straight into the broadcast model join and
     // collapse to ONE partial-agg row per document before the only
     // exchange — Σ_tokens t_i ≡ Σ_buckets m·t_i exactly (integer terms),
@@ -207,8 +208,7 @@ object TextAnalysis {
     // (doc_id, lang) — lang is functionally dependent on doc_id — keeps
     // the label in the aggregate and removes that join outright.
     val scoreCols = langs.indices.map(i => sum(col(s"t$i")).as(s"s$i"))
-    val scored = toks.join(broadcast(bucketTerms), Seq("bucket"), "left")
-      .na.fill(fills)
+    val scored = toks.join(broadcast(bucketTerms), Seq("bucket"))
       .groupBy("doc_id", "lang").agg(scoreCols.head, scoreCols.tail: _*)
     // argmax, ties to the lexicographically first class (same contract as
     // the previous row_number(score DESC, lang ASC) formulation)
@@ -235,7 +235,8 @@ object TextAnalysis {
     * verifying the inter-stage contracts. Shuffle shape: per-row filter,
     * one gram-keyed exchange (shared by the first-occurrence aggregate
     * and its join), one broadcastable model, one source-keyed window —
-    * nothing quadratic, nothing driver-side but the 5-row model head. */
+    * nothing quadratic, nothing driver-side but the model's
+    * ≤ |classes| × 512-row count grid. */
   def pipeline3(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stopArr = stop("en").map(w => s"'$w'").mkString("array(", ", ", ")")
@@ -597,6 +598,13 @@ object TextAnalysis {
     * risk cross-engine ULP drift. Typical text scores high, gibberish
     * scores near 1/V — same decision boundary as the log form.
     *
+    * Contract: the model is trained on `docs` and scores `docs` — the
+    * training corpus IS the scoring corpus by construction (one
+    * argument), so every scored bigram is in the model and the scoring
+    * join can be an inner join. To score other documents against a
+    * fixed model, restore the smoothing left join (c = 0 for an unseen
+    * bigram) first.
+    *
     * Scale shape: the model is two count aggregates; scoring is one
     * bigram explode + one hash join against the model + a per-doc exact
     * decimal mean. Everything shuffles on hash keys; nothing is
@@ -619,10 +627,10 @@ object TextAnalysis {
           "i -> struct(ws[i - 1] AS w1, ws[i] AS w2))")).as("bg"))
       .select(col(idCol), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     // the bigram count table is consumed twice — as the scoring join side
-    // and re-aggregated into the head counts c(w1·) = Σ_w2 c(w1,w2) — so
-    // it materializes once instead of re-deriving both from the corpus
-    val model = graft.ops.CacheBook.persisted(
-      bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c")))
+    // and re-aggregated into the head counts c(w1·) = Σ_w2 c(w1,w2). The
+    // join side carries a not-null filter on w2 that the head side lacks,
+    // so the two share no exchange and the count runs once per consumer.
+    val model = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
     val heads = model.groupBy(col("w1").as("hw"))
       .agg(sum(col("c")).as("cw"))
     // head counts attach to the MODEL rows (a model-sized join), so the

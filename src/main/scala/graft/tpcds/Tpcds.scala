@@ -884,18 +884,17 @@ object Tpcds {
       .agg(countDistinct(col("d_year") * 12 + col("d_moy")).as("months"))
       .filter(col("months") >= 4).select("f_item")
     // the customer-grain spend aggregate feeds TWO consumers (the max
-    // cutoff and the best-customer filter) — unpersisted, its whole
-    // fact-scan subplan duplicated, so the query aggregated store_sales
-    // THREE times. Persist the small (≤ |customers|) aggregate once
-    // (r14, guide §2.3/§5 — same CacheBook pattern as ds_q14/q75); the
-    // frequent-items leg stays an independent, concurrently-scheduled
-    // pass (a shared grouping-sets single pass was tried and measured
-    // SLOWER at sf0.1 and flat at sf1: it serializes the legs behind a
-    // fact-wide cached Expand — see OPTIMIZATION_r14.md).
-    val spend = graft.ops.CacheBook.persisted(
-      storeSales(s, dir)
-        .groupBy(col("ss_customer_sk").as("b_cust"))
-        .agg(dsum(col("ss_sales_price"), "spend")))
+    // cutoff and the best-customer filter). The filter side carries a
+    // not-null filter on the customer key, inferred from the semi-join,
+    // that the cutoff side lacks, so the two subtrees differ, exchange
+    // reuse cannot unify them, and the aggregate runs once per consumer.
+    // The frequent-items leg stays an independent, concurrently-scheduled
+    // pass (a shared grouping-sets single pass was measured SLOWER at
+    // sf0.1 and flat at sf1: it serializes the legs behind a fact-wide
+    // Expand — see OPTIMIZATION_r14.md).
+    val spend = storeSales(s, dir)
+      .groupBy(col("ss_customer_sk").as("b_cust"))
+      .agg(dsum(col("ss_sales_price"), "spend"))
     // Best-customer cutoff as a max-derived scalar (the reference q23 text's
     // own shape: `> 95/100.0 * (select max(csales) ...)`, q23.sql:20). An
     // exact percentile here would merge a value→count map into ONE final
@@ -904,14 +903,12 @@ object Tpcds {
     val cutoff = spend.agg((max(col("spend")) * 0.5).as("c"))
     val best = spend.join(broadcast(cutoff)).filter(col("spend") >= col("c"))
       .select("b_cust")
-    // both semi-join sides are dimension-bounded (≤ |items| / ≤ the
-    // best-spender subset of |customers|) → broadcast them instead of
-    // the former pair of sort-merge semi-joins, which exchanged + sorted
-    // catalog_sales TWICE (r14, guide §3.1)
+    // the frequent-items side is bounded by the item dimension, so it is
+    // broadcast; the best-customer side grows with the customers, so AQE
+    // picks its join strategy from the observed size
     catalogSales(s, dir)
       .join(broadcast(frequent), col("cs_item_sk") === col("f_item"), "left_semi")
-      .join(broadcast(best), col("cs_bill_customer_sk") === col("b_cust"),
-        "left_semi")
+      .join(best, col("cs_bill_customer_sk") === col("b_cust"), "left_semi")
       .agg(dsum(col("cs_ext_sales_price"), "total_sales"),
         count(lit(1)).as("n_sales"))
   }
@@ -1084,9 +1081,8 @@ object Tpcds {
     val perItem = storeSales(s, dir).filter(col("ss_store_sk") === 2)
       .groupBy(col("ss_item_sk").as("item_sk"))
       .agg(davg(col("ss_net_profit"), "rank_col"))
-      // consumed by both the asc and desc rankings (q49's shape): the
-      // differing window sorts defeat exchange reuse, so cache
-      .transform(graft.ops.CacheBook.persisted)
+    // consumed by both the asc and desc rankings: the second reads this
+    // aggregate's exchange as a ReusedExchange
     val asc10 = perItem.select(col("item_sk").as("b_item"),
       rank().over(Window.orderBy(asc("rank_col"), asc("item_sk"))).as("rnk"))
       .filter(col("rnk") <= 10)
@@ -1212,20 +1208,10 @@ object Tpcds {
     * their web-channel growth (q74/q11 four-way self-join shape on the
     * per-(customer, year, channel) totals). */
   def q74(s: SparkSession, dir: String): DataFrame = {
-    // one cached (customer, year) pass per channel fact — the q4/q11
-    // yearTotals4 shape — instead of scanning each fact once per year
-    def yearTotals(f: DataFrame, dateK: String, custK: String,
-        rev: String): DataFrame =
-      f.join(broadcast(dateDim(s).filter(col("d_year").isin(1999, 2000))
-          .select("d_date_sk", "d_year")),
-          col(dateK) === col("d_date_sk"))
-        .groupBy(col(custK).as("cust"), col("d_year"))
-        .agg(dsum(col(rev), "tot"))
-        .transform(graft.ops.CacheBook.persisted)
-    val ssy = yearTotals(storeSales(s, dir), "ss_sold_date_sk",
-      "ss_customer_sk", "ss_net_profit")
-    val wsy = yearTotals(webSales(s, dir), "ws_sold_date_sk",
-      "ws_bill_customer_sk", "ws_ext_sales_price")
+    val ssy = yearTotals(s, (1999, 2000), storeSales(s, dir),
+      "ss_sold_date_sk", "ss_customer_sk", col("ss_net_profit"))
+    val wsy = yearTotals(s, (1999, 2000), webSales(s, dir),
+      "ws_sold_date_sk", "ws_bill_customer_sk", col("ws_ext_sales_price"))
     val s1 = slice(ssy, 1999, "s1", positive = true)
     val s2 = slice(ssy, 2000, "s2", positive = false)
     val w1 = slice(wsy, 1999, "w1", positive = true)
@@ -1468,9 +1454,8 @@ object Tpcds {
       .filter(col("sold_qty") > 0 && col("sold_amt") > 0)
       .withColumn("qty_ratio", col("ret_qty") / col("sold_qty"))
       .withColumn("amt_ratio", col("ret_amt") / col("sold_amt"))
-      // consumed twice (quantity + amount rankings): cache the aggregate
-      // so the fact scan + returns join run once, like q14/q24/q39/q75
-      .transform(graft.ops.CacheBook.persisted)
+    // consumed by both rankings: the second reads this aggregate's
+    // exchange as a ReusedExchange
     val byQty = perItem.withColumn("rnk",
       rank().over(Window.orderBy(desc("qty_ratio"), asc("item"))))
       .filter(col("rnk") <= 10).withColumn("which", lit("quantity"))
@@ -1511,22 +1496,22 @@ object Tpcds {
   /** q1: customers whose store returns exceed 1.2× their store's average —
     * CTE reuse + per-store correlated scalar average (q01.sql shape). The
     * correlated subquery becomes one extra aggregation over the SAME
-    * customer_total_return frame, joined back broadcast (store-count rows),
-    * so the fact shuffles once. */
+    * customer_total_return frame, joined back broadcast (store-count
+    * rows). */
   def q1(s: SparkSession, dir: String): DataFrame = {
     // the (customer, store) return totals feed TWO consumers (the
-    // per-store threshold and the filtered rows) and exchange reuse does
-    // not unify them (column pruning makes the subtrees canonically
-    // different), so the returns fact was scanned + aggregated twice —
-    // persist the small per-customer aggregate once (r14, guide §2.3/§5,
-    // the ds_q23/q75 CacheBook pattern)
-    val ctr = graft.ops.CacheBook.persisted(storeReturns(s, dir)
+    // per-store threshold and the filtered rows). The filtered side
+    // carries a not-null filter on the customer key, inferred from the
+    // customer join, that the threshold side lacks, so exchange reuse
+    // cannot unify them and the aggregate runs once per consumer (the
+    // final plan reuses only the date broadcast)
+    val ctr = storeReturns(s, dir)
       .join(broadcast(dateDim(s).filter(col("d_year") === 1998)),
         col("sr_returned_date_sk") === col("d_date_sk"))
       .groupBy(col("sr_customer_sk"), col("sr_store_sk"))
       .agg(dsum(col("sr_return_amt"), "ctr_total_return"))
       .select(col("sr_customer_sk").as("ctr_customer_sk"),
-        col("sr_store_sk").as("ctr_store_sk"), col("ctr_total_return")))
+        col("sr_store_sk").as("ctr_store_sk"), col("ctr_total_return"))
     val perStore = ctr.groupBy(col("ctr_store_sk").as("a_store_sk"))
       .agg((davg(col("ctr_total_return")) * 1.2).as("return_threshold"))
     ctr.join(broadcast(perStore), col("ctr_store_sk") === col("a_store_sk"))
@@ -1578,19 +1563,21 @@ object Tpcds {
     * per-item window average (q32.sql correlated-avg shape); the correlated
     * average is one aggregation of the shared date-filtered frame. */
   def q32(s: SparkSession, dir: String): DataFrame = {
-    // the item filter moves BELOW both consumers (r14, guide §2.3): the
-    // per-item average is grouped by item, so averaging only the
-    // filtered manufacturer's items over the same date slice is
-    // value-identical, and the twice-consumed stream shrinks from the
-    // whole date slice to ~1/|manufacturers| of it — small enough to
-    // persist, so the fact is scanned once instead of twice
-    val cs = graft.ops.CacheBook.persisted(catalogSales(s, dir)
+    // the item filter moves BELOW both consumers (r14): the per-item
+    // average is grouped by item, so averaging only the filtered
+    // manufacturer's items over the same date slice is value-identical,
+    // and the twice-consumed stream shrinks from the whole date slice to
+    // ~1/|manufacturers| of it. One consumer aggregates that stream and
+    // the other joins its rows, so they share no exchange: the stream is
+    // computed once per consumer (the final plan reuses only the
+    // dimension broadcasts).
+    val cs = catalogSales(s, dir)
       .join(broadcast(dateDim(s).filter(col("d_date")
           .between(Tables.d("1998-03-01"), Tables.d("1998-05-30")))),
         col("cs_sold_date_sk") === col("d_date_sk"))
       .join(broadcast(item(s, dir).filter(col("i_manufact_id") === 7)),
         col("cs_item_sk") === col("i_item_sk"))
-      .select("cs_item_sk", "cs_ext_discount_amt"))
+      .select("cs_item_sk", "cs_ext_discount_amt")
     val perItem = cs.groupBy(col("cs_item_sk").as("a_item_sk"))
       .agg((davg(col("cs_ext_discount_amt")) * 1.3).as("discount_threshold"))
     cs.join(perItem, col("cs_item_sk") === col("a_item_sk"))
@@ -1791,9 +1778,8 @@ object Tpcds {
         sqrt((col("n") * col("ssq") - col("s") * col("s")).cast("double") /
           (col("n") * (col("n") - 1)).cast("double")) / col("mean"))
       .filter(col("cov") > 0.5)
-      // consumed twice (March/April sides of the self-join): without this
-      // the inventory scan + groupBy runs twice, like q14/q24/q75
-      .transform(graft.ops.CacheBook.persisted)
+    // the March and April sides each push their month filter below this
+    // aggregate, so each side aggregates only its own month
     val m1 = monthly.filter(col("d_moy") === 3).select(
       col("inv_warehouse_sk").as("w_warehouse_sk"),
       col("inv_item_sk").as("i_item_sk"),
@@ -2193,11 +2179,10 @@ object Tpcds {
       .unionAll(chan(webSales(s, dir), webReturns(s, dir),
         "ws_sold_date_sk", "ws_item_sk", "ws_quantity", "ws_order_number",
         "wr_order_number", "wr_item_sk", "wr_return_quantity"))
-    // tiny (year × brand) frame consumed twice (current + prior year) —
-    // cache it so the three-channel union underneath runs once, not twice
+    // the current and prior-year sides each push their year filter below
+    // this aggregate, so each aggregates only its own year of the union
     val tot = all.groupBy("d_year", "i_brand_id")
       .agg(decSum(col("net_qty")).cast("double").as("sales_cnt"))
-      .transform(graft.ops.CacheBook.persisted)
     val curr = tot.filter(col("d_year") === 1999)
       .select(col("i_brand_id").as("b"), col("sales_cnt").as("curr_cnt"))
     val prev = tot.filter(col("d_year") === 1998)
@@ -2527,14 +2512,14 @@ object Tpcds {
 
   /** q92: q32's excess-discount template on the web channel. */
   def q92(s: SparkSession, dir: String): DataFrame = {
-    // same item-filter pushdown + small shared persist as q32 (r14)
-    val ws = graft.ops.CacheBook.persisted(webSales(s, dir)
+    // same item-filter pushdown as q32
+    val ws = webSales(s, dir)
       .join(broadcast(dateDim(s).filter(col("d_date")
           .between(Tables.d("1998-03-01"), Tables.d("1998-05-30")))),
         col("ws_sold_date_sk") === col("d_date_sk"))
       .join(broadcast(item(s, dir).filter(col("i_manufact_id") === 9)),
         col("ws_item_sk") === col("i_item_sk"))
-      .select("ws_item_sk", "ws_ext_discount_amt"))
+      .select("ws_item_sk", "ws_ext_discount_amt")
     val perItem = ws.groupBy(col("ws_item_sk").as("a_item_sk"))
       .agg((davg(col("ws_ext_discount_amt")) * 1.3).as("discount_threshold"))
     ws.join(perItem, col("ws_item_sk") === col("a_item_sk"))
@@ -2621,17 +2606,18 @@ object Tpcds {
     * (q1's correlated-average shape keyed by the customer's state). */
   private def stateReturners(s: SparkSession, dir: String, ret: DataFrame,
       custK: String, amtK: String): DataFrame = {
-    // persisted for the same reason as q1's ctr: two consumers, no
-    // exchange reuse, so the returns⋈customer⋈address aggregation ran
-    // twice (r14)
-    val ctr = graft.ops.CacheBook.persisted(ret
+    // two consumers of one aggregate, as in q1's ctr; here the customer
+    // join sits inside the shared subtree, so both consumers are the same
+    // subtree and the second reads the first's aggregate exchange as a
+    // ReusedExchange: the returns⋈customer⋈address aggregation runs once
+    val ctr = ret
       .join(customerDim(s, dir), col(custK) === col("c_customer_sk"))
       .join(customerAddress(s, dir),
         col("c_current_addr_sk") === col("ca_address_sk"))
       .groupBy(col(custK), col("ca_state"))
       .agg(dsum(col(amtK), "ctr_total_return"))
       .select(col(custK).as("ctr_customer_sk"),
-        col("ca_state").as("ctr_state"), col("ctr_total_return")))
+        col("ca_state").as("ctr_state"), col("ctr_total_return"))
     val perState = ctr.groupBy(col("ctr_state").as("a_state"))
       .agg((davg(col("ctr_total_return")) * 1.2).as("return_threshold"))
     ctr.join(broadcast(perState), col("ctr_state") === col("a_state"))
@@ -2776,18 +2762,17 @@ object Tpcds {
       .orderBy("cd_gender", "cd_marital_status", "cd_education_status")
   }
 
-  /** q4/q11 template: per-customer per-channel totals for BOTH years in
-    * one cached pass over the fact (the text's per-year CTEs would scan
-    * each channel twice); `slice` then carves the year views out of the
-    * cached frame. */
-  private def yearTotals4(s: SparkSession, f: DataFrame, dateK: String,
-      custK: String, rev: Column): DataFrame =
-    f.join(broadcast(dateDim(s).filter(col("d_year").isin(1998, 1999))
+  /** q4/q11/q74 template: per-customer per-channel totals for the two
+    * `years`; `slice` then carves the year views out of them. Each
+    * slice's year filter is pushed below this aggregate, so each slice
+    * aggregates only its own year of the fact. */
+  private def yearTotals(s: SparkSession, years: (Int, Int), f: DataFrame,
+      dateK: String, custK: String, rev: Column): DataFrame =
+    f.join(broadcast(dateDim(s).filter(col("d_year").isin(years._1, years._2))
         .select("d_date_sk", "d_year")),
         col(dateK) === col("d_date_sk"))
       .groupBy(col(custK).as("cust"), col("d_year"))
       .agg(dsum(rev, "tot"))
-      .transform(graft.ops.CacheBook.persisted)
 
   private def slice(yt: DataFrame, yr: Int, p: String,
       positive: Boolean): DataFrame = {
@@ -2799,12 +2784,12 @@ object Tpcds {
   /** q4: customers whose catalog growth outpaces BOTH store and web growth
     * — six per-channel year totals joined on the customer (q04.sql). */
   def q4(s: SparkSession, dir: String): DataFrame = {
-    val ssy = yearTotals4(s, storeSales(s, dir), "ss_sold_date_sk",
-      "ss_customer_sk", col("ss_ext_sales_price"))
-    val csy = yearTotals4(s, catalogSales(s, dir), "cs_sold_date_sk",
-      "cs_bill_customer_sk", col("cs_ext_sales_price"))
-    val wsy = yearTotals4(s, webSales(s, dir), "ws_sold_date_sk",
-      "ws_bill_customer_sk", col("ws_ext_sales_price"))
+    val ssy = yearTotals(s, (1998, 1999), storeSales(s, dir),
+      "ss_sold_date_sk", "ss_customer_sk", col("ss_ext_sales_price"))
+    val csy = yearTotals(s, (1998, 1999), catalogSales(s, dir),
+      "cs_sold_date_sk", "cs_bill_customer_sk", col("cs_ext_sales_price"))
+    val wsy = yearTotals(s, (1998, 1999), webSales(s, dir),
+      "ws_sold_date_sk", "ws_bill_customer_sk", col("ws_ext_sales_price"))
     val ss1 = slice(ssy, 1998, "ss1", positive = true)
     val ss2 = slice(ssy, 1999, "ss2", positive = false)
     val cs1 = slice(csy, 1998, "cs1", positive = true)
@@ -2826,10 +2811,11 @@ object Tpcds {
 
   /** q11: q74's store-vs-web growth on the list-minus-discount metric. */
   def q11(s: SparkSession, dir: String): DataFrame = {
-    val ssy = yearTotals4(s, storeSales(s, dir), "ss_sold_date_sk",
-      "ss_customer_sk", col("ss_list_price") - col("ss_coupon_amt"))
-    val wsy = yearTotals4(s, webSales(s, dir), "ws_sold_date_sk",
-      "ws_bill_customer_sk", col("ws_ext_sales_price"))
+    val ssy = yearTotals(s, (1998, 1999), storeSales(s, dir),
+      "ss_sold_date_sk", "ss_customer_sk",
+      col("ss_list_price") - col("ss_coupon_amt"))
+    val wsy = yearTotals(s, (1998, 1999), webSales(s, dir),
+      "ws_sold_date_sk", "ws_bill_customer_sk", col("ws_ext_sales_price"))
     val s1 = slice(ssy, 1998, "s1", positive = true)
     val s2 = slice(ssy, 1999, "s2", positive = false)
     val w1 = slice(wsy, 1998, "w1", positive = true)
@@ -2880,12 +2866,13 @@ object Tpcds {
       f.join(dd, col(dateK) === col("d_date_sk"))
         .select(lit(name).as("channel"), col(itemK).as("i"), col("d_year"),
           col("d_moy"), (col(price) * col(qty)).as("v"))
-    // ONE pass over the three channel facts → a small per-(channel, item,
-    // YEAR) DECIMAL pre-aggregate with December-report companion columns,
-    // cached and shared by all three consumers (cross-items, global
-    // average, December report). The text's formulation walks each fact
-    // three times; the former r12 shape kept a (channel, item, year,
-    // month) grain, which is 12× more groups than any consumer needs —
+    // a small per-(channel, item, YEAR) DECIMAL pre-aggregate over the
+    // three channel facts, with December-report companion columns, feeds
+    // all three consumers (cross-items, global average, December report).
+    // Each consumer prunes it to the columns it reads, so the final plan
+    // computes three pruned copies of it (exchange reuse shares only the
+    // dimension broadcasts). The former r12 shape kept a (channel, item,
+    // year, month) grain, which is 12× more groups than any consumer needs —
     // the December report reads conditional partials (svd_dec/cnt_dec)
     // instead of month rows. Decimal partials re-sum exactly and a
     // cnt_dec null (no December rows) is excluded exactly like the
@@ -2902,7 +2889,6 @@ object Tpcds {
       .agg(decSum(col("v")).as("svd"),
         decSum(when(col("d_moy") === 12, col("v"))).as("svd_dec"),
         sum(when(col("d_moy") === 12, 1L)).as("cnt_dec"))
-      .transform(graft.ops.CacheBook.persisted)
     val cross = g.groupBy("i")
       .agg(countDistinct(col("channel")).as("nch"))
       .filter(col("nch") === 3).select(col("i").as("cross_item"))
@@ -2941,9 +2927,9 @@ object Tpcds {
       .join(customerDim(s, dir), col("ss_customer_sk") === col("c_customer_sk"))
       .groupBy("c_last_name", "c_first_name", "s_store_name", "i_category")
       .agg(dsum(col("ss_sales_price"), "netpaid"))
-      // consumed twice — as the per-customer rows and as the scalar
-      // threshold — so the joined aggregate materializes once
-      .transform(graft.ops.CacheBook.persisted)
+    // consumed twice — as the per-customer rows and as the scalar
+    // threshold: the second reads this aggregate's exchange as a
+    // ReusedExchange
     val thr = ssales.agg((davg(col("netpaid")) * 0.05).as("thr"))
     ssales.crossJoin(broadcast(thr))
       .filter(col("netpaid") > col("thr"))
@@ -2991,19 +2977,16 @@ object Tpcds {
     val refunds = catalogReturns(s, dir)
       .groupBy(col("cr_item_sk"))
       .agg(dsum(col("cr_return_amount"), "refund"))
-    // both year-branches semi-filter through the same two derived sets —
-    // cache them so the excess-refund item list and the returned-ticket
-    // keys are computed once, not per branch (Verify and the benchmark
-    // clear the cache between queries)
+    // both year-branches semi-filter through the same two derived sets;
+    // the second branch reads their exchanges as ReusedExchanges
     val csUi = catalogSales(s, dir)
       .groupBy(col("cs_item_sk").as("u_item"))
       .agg(dsum(col("cs_ext_sales_price"), "sale"))
       .join(refunds, col("u_item") === col("cr_item_sk"))
       .filter(col("sale") > col("refund") * 2)
       .select("u_item")
-      .transform(graft.ops.CacheBook.persisted)
     val srKeys = storeReturns(s, dir)
-      .select("sr_ticket_number", "sr_item_sk").distinct().transform(graft.ops.CacheBook.persisted)
+      .select("sr_ticket_number", "sr_item_sk").distinct()
     def crossSales(yr: Int, p: String): DataFrame =
       storeSales(s, dir)
         .join(srKeys,

@@ -1,43 +1,29 @@
 package graft
 
-import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.CacheBook
 
-/** Cache hygiene (VERDICT r10 housekeeping): query builders that persist
-  * shared subplans register them in ops/CacheBook.scala, and the
-  * harnesses drain after consuming each query — so a long-lived session
-  * running the 99-query TPC-DS suite holds at most ONE query's cached
-  * aggregates at a time instead of accumulating all of them until LRU
-  * eviction thrashes the storage pool. */
+/** Cache hygiene: query builders persist nothing. A subplan that feeds
+  * two consumers is shared by exchange reuse where the plan allows it and
+  * computed once per consumer otherwise, so running a query leaves no
+  * cached frame behind for anyone to release — not in a 99-query suite in
+  * one long-lived session, and not across concurrent statement-server
+  * queries that share one SparkContext. Every builder here used to
+  * persist a shared subplan. */
 class CacheHygieneSpec extends AnyFunSuite {
   import TestSpark._
 
-  test("persisted frames release on drain") {
-    val df = CacheBook.persisted(spark.range(100).toDF("v"))
-    assert(df.count() == 100)
-    assert(df.storageLevel != StorageLevel.NONE)
-    assert(CacheBook.size >= 1)
-    CacheBook.drain()
-    assert(CacheBook.size == 0)
-    assert(df.storageLevel == StorageLevel.NONE)
-  }
+  private val formerPersisters = Seq("ds_q01", "ds_q04", "ds_q11", "ds_q14",
+    "ds_q23", "ds_q24", "ds_q30", "ds_q32", "ds_q39", "ds_q44", "ds_q49",
+    "ds_q64", "ds_q74", "ds_q75", "ds_q81", "ds_q92", "cte_reuse",
+    "text_hashed_classifier", "text_lm_score")
 
-  test("cached TPC-DS queries leave no persistent RDDs once drained") {
-    CacheBook.drain() // isolate from anything earlier in the JVM
-    spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    // q14 / q44 / q49 each persist a shared pre-aggregate; the memory
-    // high-water across the run stays bounded by one query's caches
-    // because the consumer drains between queries
-    for (name <- Seq("ds_q14", "ds_q44", "ds_q49")) {
+  test("query builders leave no persistent RDDs behind") {
+    for (name <- formerPersisters) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       // consume fully (some queries are legitimately empty at sf0.001)
-      SparkEntry.queries(name)(spark, sf).count()
-      assert(CacheBook.size >= 1, s"$name registered nothing")
-      CacheBook.drain()
-      assert(CacheBook.size == 0)
+      SparkEntry.queries(name)(spark, sf).collect()
+      val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+      assert(added.isEmpty, s"$name persisted RDDs $added")
     }
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    assert(leaked.isEmpty, s"persistent RDDs leaked: $leaked")
   }
 }

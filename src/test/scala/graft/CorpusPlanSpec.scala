@@ -115,7 +115,6 @@ class CorpusPlanSpec extends AnyFunSuite {
       s"pipeline3 regressed to a gram-keyed window: ${windows(p)}")
     assert(sortAggs(p).isEmpty,
       s"pipeline3's election planned a SortAggregate: ${sortAggs(p)}")
-    graft.ops.CacheBook.drain()
   }
 
   test("lmScore builds bigrams without any window") {
@@ -123,7 +122,6 @@ class CorpusPlanSpec extends AnyFunSuite {
       Tables(spark, sf, "documents"), "doc_id", "text")
     assert(windows(plan(df)).isEmpty,
       "lmScore regressed to the lead()-window bigram formulation")
-    graft.ops.CacheBook.drain()
   }
 
   test("rewritten operators still produce their exact fixture results") {
@@ -142,7 +140,6 @@ class CorpusPlanSpec extends AnyFunSuite {
     }
     val cls = TextAnalysis.hashedClassifier(spark, sf).collect()
     assert(cls.length == nDocs && cls.forall(_.getLong(3) > 0L))
-    graft.ops.CacheBook.drain()
     spark.catalog.clearCache()
   }
 }

@@ -1,6 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExecSubqueryExpression, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 /** TPC-DS slice sanity: derivation invariants + canonical plan shapes.
@@ -131,11 +136,53 @@ class TpcdsSpec extends AnyFunSuite {
     assert(plan.contains("max(spend"), "max-derived scalar cutoff")
   }
 
-  test("q14's shared pre-aggregate is cached (one pass over the channels)") {
-    val plan = Tpcds.q14(spark, sf).queryExecution.optimizedPlan.toString
-    assert(plan.contains("InMemoryRelation"),
-      "cross-items/average/report reuse the cached per-item partials")
+  /** Every node of the final adaptive plan (stages and subqueries
+    * included), read after the query has run. */
+  private def finalPlan(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case other => other.children
+      }
+      p +: (kids ++ p.expressions.flatMap(_.collect {
+        case e: ExecSubqueryExpression => e.plan
+      })).flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
   }
+
+  /** The query reads no cache; returns the exchanges its final plan
+    * reads a second time through a ReusedExchange. */
+  private def reusedExchanges(df: DataFrame): Seq[Exchange] = {
+    val nodes = finalPlan(df)
+    assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      "a subtree is read from a cache, not shared by the plan")
+    nodes.collect { case r: ReusedExchangeExec => r.child }
+  }
+
+  // the formerly persisted aggregate is one subtree for both consumers,
+  // so the second reads its shuffle again instead of recomputing it
+  for (name <- Seq("ds_q24", "ds_q30", "ds_q44", "ds_q49", "ds_q64",
+      "ds_q81", "cte_reuse"))
+    test(s"$name shares its twice-consumed aggregate through a reused shuffle") {
+      val reused = reusedExchanges(SparkEntry.queries(name)(spark, sf))
+      assert(reused.exists(_.isInstanceOf[ShuffleExchangeExec]),
+        s"the shared aggregate is computed twice; reused only $reused")
+    }
+
+  // here the consumers of the formerly persisted subtree differ (an
+  // inferred not-null filter, a filter pushed below the aggregate, or
+  // column pruning), so only the dimension broadcasts are shared; q14,
+  // q32 and q92 filter to nothing at sf0.001, where AQE prunes the plan
+  for ((name, dir) <- Seq("ds_q01", "ds_q04", "ds_q11", "ds_q74").map(_ -> sf) ++
+      Seq("ds_q14", "ds_q32", "ds_q92").map(_ -> sf01))
+    test(s"$name reads no cache and reuses its dimension broadcasts") {
+      val reused = reusedExchanges(SparkEntry.queries(name)(spark, dir))
+      assert(reused.exists(_.isInstanceOf[BroadcastExchangeExec]),
+        s"no broadcast is reused: $reused")
+    }
 
   test("rollup 'ALL' labels come from grouping(), not NULL-coalescing (r13)") {
     import spark.implicits._

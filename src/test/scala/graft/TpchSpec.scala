@@ -13,6 +13,8 @@ object TestSpark {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
+  /** The next fixture scale, beside `sf`. */
+  val sf01: String = new java.io.File(sf).getParent + "/sf0.01"
 }
 
 class TpchSpec extends AnyFunSuite {
