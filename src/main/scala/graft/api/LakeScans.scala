@@ -29,7 +29,8 @@ object LakeScans {
     * SQL-text surface over the engine's lake append writers
     * (ops/DeltaLake.insert, ops/IcebergTable.insertAppend). Positional
     * insert with coercion to the table's column types, the same contract
-    * as managed-table INSERT; returns the landed row count. Must run
+    * as managed-table INSERT; returns the landed row count (the rows the
+    * writer staged, so a concurrent commit cannot skew it). Must run
     * BEFORE the FROM-position scan rewrite or the target spelling would
     * be swallowed as a read. */
   def dispatchInsert(ses: SqlSession, text: String)
@@ -37,11 +38,10 @@ object LakeScans {
     case InsertPat(kind, path, query) =>
       import org.apache.spark.sql.functions.col
       val spark = ses.spark
-      def read() = kind.toLowerCase match {
-        case "delta" => graft.ops.DeltaLake.read(spark, path)
-        case _ => graft.ops.IcebergTable.read(spark, path)
-      }
-      val target = read().schema
+      val delta = kind.equalsIgnoreCase("delta")
+      val target =
+        if (delta) graft.ops.DeltaLake.read(spark, path).schema
+        else graft.ops.IcebergTable.read(spark, path).schema
       val src = ses.sql(query)
       if (src.schema.length != target.length)
         throw new IllegalArgumentException(
@@ -50,12 +50,11 @@ object LakeScans {
       val aligned = src.select(src.columns.zip(target.fields).map {
         case (c, f) => col(c).cast(f.dataType).as(f.name)
       }.toIndexedSeq: _*)
-      val before = read().count()
-      kind.toLowerCase match {
-        case "delta" => graft.ops.DeltaLake.insert(spark, path, aligned)
-        case _ => graft.ops.IcebergTable.insertAppend(spark, path, aligned)
-      }
-      Some(DdlStatements.rowsResult(spark, read().count() - before))
+      // the writer counts the rows it staged: no scan of the target
+      val (_, rows) =
+        if (delta) graft.ops.DeltaLake.append(spark, path, aligned, None).get
+        else graft.ops.IcebergTable.append(spark, path, aligned, None).get
+      Some(DdlStatements.rowsResult(spark, rows))
     case _ => None
   }
 

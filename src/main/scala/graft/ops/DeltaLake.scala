@@ -38,6 +38,22 @@ final case class MergeStats(updated: Long, deleted: Long, inserted: Long)
   * recorded) seed the snapshot and only later JSON commits replay, so
   * the reader survives log retention and replay stays O(commits since
   * checkpoint).
+  *
+  * Writers (INSERT, DELETE, UPDATE, MERGE, OPTIMIZE, RESTORE) share one
+  * path, the contract of the reference's TableWriter -> TableFinish:
+  *
+  *  - data files land through [[LakeFiles.stage]] under names no other
+  *    writer can choose (`part-<version>-<uuid>.parquet`), so a writer
+  *    never overwrites files another writer has staged;
+  *  - the commit is put-if-absent: version = the version the writer's
+  *    snapshot was read at, plus 1, published by [[LakeFiles.publishNew]].
+  *    A writer that lost the race for that version raises
+  *    `ConcurrentModificationException`; the winner's commit stays
+  *    byte-identical, and the loser's staged files are unreferenced
+  *    (VACUUM reclaims them);
+  *  - every writer's commit that lands on version 9, 19, ... writes a
+  *    checkpoint, so replay stays O(10) whichever statements the table
+  *    receives.
   */
 object DeltaLake {
 
@@ -46,6 +62,11 @@ object DeltaLake {
   private final case class AddFile(path: String,
       partitionValues: Map[String, String],
       dv: Option[DeletionVectors.Descriptor] = None)
+
+  /** The table as of `version`, the last commit (or checkpoint) replay
+    * applied: a writer that read it commits `version + 1`. */
+  private final case class Snapshot(version: Long, schema: StructType,
+      partCols: Seq[String], files: Seq[AddFile], txns: Map[String, Long])
 
   /** Reader feature set (Delta spec "Protocol Evolution"): versions 1-2
     * outright (plain replay + column mapping `name`), version 3 when
@@ -97,6 +118,38 @@ object DeltaLake {
         Option(d.get("cardinality")).map(_.asLong).getOrElse(-1L))
     }
 
+  /** A JSON object's fields as strings (JSON null stays null). */
+  private def stringMap(o: com.fasterxml.jackson.databind.JsonNode)
+      : Map[String, String] = {
+    val b = Map.newBuilder[String, String]
+    o.properties().forEach(e =>
+      b += (e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText)))
+    b.result()
+  }
+
+  /** The one parser of an `add` action. */
+  private def parseAdd(a: com.fasterxml.jackson.databind.JsonNode): AddFile =
+    AddFile(a.get("path").asText,
+      Option(a.get("partitionValues")).map(stringMap).getOrElse(Map.empty),
+      parseDv(a))
+
+  private def isDataChange(a: com.fasterxml.jackson.databind.JsonNode) =
+    !a.has("dataChange") || a.get("dataChange").asBoolean
+
+  /** The actions of JSON commit `v`, which must survive retention. */
+  private def commitActions(logDir: File, v: Long, what: String)
+      : Iterator[com.fasterxml.jackson.databind.JsonNode] = {
+    val f = new File(logDir, f"$v%020d.json")
+    require(f.isFile, s"Delta commit $v is gone (log retention?) — " +
+      s"cannot $what")
+    new String(java.nio.file.Files.readAllBytes(f.toPath), UTF_8)
+      .linesIterator.filter(_.trim.nonEmpty).map(mapper.readTree)
+  }
+
+  /** A partition value as a typed literal column named after `f`. */
+  private def partLit(f: StructField, v: String) =
+    (if (v == null) lit(null) else lit(v)).cast(f.dataType).as(f.name)
+
   /** Writers refuse tables whose snapshot carries deletion vectors:
     * rewriting or checkpointing a DV'd file without honoring its vector
     * would resurrect deleted rows. Read support only. */
@@ -114,7 +167,7 @@ object DeltaLake {
     if (p.startsWith("/")) new File(p) else new File(dir, p)
   }
 
-  /** Replay `_delta_log` and return (schema, partitionColumns, activeFiles).
+  /** Replay `_delta_log` up to `maxVersion` into a [[Snapshot]].
     * When `_last_checkpoint` exists, the snapshot seeds from the
     * checkpoint parquet (one row per action, nullable `add` / `remove` /
     * `metaData` / `protocol` struct columns — the protocol's compaction
@@ -122,8 +175,7 @@ object DeltaLake {
     * replay on top: the reader stays correct after log retention deletes
     * old commits, and replay cost is O(commits since checkpoint). */
   private def replay(s: SparkSession, tableDir: File,
-      maxVersion: Long = Long.MaxValue)
-      : (StructType, Seq[String], Seq[AddFile], Map[String, Long]) = {
+      maxVersion: Long = Long.MaxValue): Snapshot = {
     val logDir = new File(tableDir, "_delta_log")
     var schema: StructType = null
     var partCols: Seq[String] = Seq.empty
@@ -144,22 +196,17 @@ object DeltaLake {
           s"time travel to $maxVersion predates checkpoint $v and the " +
             s"JSON commits 0..$maxVersion are no longer all present")
         -1L
-      } else replayCheckpoint(s, logDir, n, v, schema = st => schema = st,
+      } else replayCheckpoint(logDir, n, v, schema = st => schema = st,
         parts0 = pc => partCols = pc, active, txns)
     }
     val commits = Option(logDir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.matches("\\d{20}\\.json"))
-      .filter { f =>
-        val fv = f.getName.stripSuffix(".json").toLong
-        fv > ckptVersion && fv <= maxVersion
-      }
-      .sortBy(_.getName)
+      .map(_.getName.stripSuffix(".json").toLong)
+      .filter(fv => fv > ckptVersion && fv <= maxVersion)
+      .sorted
     require(ckptVersion >= 0 || commits.nonEmpty,
       s"no _delta_log commits under $tableDir")
-    for (commit <- commits;
-         line <- new String(java.nio.file.Files.readAllBytes(
-           commit.toPath), UTF_8).split('\n') if line.trim.nonEmpty) {
-      val n = mapper.readTree(line)
+    for (v <- commits; n <- commitActions(logDir, v, "replay")) {
       if (n.has("protocol")) {
         val p = n.get("protocol")
         val feats = Option(p.get("readerFeatures")).toSeq
@@ -167,33 +214,15 @@ object DeltaLake {
         checkProtocol(p.get("minReaderVersion").asInt, feats)
       } else if (n.has("metaData")) {
         val m = n.get("metaData")
-        Option(m.get("configuration")).foreach { c =>
-          val it = c.fields()
-          val b = Map.newBuilder[String, String]
-          while (it.hasNext) {
-            val e = it.next()
-            b += (e.getKey -> e.getValue.asText)
-          }
-          checkTableConfig(b.result())
-        }
+        Option(m.get("configuration")).foreach(c =>
+          checkTableConfig(stringMap(c)))
         schema = DataType.fromJson(m.get("schemaString").asText)
           .asInstanceOf[StructType]
         partCols = (0 until m.get("partitionColumns").size())
           .map(i => m.get("partitionColumns").get(i).asText)
       } else if (n.has("add")) {
-        val a = n.get("add")
-        val pv = Option(a.get("partitionValues")).map { o =>
-          val it = o.fields()
-          val b = Map.newBuilder[String, String]
-          while (it.hasNext) {
-            val e = it.next()
-            b += (e.getKey -> (if (e.getValue.isNull) null
-            else e.getValue.asText))
-          }
-          b.result()
-        }.getOrElse(Map.empty)
-        active.put(a.get("path").asText,
-          AddFile(a.get("path").asText, pv, parseDv(a)))
+        val a = parseAdd(n.get("add"))
+        active.put(a.path, a)
       } else if (n.has("remove")) {
         active.remove(n.get("remove").get("path").asText)
       } else if (n.has("txn")) {
@@ -206,82 +235,91 @@ object DeltaLake {
       } // commitInfo: no table-state effect
     }
     require(schema != null, s"no metaData action in $tableDir/_delta_log")
-    (schema, partCols, active.values.toSeq, txns.toMap)
+    Snapshot(commits.lastOption.getOrElse(ckptVersion), schema, partCols,
+      active.values.toSeq, txns.toMap)
   }
 
-  /** Seed the snapshot from `<v>.checkpoint[.i.N].parquet`; returns v. */
-  private def replayCheckpoint(s: SparkSession, logDir: File,
+  /** Seed the snapshot from `<v>.checkpoint[.i.N].parquet`; returns v.
+    * The checkpoint is read on the driver with the parquet reader — its
+    * rows all end up in the driver's snapshot anyway, and a Spark job per
+    * replay would cost more than the JSON commits the checkpoint saves. */
+  private def replayCheckpoint(logDir: File,
       n: com.fasterxml.jackson.databind.JsonNode, v: Long,
       schema: StructType => Unit, parts0: Seq[String] => Unit,
       active: scala.collection.mutable.LinkedHashMap[String, AddFile],
       txns: scala.collection.mutable.HashMap[String, Long])
       : Long = {
-    {
-      // multi-part checkpoints name N files <v>.checkpoint.<i>.<N>.parquet
-      // and record "parts"; a single-part one is <v>.checkpoint.parquet
-      val parts = Option(n.get("parts")).map(_.asInt).getOrElse(0)
-      val ckptFiles =
-        if (parts <= 0) Seq(new File(logDir, f"$v%020d.checkpoint.parquet"))
-        else (1 to parts).map(i =>
-          new File(logDir, f"$v%020d.checkpoint.$i%010d.$parts%010d.parquet"))
-      ckptFiles.foreach(f =>
-        require(f.exists(), s"_last_checkpoint names missing $f"))
-      val rows = s.read.parquet(ckptFiles.map(_.getPath): _*).collect()
-      val cols = rows.headOption.map(_.schema.fieldNames.toSet)
-        .getOrElse(Set.empty)
-      rows.foreach { r =>
-        if (cols("protocol") && !r.isNullAt(r.fieldIndex("protocol"))) {
-          val p = r.getStruct(r.fieldIndex("protocol"))
-          val feats =
-            if (!p.schema.fieldNames.contains("readerFeatures")) Seq.empty
-            else Option(p.getAs[scala.collection.Seq[String]](
-              "readerFeatures")).map(_.toSeq).getOrElse(Seq.empty)
-          checkProtocol(p.getAs[Int]("minReaderVersion"), feats)
-        }
-        if (cols("metaData") && !r.isNullAt(r.fieldIndex("metaData"))) {
-          val m = r.getStruct(r.fieldIndex("metaData"))
-          if (m.schema.fieldNames.contains("configuration"))
-            checkTableConfig(Option(m.getAs[
-              scala.collection.Map[String, String]]("configuration"))
-              .map(_.toMap).getOrElse(Map.empty))
-          schema(DataType.fromJson(
-            m.getAs[String]("schemaString")).asInstanceOf[StructType])
-          parts0(m.getAs[scala.collection.Seq[String]](
-            "partitionColumns").toSeq)
-        }
-        if (cols("add") && !r.isNullAt(r.fieldIndex("add"))) {
-          val a = r.getStruct(r.fieldIndex("add"))
-          val pv = Option(a.getAs[scala.collection.Map[String, String]](
-            "partitionValues")).map(_.toMap).getOrElse(Map.empty)
-          // real checkpoints of DV tables carry the descriptor struct
-          val dv = if (!a.schema.fieldNames.contains("deletionVector") ||
-              a.isNullAt(a.fieldIndex("deletionVector"))) None
-          else {
-            val d = a.getStruct(a.fieldIndex("deletionVector"))
-            Some(DeletionVectors.Descriptor(
-              d.getAs[String]("storageType"),
-              d.getAs[String]("pathOrInlineDv"),
-              Option(d.getAs[Any]("offset")).map(
-                _.asInstanceOf[Number].intValue).getOrElse(1),
-              d.getAs[Number]("sizeInBytes").intValue,
-              Option(d.getAs[Any]("cardinality")).map(
-                _.asInstanceOf[Number].longValue).getOrElse(-1L)))
+    import org.apache.parquet.example.data.Group
+    // multi-part checkpoints name N files <v>.checkpoint.<i>.<N>.parquet
+    // and record "parts"; a single-part one is <v>.checkpoint.parquet
+    val parts = Option(n.get("parts")).map(_.asInt).getOrElse(0)
+    val ckptFiles =
+      if (parts <= 0) Seq(new File(logDir, f"$v%020d.checkpoint.parquet"))
+      else (1 to parts).map(i =>
+        new File(logDir, f"$v%020d.checkpoint.$i%010d.$parts%010d.parquet"))
+    ckptFiles.foreach(f =>
+      require(f.exists(), s"_last_checkpoint names missing $f"))
+    // null struct columns and absent fields both read as None
+    def sub(g: Group, f: String): Option[Group] =
+      if (g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0)
+        Some(g.getGroup(f, 0))
+      else None
+    def str(g: Group, f: String): Option[String] =
+      if (g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0)
+        Some(g.getString(f, 0))
+      else None
+    def num(g: Group, f: String): Option[Long] =
+      if (!g.getType.containsField(f) || g.getFieldRepetitionCount(f) == 0)
+        None
+      else if (g.getType.getType(f).asPrimitiveType.getPrimitiveTypeName ==
+          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32)
+        Some(g.getInteger(f, 0).toLong)
+      else Some(g.getLong(f, 0))
+    // a LIST / MAP group holds one repeated field: list elements are its
+    // first field, map entries its key and value fields
+    def entries(g: Group, f: String): Seq[Group] = sub(g, f).toSeq
+      .flatMap(l => (0 until l.getFieldRepetitionCount(0)).map(l.getGroup(0, _)))
+    def strings(g: Group, f: String): Seq[String] =
+      entries(g, f).flatMap(e => str(e, e.getType.getFieldName(0)))
+    def mapOf(g: Group, f: String): Map[String, String] =
+      entries(g, f).map(e =>
+        e.getString(0, 0) -> str(e, e.getType.getFieldName(1)).orNull).toMap
+    ckptFiles.foreach { f =>
+      val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
+          LakeFiles.inputFile(f)) {
+        override protected def getReadSupport() =
+          new org.apache.parquet.hadoop.example.GroupReadSupport()
+      }.build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).foreach {
+        r =>
+          sub(r, "protocol").foreach(p => checkProtocol(
+            num(p, "minReaderVersion").get.toInt, strings(p, "readerFeatures")))
+          sub(r, "metaData").foreach { m =>
+            checkTableConfig(mapOf(m, "configuration"))
+            schema(DataType.fromJson(str(m, "schemaString").get)
+              .asInstanceOf[StructType])
+            parts0(strings(m, "partitionColumns"))
           }
-          active.put(a.getAs[String]("path"),
-            AddFile(a.getAs[String]("path"), pv, dv))
-        }
-        if (cols("remove") && !r.isNullAt(r.fieldIndex("remove")))
-          active.remove(r.getStruct(r.fieldIndex("remove"))
-            .getAs[String]("path"))
-        if (cols("txn") && !r.isNullAt(r.fieldIndex("txn"))) {
-          val t = r.getStruct(r.fieldIndex("txn"))
-          val app = t.getAs[String]("appId")
-          val ver = t.getAs[Long]("version")
-          if (txns.getOrElse(app, Long.MinValue) < ver) txns(app) = ver
-        }
-      }
-      v
+          sub(r, "add").foreach { a =>
+            // real checkpoints of DV tables carry the descriptor struct
+            val dv = sub(a, "deletionVector").map(d =>
+              DeletionVectors.Descriptor(str(d, "storageType").get,
+                str(d, "pathOrInlineDv").get,
+                num(d, "offset").getOrElse(1L).toInt,
+                num(d, "sizeInBytes").get.toInt,
+                num(d, "cardinality").getOrElse(-1L)))
+            val path = str(a, "path").get
+            active.put(path, AddFile(path, mapOf(a, "partitionValues"), dv))
+          }
+          sub(r, "remove").foreach(rm => active.remove(str(rm, "path").get))
+          sub(r, "txn").foreach { t =>
+            val app = str(t, "appId").get
+            val ver = num(t, "version").get
+            if (txns.getOrElse(app, Long.MinValue) < ver) txns(app) = ver
+          }
+      } finally reader.close()
     }
+    v
   }
 
   /** Read the current snapshot of a Delta table directory. */
@@ -296,8 +334,8 @@ object DeltaLake {
   def readVersion(s: SparkSession, tableDir: String, version: Long)
       : DataFrame = {
     val dir = new File(tableDir)
-    val (schema, partCols, files, _) = replay(s, dir, version)
-    scanFiles(s, dir, schema, partCols, files)
+    val snap = replay(s, dir, version)
+    scanFiles(s, dir, snap.schema, snap.partCols, snap.files)
   }
 
   /** Change-data-feed-style extraction (Delta's table_changes): every
@@ -316,39 +354,18 @@ object DeltaLake {
     val dir = new File(tableDir)
     val logDir = new File(dir, "_delta_log")
     val to = math.min(to0, currentVersion(tableDir))
-    val (schema, partCols, _, _) = replay(s, dir, to)
+    val Snapshot(_, schema, partCols, _, _) = replay(s, dir, to)
     require(!hasMapping(schema),
       "table_changes on column-mapped Delta tables unsupported")
     val frames = ((fromExclusive + 1) to to).flatMap { v =>
-      val f = new File(logDir, f"$v%020d.json")
-      require(f.isFile, s"Delta commit $v is gone (log retention?) — " +
-        "cannot compute the change range")
       val adds = Seq.newBuilder[AddFile]
       val removes = Seq.newBuilder[String]
-      new String(java.nio.file.Files.readAllBytes(f.toPath), UTF_8)
-        .linesIterator.filter(_.nonEmpty).foreach { line =>
-          val n = mapper.readTree(line)
-          if (n.has("add")) {
-            val a = n.get("add")
-            if (!a.has("dataChange") || a.get("dataChange").asBoolean) {
-              val pv = Option(a.get("partitionValues")).map { o =>
-                val it = o.fields()
-                val b = Map.newBuilder[String, String]
-                while (it.hasNext) {
-                  val e = it.next()
-                  b += (e.getKey -> (if (e.getValue.isNull) null
-                  else e.getValue.asText))
-                }
-                b.result()
-              }.getOrElse(Map.empty[String, String])
-              adds += AddFile(a.get("path").asText, pv, parseDv(a))
-            }
-          } else if (n.has("remove")) {
-            val r = n.get("remove")
-            if (!r.has("dataChange") || r.get("dataChange").asBoolean)
-              removes += r.get("path").asText
-          }
-        }
+      commitActions(logDir, v, "compute the change range").foreach { n =>
+        if (n.has("add") && isDataChange(n.get("add")))
+          adds += parseAdd(n.get("add"))
+        else if (n.has("remove") && isDataChange(n.get("remove")))
+          removes += n.get("remove").get("path").asText
+      }
       val (as, rs) = (adds.result(), removes.result())
       if (as.isEmpty && rs.isEmpty) None
       else {
@@ -358,7 +375,7 @@ object DeltaLake {
           else {
             // resolve the removed files' partition tuples from the
             // pre-commit snapshot
-            val prev = replay(s, dir, v - 1)._3.map(a => a.path -> a).toMap
+            val prev = replay(s, dir, v - 1).files.map(a => a.path -> a).toMap
             val oldRows = scanFiles(s, dir, schema, partCols,
               rs.flatMap(prev.get))
             newRows.exceptAll(oldRows)
@@ -380,9 +397,12 @@ object DeltaLake {
   /** Scan a specific file set with partition-literal injection: one
     * parquet read per distinct partition tuple (each group's files go to
     * a single multi-path scan; the injected literals keep the declared
-    * column order). */
+    * column order). `tags` adds each row's identity for the writers:
+    * `__fp` (canonical absolute file path) and `__ri` (row index in that
+    * file), from the parquet `_metadata` columns. */
   private def scanFiles(s: SparkSession, dir: File, schema: StructType,
-      partCols: Seq[String], files: Seq[AddFile]): DataFrame = {
+      partCols: Seq[String], files: Seq[AddFile],
+      tags: Boolean = false): DataFrame = {
     // under column mapping `name` mode, data files store PHYSICAL column
     // names and partitionValues key on them too — read physical, expose
     // logical
@@ -393,9 +413,14 @@ object DeltaLake {
       return s.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         StructType(schema.fields.map(f =>
-          StructField(f.name, f.dataType, f.nullable))))
-    def partLit(f: StructField, v: String) =
-      (if (v == null) lit(null) else lit(v)).cast(f.dataType).as(f.name)
+          StructField(f.name, f.dataType, f.nullable)) ++
+          (if (tags) Seq(StructField("__fp", StringType),
+            StructField("__ri", LongType)) else Nil)))
+    val tagCols =
+      if (!tags) Nil
+      else Seq(regexp_replace(regexp_replace(col("_metadata.file_path"),
+        "^file:", ""), "^/+", "/").as("__fp"),
+        col("_metadata.row_index").as("__ri"))
     def group(pv: Map[String, String], paths: Seq[String],
         dv: Option[DataFrame]): DataFrame = {
       val df0 = s.read.schema(dataSchema).parquet(paths: _*)
@@ -413,7 +438,7 @@ object DeltaLake {
           partLit(f, pv.getOrElse(physName(f), pv.getOrElse(f.name, null)))
         else col(physName(f)).as(f.name)
       }
-      df.select(cols.toIndexedSeq: _*)
+      df.select((cols.toIndexedSeq ++ tagCols): _*)
     }
     val (dvFiles, plain) = files.partition(_.dv.isDefined)
     val plainDf = plain.groupBy(_.partitionValues).map { case (pv, g) =>
@@ -431,7 +456,13 @@ object DeltaLake {
 
   /** Latest committed version of the table's log, -1 if none. */
   def currentVersion(tableDir: String): Long =
-    nextVersion(new File(tableDir, "_delta_log")) - 1
+    Option(new File(tableDir, "_delta_log").listFiles())
+      .getOrElse(Array.empty).map(_.getName).collect {
+        case n if n.matches("\\d{20}\\.json") =>
+          n.stripSuffix(".json").toLong
+        case n if n.matches("\\d{20}\\.checkpoint\\.parquet") =>
+          n.stripSuffix(".checkpoint.parquet").toLong
+      }.foldLeft(-1L)(math.max)
 
   /** Time travel by timestamp (Delta's TIMESTAMP AS OF): the snapshot at
     * the GREATEST commit whose timestamp is <= `tsMillis`. Commit
@@ -466,54 +497,57 @@ object DeltaLake {
       to: Long, ignoreChanges: Boolean = false): DataFrame = {
     val dir = new File(tableDir)
     val logDir = new File(dir, "_delta_log")
-    val (schema, partCols, _, _) = replay(s, dir, to)
+    val snap = replay(s, dir, to)
     val adds = Seq.newBuilder[AddFile]
     ((fromExclusive + 1) to to).foreach { v =>
-      val f = new File(logDir, f"$v%020d.json")
-      require(f.isFile, s"Delta commit $v is gone (log retention?) — " +
-        "cannot read the change range")
-      new String(java.nio.file.Files.readAllBytes(f.toPath), UTF_8)
-        .linesIterator.filter(_.nonEmpty).foreach { line =>
-          val n = mapper.readTree(line)
-          if (n.has("add")) {
-            val a = n.get("add")
-            val dc = !a.has("dataChange") || a.get("dataChange").asBoolean
-            if (dc) {
-              val pv = Option(a.get("partitionValues")).map { o =>
-                val it = o.fields()
-                val b = Map.newBuilder[String, String]
-                while (it.hasNext) {
-                  val e = it.next()
-                  b += (e.getKey -> (if (e.getValue.isNull) null
-                  else e.getValue.asText))
-                }
-                b.result()
-              }.getOrElse(Map.empty[String, String])
-              adds += AddFile(a.get("path").asText, pv, parseDv(a))
-            }
-          } else if (n.has("remove")) {
-            val r = n.get("remove")
-            val dc = !r.has("dataChange") || r.get("dataChange").asBoolean
-            require(!dc || ignoreChanges,
-              s"Delta commit $v rewrites rows (remove with dataChange) — " +
-                "not an append; set ignoreChanges=true to re-emit " +
-                "rewritten files")
-          }
-        }
+      commitActions(logDir, v, "read the change range").foreach { n =>
+        if (n.has("add") && isDataChange(n.get("add")))
+          adds += parseAdd(n.get("add"))
+        else if (n.has("remove"))
+          require(!isDataChange(n.get("remove")) || ignoreChanges,
+            s"Delta commit $v rewrites rows (remove with dataChange) — " +
+              "not an append; set ignoreChanges=true to re-emit " +
+              "rewritten files")
+      }
     }
-    scanFiles(s, dir, schema, partCols, adds.result())
+    scanFiles(s, dir, snap.schema, snap.partCols, adds.result())
   }
 
-  // ---------- writer: INSERT INTO (append) with an atomic log commit
+  // ---------- writers: stage data files, then one put-if-absent commit
 
-  private def nextVersion(logDir: File): Long =
-    Option(logDir.listFiles()).getOrElse(Array.empty)
-      .map(_.getName).collect {
-        case n if n.matches("\\d{20}\\.json") =>
-          n.stripSuffix(".json").toLong
-        case n if n.matches("\\d{20}\\.checkpoint\\.parquet") =>
-          n.stripSuffix(".checkpoint.parquet").toLong
-      }.foldLeft(-1L)(math.max) + 1
+  /** The commit every engine writer goes through: `actions` become
+    * version `snap.version + 1` — the snapshot the writer read, plus one —
+    * published put-if-absent ([[commit]]), so a writer that lost the race
+    * for that version raises `ConcurrentModificationException` instead of
+    * overwriting the winner. Every 10th version also writes a checkpoint
+    * (the standard writer cadence: replay stays O(10) regardless of table
+    * age, and log retention can reclaim old JSON commits). Returns the
+    * committed version. */
+  private def commitNext(s: SparkSession, dir: File, snap: Snapshot,
+      operation: String, actions: Seq[String]): Long = {
+    val version = snap.version + 1
+    commit(dir, version, commitInfoAction(operation) +: actions)
+    // tables the checkpoint writer refuses keep replaying their log
+    if ((version + 1) % 10 == 0 && !hasMapping(snap.schema) &&
+        snap.files.forall(_.dv.isEmpty))
+      writeCheckpoint(s, dir)
+    version
+  }
+
+  /** Stage `df` as data files of commit `version`: Hive directories on
+    * `partCols` (empty = the table root), each file under a name no other
+    * writer can choose. */
+  private def stageData(dir: File, df: DataFrame, partCols: Seq[String],
+      version: Long): Seq[LakeFiles.Staged] =
+    LakeFiles.stage(df, dir, partCols) { pv =>
+      val rel = LakeFiles.partitionDir(partCols, pv)
+      (if (rel.isEmpty) "" else rel + "/") +
+        LakeFiles.unique(f"part-$version%020d")
+    }
+
+  private def requireNoMapping(schema: StructType): Unit =
+    require(!hasMapping(schema),
+      "DML on column-mapped Delta tables unsupported (read-only support)")
 
   /** INSERT INTO (append) a Delta table — the same commit contract as the
     * reference's TableFinishOperator over presto-delta: write the parquet
@@ -534,37 +568,33 @@ object DeltaLake {
     * already >= `version` the batch was applied by an earlier attempt:
     * nothing is written and None is returned. */
   def insertTxn(s: SparkSession, tableDir: String, df: DataFrame,
-      txn: Option[(String, Long)]): Option[Long] = {
+      txn: Option[(String, Long)]): Option[Long] =
+    append(s, tableDir, df, txn).map(_._1)
+
+  /** [[insertTxn]] returning (committed version, rows written); the row
+    * count comes from the staged files' footers, not a table scan. */
+  private[graft] def append(s: SparkSession, tableDir: String,
+      df: DataFrame, txn: Option[(String, Long)]): Option[(Long, Long)] = {
     val dir = new File(tableDir)
-    val logDir = new File(dir, "_delta_log")
-    val (schema, partCols, _, txns) = replay(s, dir) // validates protocol too
-    require(!hasMapping(schema),
-      "DML on column-mapped Delta tables unsupported (read-only support)")
+    val snap = replay(s, dir) // validates protocol too
+    requireNoMapping(snap.schema)
     txn.foreach { case (app, ver) =>
-      if (txns.getOrElse(app, Long.MinValue) >= ver) return None
+      if (snap.txns.getOrElse(app, Long.MinValue) >= ver) return None
     }
     require(df.schema.fields.map(f => (f.name, f.dataType)).sortBy(_._1)
-      .sameElements(schema.fields.map(f => (f.name, f.dataType))
+      .sameElements(snap.schema.fields.map(f => (f.name, f.dataType))
         .sortBy(_._1)),
       s"INSERT schema ${df.schema.simpleString} does not match table " +
-        s"schema ${schema.simpleString}")
-    val version = nextVersion(logDir)
-    val staging = new File(dir, f".staging_insert_$version%020d")
-    val ordered = df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    if (partCols.isEmpty) ordered.write.parquet(staging.getPath)
-    else ordered.write.partitionBy(partCols: _*).parquet(staging.getPath)
-    val (dataActions, _) = stageIntoTable(dir, staging, version, 0)
-    require(dataActions.nonEmpty, "INSERT produced no data files")
-    val actions =
-      commitInfoAction(if (txn.isDefined) "STREAMING UPDATE" else "WRITE") +:
-        (dataActions ++ txn.map { case (app, ver) => txnAction(app, ver) })
-    commit(dir, version, actions)
-    // the standard writer cadence: a checkpoint every 10 commits keeps
-    // replay O(10) regardless of table age and lets log retention reclaim
-    // old JSON commits
-    if ((version + 1) % 10 == 0)
-      try writeCheckpoint(s, dir) catch { case _: Throwable => () }
-    Some(version)
+        s"schema ${snap.schema.simpleString}")
+    val staged = stageData(dir,
+      df.select(snap.schema.fieldNames.map(col).toIndexedSeq: _*),
+      snap.partCols, snap.version + 1)
+    require(staged.nonEmpty, "INSERT produced no data files")
+    val version = commitNext(s, dir, snap,
+      if (txn.isDefined) "STREAMING UPDATE" else "WRITE",
+      staged.map(f => addAction(f.path, f.partition)) ++
+        txn.map { case (app, ver) => txnAction(app, ver) })
+    Some((version, staged.map(_.rows).sum))
   }
 
   /** OPTIMIZE (bin-packing compaction; Delta's OPTIMIZE command, the
@@ -581,21 +611,17 @@ object DeltaLake {
       targetBytes: Long = 128L * 1024 * 1024,
       zorderBy: Seq[String] = Seq.empty): Long = {
     val dir = new File(tableDir).getCanonicalFile
-    val (schema, partCols, files, _) = replay(s, dir)
-    require(!hasMapping(schema),
-      "DML on column-mapped Delta tables unsupported (read-only support)")
-    requireNoDv(files, "OPTIMIZE")
-    require(zorderBy.forall(c => schema.fieldNames.contains(c) &&
-      !partCols.contains(c)), s"ZORDER BY columns $zorderBy must be " +
+    val snap = replay(s, dir)
+    requireNoMapping(snap.schema)
+    requireNoDv(snap.files, "OPTIMIZE")
+    require(zorderBy.forall(c => snap.schema.fieldNames.contains(c) &&
+      !snap.partCols.contains(c)), s"ZORDER BY columns $zorderBy must be " +
       "non-partition table columns")
-    val dataSchema = StructType(schema.fields.filterNot(f =>
-      partCols.contains(f.name)))
-    val version = nextVersion(new File(dir, "_delta_log"))
-    val actions = Seq.newBuilder[String]
-    var removed = 0L
-    var i = 0
-    files.groupBy(_.partitionValues).foreach { case (pv, group) =>
-      if (group.size > 1 || (zorderBy.nonEmpty && group.nonEmpty)) {
+    val dataSchema = StructType(snap.schema.fields.filterNot(f =>
+      snap.partCols.contains(f.name)))
+    val compacted = snap.files.groupBy(_.partitionValues).toSeq
+      .filter { case (_, group) => group.size > 1 || zorderBy.nonEmpty }
+    val actions = compacted.flatMap { case (pv, group) =>
         val paths = group.map(a => resolvePath(dir, a.path))
         val bytes = paths.map(_.length()).sum
         val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
@@ -607,28 +633,12 @@ object DeltaLake {
             graft.ops.Layout.zorderKey(zorderBy.map(col): _*))
             .sortWithinPartitions(
               graft.ops.Layout.zorderKey(zorderBy.map(col): _*))
-        val staging = new File(dir, f".staging_opt_$version%020d_$i")
-        df.write.parquet(staging.getPath)
-        group.foreach { a =>
-          actions += removeAction(a.path, dataChange = false)
-          removed += 1
-        }
-        staging.listFiles().filter(_.getName.endsWith(".parquet"))
-          .sortBy(_.getName).foreach { p =>
-            val name = f"part-$version%020d-$i%05d.parquet"
-            i += 1
-            java.nio.file.Files.move(p.toPath, new File(dir, name).toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            actions += addAction(name, pv, dataChange = false)
-          }
-        staging.listFiles().foreach(_.delete())
-        staging.delete()
-      }
+        group.map(a => removeAction(a.path, dataChange = false)) ++
+          stageData(dir, df, Nil, snap.version + 1).map(f =>
+            addAction(f.path, pv, dataChange = false))
     }
-    val acts = actions.result()
-    if (acts.nonEmpty)
-      commit(dir, version, commitInfoAction("OPTIMIZE") +: acts)
-    removed
+    if (actions.nonEmpty) commitNext(s, dir, snap, "OPTIMIZE", actions)
+    compacted.map(_._2.size.toLong).sum
   }
 
   /** VACUUM: physically delete data files that are NOT in the current
@@ -639,8 +649,7 @@ object DeltaLake {
   def vacuum(s: SparkSession, tableDir: String,
       retentionMs: Long = 7L * 24 * 3600 * 1000): Long = {
     val dir = new File(tableDir).getCanonicalFile
-    val (_, _, files, _) = replay(s, dir)
-    val active = files.map(a =>
+    val active = replay(s, dir).files.map(a =>
       resolvePath(dir, a.path).getCanonicalPath).toSet
     val cutoff = System.currentTimeMillis() - retentionMs
     var n = 0L
@@ -655,47 +664,6 @@ object DeltaLake {
       }
     walk(dir)
     n
-  }
-
-  /** Move every leaf parquet under `staging` (possibly Hive-partitioned by
-    * the writer) into the table, deleting the staging tree; returns one add
-    * action per file plus the advanced name counter. Files become visible
-    * ONLY via the caller's subsequent commit. */
-  private def stageIntoTable(dir: File, staging: File, version: Long,
-      i0: Int): (Seq[String], Int) = {
-    def decode(v: String): String =
-      java.net.URLDecoder.decode(v, "UTF-8") match {
-        case "__HIVE_DEFAULT_PARTITION__" => null
-        case other => other
-      }
-    val adds = Seq.newBuilder[String]
-    var i = i0
-    def walk(d: File, partVals: Map[String, String]): Unit =
-      Option(d.listFiles()).getOrElse(Array.empty).foreach {
-        case sub if sub.isDirectory && sub.getName.contains("=") =>
-          val Array(k, v) = sub.getName.split("=", 2)
-          walk(sub, partVals + (k -> decode(v)))
-        case f if f.isFile && f.getName.endsWith(".parquet") =>
-          val relDir = partVals.map { case (k, v) =>
-            k + "=" + (if (v == null) "__HIVE_DEFAULT_PARTITION__"
-            else java.net.URLEncoder.encode(v, "UTF-8"))
-          }.mkString("/")
-          if (relDir.nonEmpty) new File(dir, relDir).mkdirs()
-          val name = f"part-$version%020d-$i%05d.parquet"
-          i += 1
-          val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-          java.nio.file.Files.move(f.toPath, new File(dir, rel).toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          adds += addAction(rel, partVals)
-        case _ =>
-      }
-    walk(staging, Map.empty)
-    def rmRec(f: File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRec)
-      f.delete()
-    }
-    rmRec(staging)
-    (adds.result(), i)
   }
 
   /** CONVERT TO DELTA (Delta's in-place import of a plain parquet
@@ -756,15 +724,15 @@ object DeltaLake {
     val tgt = new File(targetDir).getCanonicalFile
     require(!new File(tgt, "_delta_log").exists(),
       s"$targetDir already has a _delta_log")
-    val (schema, partCols, files, _) = replay(s, src)
-    requireNoDv(files, "SHALLOW CLONE")
+    val snap = replay(s, src)
+    requireNoDv(snap.files, "SHALLOW CLONE")
     tgt.mkdirs()
     commit(tgt, 0,
       commitInfoAction("CLONE") +: protocolAction +:
-        metaDataAction(schema, partCols) +:
-        files.map(a => addAction(
+        metaDataAction(snap.schema, snap.partCols) +:
+        snap.files.map(a => addAction(
           resolvePath(src, a.path).getCanonicalPath, a.partitionValues)))
-    files.size.toLong
+    snap.files.size.toLong
   }
 
   /** RESTORE the table to the snapshot at `version` as a NEW commit
@@ -776,26 +744,24 @@ object DeltaLake {
     * of add/remove actions committed (0 = already identical). */
   def restore(s: SparkSession, tableDir: String, version: Long): Long = {
     val dir = new File(tableDir).getCanonicalFile
-    val (schema, _, curFiles, _) = replay(s, dir)
-    require(!hasMapping(schema),
+    val snap = replay(s, dir)
+    require(!hasMapping(snap.schema),
       "RESTORE on column-mapped Delta tables unsupported")
-    requireNoDv(curFiles, "RESTORE")
-    val (tSchema, tPartCols, tFiles, _) = replay(s, dir, version)
-    requireNoDv(tFiles, "RESTORE")
-    val curPaths = curFiles.map(_.path).toSet
-    val tgtPaths = tFiles.map(_.path).toSet
-    val removes = curFiles.filterNot(f => tgtPaths(f.path))
-    val adds = tFiles.filterNot(f => curPaths(f.path))
+    requireNoDv(snap.files, "RESTORE")
+    val target = replay(s, dir, version)
+    requireNoDv(target.files, "RESTORE")
+    val curPaths = snap.files.map(_.path).toSet
+    val tgtPaths = target.files.map(_.path).toSet
+    val removes = snap.files.filterNot(f => tgtPaths(f.path))
+    val adds = target.files.filterNot(f => curPaths(f.path))
     adds.foreach(a => require(resolvePath(dir, a.path).isFile,
       s"cannot RESTORE: historical file ${a.path} was vacuumed"))
     val n = removes.size + adds.size
     if (n == 0) return 0L
-    val next = nextVersion(new File(dir, "_delta_log"))
-    commit(dir, next,
-      commitInfoAction("RESTORE") +:
-        (metaDataAction(tSchema, tPartCols) +:
-          (removes.map(r => removeAction(r.path)) ++
-            adds.map(a => addAction(a.path, a.partitionValues)))))
+    commitNext(s, dir, snap, "RESTORE",
+      metaDataAction(target.schema, target.partCols) +:
+        (removes.map(r => removeAction(r.path)) ++
+          adds.map(a => addAction(a.path, a.partitionValues))))
     n.toLong
   }
 
@@ -803,9 +769,9 @@ object DeltaLake {
     * never committed to this table). */
   def txnVersion(s: SparkSession, tableDir: String, appId: String)
       : Option[Long] =
-    replay(s, new File(tableDir))._4.get(appId)
+    replay(s, new File(tableDir)).txns.get(appId)
 
-  // ---------- writer: DELETE / UPDATE (copy-on-write rewrites)
+  // ---------- writers: DELETE / UPDATE / MERGE (copy-on-write rewrites)
 
   /** DELETE FROM the table: rows where `condition` is TRUE disappear
     * (NULL keeps the row, ANSI semantics). Copy-on-write, the same
@@ -814,7 +780,7 @@ object DeltaLake {
     * all in one atomic remove+add commit. Returns the deleted count. */
   def delete(s: SparkSession, tableDir: String,
       condition: org.apache.spark.sql.Column): Long =
-    rewrite(s, tableDir, condition, sets = Map.empty)
+    rewriteWhere(s, tableDir, condition, sets = Map.empty)
 
   /** UPDATE: rows matching `condition` get `sets` (evaluated against the
     * PRE-update row, ANSI); others are untouched. Updating a partition
@@ -824,90 +790,74 @@ object DeltaLake {
       condition: org.apache.spark.sql.Column,
       sets: Map[String, org.apache.spark.sql.Column]): Long = {
     require(sets.nonEmpty, "UPDATE needs SET columns")
-    rewrite(s, tableDir, condition, sets)
+    rewriteWhere(s, tableDir, condition, sets)
   }
 
-  private def rewrite(s: SparkSession, tableDir: String,
+  /** The snapshot a row-level writer rewrites, after the guards every
+    * such writer shares. */
+  private def rewritable(s: SparkSession, dir: File, op: String,
+      setCols: Set[String]): Snapshot = {
+    val snap = replay(s, dir)
+    requireNoMapping(snap.schema)
+    requireNoDv(snap.files, op)
+    require(setCols.intersect(snap.partCols.toSet).isEmpty,
+      s"UPDATE of partition columns ${snap.partCols.mkString(",")} unsupported")
+    snap
+  }
+
+  /** The files whose `__fp` tag appears in `perFile` (rows of a per-file
+    * aggregate, the tag first). */
+  private def hitFiles(dir: File, files: Seq[AddFile], perFile: Seq[Row])
+      : Seq[AddFile] = {
+    val hit = perFile.map(r => new File(r.getString(0)).getCanonicalPath).toSet
+    files.filter(a => hit(resolvePath(dir, a.path).getCanonicalPath))
+  }
+
+  /** The copy-on-write routine of DELETE, UPDATE and MERGE's matched
+    * side: every file in `affected` is replaced by `transform` of its
+    * tagged rows, staged per partition group (the partition columns
+    * live in the log, so the data files drop them). Returns the remove
+    * and add actions; files not in `affected` stay untouched. */
+  private def rewriteFiles(s: SparkSession, dir: File, snap: Snapshot,
+      affected: Seq[AddFile])(transform: DataFrame => DataFrame)
+      : Seq[String] = {
+    val dataCols = snap.schema.fieldNames.filterNot(snap.partCols.contains)
+    affected.groupBy(_.partitionValues).toSeq.flatMap { case (pv, group) =>
+      val rows = scanFiles(s, dir, snap.schema, snap.partCols, group,
+        tags = true)
+      val out = transform(rows).select(dataCols.map(col).toIndexedSeq: _*)
+      group.map(a => removeAction(a.path)) ++
+        stageData(dir, out, Nil, snap.version + 1).map(f =>
+          addAction(f.path, pv))
+    }
+  }
+
+  private def rewriteWhere(s: SparkSession, tableDir: String,
       condition: org.apache.spark.sql.Column,
       sets: Map[String, org.apache.spark.sql.Column]): Long = {
     val dir = new File(tableDir).getCanonicalFile
-    val (schema, partCols, files, _) = replay(s, dir)
-    require(!hasMapping(schema),
-      "DML on column-mapped Delta tables unsupported (read-only support)")
-    requireNoDv(files, "DELETE/UPDATE")
-    require(sets.keySet.intersect(partCols.toSet).isEmpty,
-      s"UPDATE of partition columns ${partCols.mkString(",")} unsupported")
-    sets.keys.foreach(k => require(schema.fieldNames.contains(k),
+    val snap = rewritable(s, dir, "DELETE/UPDATE", sets.keySet)
+    sets.keys.foreach(k => require(snap.schema.fieldNames.contains(k),
       s"SET column $k not in table schema"))
-    val dataSchema = StructType(schema.fields.filterNot(f =>
-      partCols.contains(f.name)))
-    val version = nextVersion(new File(dir, "_delta_log"))
-    def partLit(f: StructField, v: String) =
-      (if (v == null) lit(null) else lit(v)).cast(f.dataType).as(f.name)
-    val actions = Seq.newBuilder[String]
-    var matched = 0L
-    var i = 0
-    // per partition-tuple group: find the files holding matching rows,
-    // rewrite ONLY those (the others stay untouched in the log)
-    files.groupBy(_.partitionValues).foreach { case (pv, group) =>
-      val byCanon = group.map(a =>
-        resolvePath(dir, a.path).getCanonicalPath -> a).toMap
-      def tagged(paths: Seq[String]) = {
-        val df = s.read.schema(dataSchema).parquet(paths: _*)
-        val cols = schema.fields.map { f =>
-          if (partCols.contains(f.name))
-            partLit(f, pv.getOrElse(f.name, null))
-          else col(f.name)
+    val hit = coalesce(condition, lit(false))
+    // one aggregate finds the files holding matches and counts them
+    val perFile = scanFiles(s, dir, snap.schema, snap.partCols, snap.files,
+      tags = true).filter(hit).groupBy("__fp").count().collect().toSeq
+    if (perFile.isEmpty) return 0L
+    val actions = rewriteFiles(s, dir, snap,
+      hitFiles(dir, snap.files, perFile)) { rows =>
+      if (sets.isEmpty) rows.filter(!hit)
+      else rows.select(snap.schema.fields.map { f =>
+        sets.get(f.name) match {
+          case Some(v) =>
+            when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+          case None => col(f.name)
         }
-        df.select(cols.toIndexedSeq :+
-          regexp_replace(regexp_replace(col("_metadata.file_path"),
-            "^file:", ""), "^/+", "/").as("__fp"): _*)
-      }
-      val all = tagged(group.map(a => resolvePath(dir, a.path).getPath))
-      val hits = all.filter(coalesce(condition, lit(false)))
-      val affectedFps = hits.select("__fp").distinct()
-        .collect().map(_.getString(0))
-      if (affectedFps.nonEmpty) {
-        matched += hits.count()
-        val affected = affectedFps.map(fp => byCanon(
-          new File(fp).getCanonicalPath))
-        val rows = tagged(affected.map(a =>
-          resolvePath(dir, a.path).getPath).toIndexedSeq)
-        val out =
-          if (sets.isEmpty) rows.filter(!coalesce(condition, lit(false)))
-          else {
-            val cond = coalesce(condition, lit(false))
-            rows.select(schema.fields.map { f =>
-              sets.get(f.name) match {
-                case Some(v) =>
-                  when(cond, v.cast(f.dataType)).otherwise(col(f.name))
-                    .as(f.name)
-                case None => col(f.name)
-              }
-            }.toIndexedSeq :+ col("__fp"): _*)
-          }
-        // the rewrite drops partition columns again (they live in the log)
-        val staging = new File(dir, f".staging_rw_$version%020d_$i")
-        out.select(dataSchema.fieldNames.map(col).toIndexedSeq: _*)
-          .write.parquet(staging.getPath)
-        affected.foreach(a => actions += removeAction(a.path))
-        staging.listFiles().filter(_.getName.endsWith(".parquet"))
-          .sortBy(_.getName).foreach { p =>
-            val name = f"part-$version%020d-$i%05d.parquet"
-            i += 1
-            java.nio.file.Files.move(p.toPath,
-              new File(dir, name).toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            actions += addAction(name, pv)
-          }
-        staging.listFiles().foreach(_.delete())
-        staging.delete()
-      }
+      }.toIndexedSeq: _*)
     }
-    val acts = actions.result()
-    if (acts.nonEmpty) commit(dir, version,
-      commitInfoAction(if (sets.isEmpty) "DELETE" else "UPDATE") +: acts)
-    matched
+    commitNext(s, dir, snap, if (sets.isEmpty) "DELETE" else "UPDATE",
+      actions)
+    perFile.map(_.getLong(1)).sum
   }
 
   /** MERGE INTO (the reference's MergeProcessor / standard Delta upsert),
@@ -939,115 +889,62 @@ object DeltaLake {
       require(!source.columns.contains(c),
         s"MERGE source may not have a column named $c"))
     val dir = new File(tableDir).getCanonicalFile
-    val (schema, partCols, files, _) = replay(s, dir)
-    require(!hasMapping(schema),
-      "DML on column-mapped Delta tables unsupported (read-only support)")
-    requireNoDv(files, "MERGE")
-    require(matchedUpdate.keySet.intersect(partCols.toSet).isEmpty,
-      s"UPDATE of partition columns ${partCols.mkString(",")} unsupported")
+    val snap = rewritable(s, dir, "MERGE", matchedUpdate.keySet)
+    val schema = snap.schema
     (matchedUpdate.keySet ++ notMatchedInsert.toSeq.flatMap(_.keySet))
       .foreach(k => require(schema.fieldNames.contains(k),
         s"MERGE column $k not in table schema"))
-    val dataSchema = StructType(schema.fields.filterNot(f =>
-      partCols.contains(f.name)))
-    val version = nextVersion(new File(dir, "_delta_log"))
-    def partLit(f: StructField, v: String) =
-      (if (v == null) lit(null) else lit(v)).cast(f.dataType).as(f.name)
-    // full table with file-path + row-index identity tags (parquet
-    // _metadata columns — free, no shuffle)
-    def taggedGroup(pv: Map[String, String], paths: Seq[String]) = {
-      val df = s.read.schema(dataSchema).parquet(paths: _*)
-      df.select(schema.fields.map { f =>
-        if (partCols.contains(f.name)) partLit(f, pv.getOrElse(f.name, null))
-        else col(f.name)
-      }.toIndexedSeq :+
-        regexp_replace(regexp_replace(col("_metadata.file_path"),
-          "^file:", ""), "^/+", "/").as("__fp") :+
-        col("_metadata.row_index").as("__ri"): _*)
-    }
-    val groups = files.groupBy(_.partitionValues)
-    val emptyTagged = s.createDataFrame(
-      new java.util.ArrayList[Row](),
-      StructType(schema.fields :+ StructField("__fp", StringType) :+
-        StructField("__ri", LongType)))
-    val target = groups.map { case (pv, g) =>
-      taggedGroup(pv, g.map(a => resolvePath(dir, a.path).getPath))
-    }.reduceOption(_.unionAll(_)).getOrElse(emptyTagged)
+    // full table with file-path + row-index identity tags
+    val target = scanFiles(s, dir, schema, snap.partCols, snap.files,
+      tags = true)
     val src = source.withColumn("__sm", lit(true)).as("s")
     val onE = expr(on)
-    val matches = target.as("t").join(src, onE, "inner")
-    require(matches.groupBy(col("__fp"), col("__ri")).count()
-      .filter(col("count") > 1).limit(1).count() == 0,
-      "MERGE: a target row matched more than one source row")
     val delE = coalesce(matchedDelete.map(expr).getOrElse(lit(false)),
       lit(false))
-    val rewriteNeeded = matchedUpdate.nonEmpty || matchedDelete.nonEmpty
-    val deleted =
-      if (matchedDelete.isEmpty) 0L else matches.filter(delE).count()
+    // one aggregate: matched rows, distinct matched rows (a difference
+    // means some target row matched twice) and deletes, per file
+    val perFile = target.as("t").join(src, onE, "inner")
+      .groupBy(col("__fp"))
+      .agg(count(lit(1)), countDistinct(col("__ri")),
+        sum(when(delE, 1L).otherwise(0L)))
+      .collect().toSeq
+    require(perFile.forall(r => r.getLong(1) == r.getLong(2)),
+      "MERGE: a target row matched more than one source row")
+    val nDel = perFile.map(_.getLong(3)).sum
+    val deleted = if (matchedDelete.isEmpty) 0L else nDel
     val updated =
-      if (matchedUpdate.isEmpty) 0L else matches.filter(!delE).count()
-    val actions = Seq.newBuilder[String]
-    var i = 0
-    if (rewriteNeeded) {
-      val affected = matches.select("__fp").distinct()
-        .collect().map(r => new File(r.getString(0)).getCanonicalPath).toSet
-      groups.foreach { case (pv, g) =>
-        val hit = g.filter(a =>
-          affected(resolvePath(dir, a.path).getCanonicalPath))
-        if (hit.nonEmpty) {
-          val rows = taggedGroup(pv,
-            hit.map(a => resolvePath(dir, a.path).getPath)).as("t")
-          val j = rows.join(src, onE, "left_outer")
+      if (matchedUpdate.isEmpty) 0L else perFile.map(_.getLong(1)).sum - nDel
+    val rewritten =
+      if (matchedUpdate.isEmpty && matchedDelete.isEmpty) Nil
+      else rewriteFiles(s, dir, snap, hitFiles(dir, snap.files, perFile)) {
+        rows =>
           val m = coalesce(col("__sm"), lit(false))
-          val out = j.filter(!(m && delE)).select(schema.fields.map { f =>
-            matchedUpdate.get(f.name) match {
-              case Some(e) =>
-                when(m, expr(e).cast(f.dataType))
-                  .otherwise(col("t." + f.name)).as(f.name)
-              case None => col("t." + f.name).as(f.name)
-            }
-          }.toIndexedSeq: _*)
-          val staging = new File(dir, f".staging_mrg_$version%020d_$i")
-          out.select(dataSchema.fieldNames.map(col).toIndexedSeq: _*)
-            .write.parquet(staging.getPath)
-          hit.foreach(a => actions += removeAction(a.path))
-          staging.listFiles().filter(_.getName.endsWith(".parquet"))
-            .sortBy(_.getName).foreach { p =>
-              val name = f"part-$version%020d-$i%05d.parquet"
-              i += 1
-              java.nio.file.Files.move(p.toPath,
-                new File(dir, name).toPath,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-              actions += addAction(name, pv)
-            }
-          staging.listFiles().foreach(_.delete())
-          staging.delete()
-        }
+          rows.as("t").join(src, onE, "left_outer").filter(!(m && delE))
+            .select(schema.fields.map { f =>
+              matchedUpdate.get(f.name) match {
+                case Some(e) =>
+                  when(m, expr(e).cast(f.dataType))
+                    .otherwise(col("t." + f.name)).as(f.name)
+                case None => col("t." + f.name).as(f.name)
+              }
+            }.toIndexedSeq: _*)
       }
-    }
-    val inserted = notMatchedInsert match {
-      case None => 0L
-      case Some(mapping) =>
-        val anti = src.join(target.as("t"), onE, "left_anti")
-        val insDf = anti.select(schema.fields.map { f =>
+    val inserts = notMatchedInsert.toSeq.flatMap { mapping =>
+      val insDf = src.join(target.as("t"), onE, "left_anti")
+        .select(schema.fields.map { f =>
           mapping.get(f.name)
             .map(e => expr(e).cast(f.dataType))
             .getOrElse(lit(null).cast(f.dataType)).as(f.name)
         }.toIndexedSeq: _*)
-        val n = insDf.count()
-        if (n > 0) {
-          val staging = new File(dir, f".staging_mrg_ins_$version%020d")
-          if (partCols.isEmpty) insDf.write.parquet(staging.getPath)
-          else insDf.write.partitionBy(partCols: _*).parquet(staging.getPath)
-          val (acts, i2) = stageIntoTable(dir, staging, version, i)
-          i = i2
-          actions ++= acts
-        }
-        n
+      stageData(dir, insDf, snap.partCols, snap.version + 1)
     }
-    val acts = actions.result()
-    if (acts.nonEmpty)
-      commit(dir, version, commitInfoAction("MERGE") +: acts)
+    val inserted = inserts.map(_.rows).sum
+    // an insert that matched nothing commits no (empty) files
+    if (inserted == 0) inserts.foreach(f => new File(dir, f.path).delete())
+    val actions = rewritten ++
+      (if (inserted == 0) Nil
+       else inserts.map(f => addAction(f.path, f.partition)))
+    if (actions.nonEmpty) commitNext(s, dir, snap, "MERGE", actions)
     MergeStats(updated, deleted, inserted)
   }
 
@@ -1057,14 +954,13 @@ object DeltaLake {
 
   private def schemaJson(st: StructType): String = st.json
 
-  /** Append one commit of actions to `tableDir/_delta_log`. */
-  def commit(tableDir: File, version: Long, actions: Seq[String]): Unit = {
-    val logDir = new File(tableDir, "_delta_log")
-    logDir.mkdirs()
-    val name = f"$version%020d.json"
-    java.nio.file.Files.write(new File(logDir, name).toPath,
+  /** Publish `actions` as commit `version` of `tableDir/_delta_log`,
+    * put-if-absent: raises `ConcurrentModificationException` when that
+    * version is already committed, leaving it untouched. */
+  def commit(tableDir: File, version: Long, actions: Seq[String]): Unit =
+    LakeFiles.publishNew(
+      new File(tableDir, f"_delta_log/$version%020d.json"),
       actions.mkString("", "\n", "\n").getBytes(UTF_8))
-  }
 
   def protocolAction: String =
     """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
@@ -1140,17 +1036,11 @@ object DeltaLake {
     writeCheckpoint(s, tableDir, parts = 1)
 
   def writeCheckpoint(s: SparkSession, tableDir: File, parts: Int): Long = {
-    val logDir = new File(tableDir, "_delta_log")
-    val (schema, partCols, files, txns) = replay(s, tableDir)
+    val Snapshot(version, schema, partCols, files, txns) =
+      replay(s, tableDir)
     require(!hasMapping(schema),
       "checkpointing column-mapped Delta tables unsupported (read-only)")
     requireNoDv(files, "checkpointing")
-    val version = Option(logDir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("\\d{20}\\.json"))
-      .map(_.getName.stripSuffix(".json").toLong)
-      .foldLeft(-1L)(math.max)
-    require(version >= 0, s"nothing to checkpoint under $tableDir")
-    import org.apache.spark.sql.Row
     val ckptSchema = StructType(Seq(
       StructField("add", StructType(Seq(
         StructField("path", StringType),
@@ -1193,22 +1083,15 @@ object DeltaLake {
       else rows.zipWithIndex.groupBy(_._2 % parts).toSeq
         .sortBy(_._1).map(_._2.map(_._1))
     require(groups.size == parts, s"grouping produced ${groups.size} parts")
-    val staging = new File(logDir, ".staging_ckpt")
     groups.zipWithIndex.foreach { case (group, i) =>
-      val df = s.createDataFrame(group.asJava, ckptSchema)
-      df.coalesce(1).write.mode("overwrite").parquet(staging.getPath)
-      val part = staging.listFiles().find(_.getName.endsWith(".parquet")).get
-      val dest =
+      val name =
         if (parts == 1) f"$version%020d.checkpoint.parquet"
         else f"$version%020d.checkpoint.${i + 1}%010d.$parts%010d.parquet"
-      java.nio.file.Files.move(part.toPath,
-        new File(logDir, dest).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      LakeFiles.stage(s.createDataFrame(group.asJava, ckptSchema)
+        .coalesce(1), tableDir)(_ => s"_delta_log/$name")
     }
-    staging.listFiles().foreach(_.delete())
-    staging.delete()
     val partsField = if (parts == 1) "" else s""","parts":$parts"""
-    java.nio.file.Files.write(new File(logDir, "_last_checkpoint").toPath,
+    LakeFiles.publishReplace(new File(tableDir, "_delta_log/_last_checkpoint"),
       s"""{"version":$version,"size":${rows.size}$partsField}"""
         .getBytes(UTF_8))
     version
@@ -1216,13 +1099,6 @@ object DeltaLake {
 
   /** Write `df` as one parquet data file `name` inside `tableDir` (no log
     * entry — pair with addAction in a commit). */
-  def writeDataFile(df: DataFrame, tableDir: File, name: String): Unit = {
-    val staging = new File(tableDir, s".staging_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(staging.getPath)
-    val part = staging.listFiles().find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath, new File(tableDir, name).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    staging.listFiles().foreach(_.delete())
-    staging.delete()
-  }
+  def writeDataFile(df: DataFrame, tableDir: File, name: String): Unit =
+    LakeFiles.stage(df.coalesce(1), tableDir)(_ => name)
 }

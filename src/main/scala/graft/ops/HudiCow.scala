@@ -132,17 +132,9 @@ object HudiCow {
     * completeCommit. */
   def writeBaseFile(df: DataFrame, tableDir: File, partition: String,
       fileId: String, instant: String): Unit = {
-    val dest = if (partition.isEmpty) tableDir
-    else new File(tableDir, partition)
-    dest.mkdirs()
-    val staging = new File(dest, s".staging_$fileId$instant")
-    df.coalesce(1).write.mode("overwrite").parquet(staging.getPath)
-    val part = staging.listFiles().find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath,
-      new File(dest, s"${fileId}_0-0-0_$instant.parquet").toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    staging.listFiles().foreach(_.delete())
-    staging.delete()
+    val name = s"${fileId}_0-0-0_$instant.parquet"
+    LakeFiles.stage(df.coalesce(1), tableDir)(_ =>
+      if (partition.isEmpty) name else s"$partition/$name")
   }
 
   /** Mark `instant` completed on the timeline. */

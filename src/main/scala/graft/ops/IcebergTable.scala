@@ -43,6 +43,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * DeleteFile.java): a positional delete applies to data files with
   * sequence <= its own, an equality delete to strictly smaller — so a
   * row re-inserted after the delete survives it.
+  *
+  * Writers (INSERT, DELETE, UPDATE, MERGE, rewrite_data_files and the
+  * metadata procedures) share one commit path:
+  *
+  *  - data, manifest and manifest-list files are named so no two writers
+  *    can collide (`insert-<snapshot>-<uuid>.parquet`,
+  *    `manifest-<snapshot>-<uuid>.avro`, ...), and land through
+  *    [[LakeFiles.stage]];
+  *  - a writer commits metadata version N+1 over the version N it read,
+  *    with snapshot id = the largest id + 1; `vN+1.metadata.json` is
+  *    published put-if-absent ([[LakeFiles.publishNew]]), so a writer
+  *    that lost the race raises `ConcurrentModificationException` and the
+  *    winner's metadata stays byte-identical;
+  *  - `version-hint.text` is then swapped by an atomic rename, so a
+  *    reader never sees it half-written.
   */
 object IcebergTable {
 
@@ -65,7 +80,12 @@ object IcebergTable {
     } finally reader.close()
   }
 
-  private def loadMeta(dir: File): com.fasterxml.jackson.databind.JsonNode = {
+  private def loadMeta(dir: File): com.fasterxml.jackson.databind.JsonNode =
+    loadVersioned(dir)._2
+
+  /** The current metadata version and its JSON. */
+  private def loadVersioned(dir: File)
+      : (Int, com.fasterxml.jackson.databind.JsonNode) = {
     val metaDir = new File(dir, "metadata")
     require(metaDir.isDirectory, s"not an Iceberg table: $dir")
     val hint = new File(metaDir, "version-hint.text")
@@ -79,8 +99,30 @@ object IcebergTable {
         }.foldLeft(-1)(math.max)
     val metaFile = new File(metaDir, s"v$version.metadata.json")
     require(metaFile.isFile, s"missing $metaFile")
-    mapper.readTree(new String(
-      java.nio.file.Files.readAllBytes(metaFile.toPath), UTF_8))
+    (version, mapper.readTree(new String(
+      java.nio.file.Files.readAllBytes(metaFile.toPath), UTF_8)))
+  }
+
+  /** What a writer commits over: the metadata it read, and the one rule
+    * for the next (snapshot id, metadata version) — one past the largest
+    * snapshot id and one past the version read. Two writers that read the
+    * same version race for the same metadata file, and
+    * [[publishMetadata]] lets exactly one of them win. */
+  private def writeBase(dir: File)
+      : (com.fasterxml.jackson.databind.JsonNode, Long, Int) = {
+    val (version, meta) = loadVersioned(dir)
+    val snaps = meta.get("snapshots")
+    (meta, (0 until snaps.size()).map(snaps.get(_).get("snapshot-id").asLong)
+      .foldLeft(0L)(math.max) + 1, version + 1)
+  }
+
+  /** Publish metadata `version` put-if-absent, then point the version
+    * hint at it. */
+  private def publishMetadata(dir: File, version: Int, json: String): Unit = {
+    LakeFiles.publishNew(new File(dir, s"metadata/v$version.metadata.json"),
+      json.getBytes(UTF_8))
+    LakeFiles.publishReplace(new File(dir, "metadata/version-hint.text"),
+      version.toString.getBytes(UTF_8))
   }
 
   /** One live file of a snapshot: content (0=data, 1=positional deletes,
@@ -734,17 +776,9 @@ object IcebergTable {
   private def bumpMetadata(dir: File)(
       mutate: com.fasterxml.jackson.databind.node.ObjectNode => Unit)
       : Unit = {
-    val meta = loadMeta(dir)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    mutate(meta)
-    val hint = new File(dir, "metadata/version-hint.text")
-    val version = new String(java.nio.file.Files.readAllBytes(hint.toPath),
-      UTF_8).trim.toInt + 1
-    java.nio.file.Files.write(
-      new File(dir, s"metadata/v$version.metadata.json").toPath,
-      mapper.writeValueAsString(meta).getBytes(UTF_8))
-    java.nio.file.Files.write(hint.toPath,
-      version.toString.getBytes(UTF_8))
+    val (meta, _, version) = writeBase(dir)
+    mutate(meta.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
+    publishMetadata(dir, version, mapper.writeValueAsString(meta))
   }
 
   /** Point the table back at `snapshotId` (a NEW metadata version whose
@@ -859,7 +893,7 @@ object IcebergTable {
   def rewriteDataFiles(s: SparkSession, tableDir: String,
       targetBytes: Long = 128L * 1024 * 1024): Int = {
     val dir = new File(tableDir).getCanonicalFile
-    val meta = loadMeta(dir)
+    val (meta, snapId, version) = writeBase(dir)
     require(partitionSpec(meta).isEmpty,
       "rewrite_data_files on partitioned tables unsupported")
     val cur = meta.get("current-snapshot-id").asLong
@@ -867,26 +901,11 @@ object IcebergTable {
       .map(f => resolve(dir, f.path).length()).sum
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val df = read(s, dir.getPath) // deletes applied
-    val snaps = meta.get("snapshots")
-    val snapId = (0 until snaps.size())
-      .map(snaps.get(_).get("snapshot-id").asLong).foldLeft(0L)(math.max) + 1
-    val hint = new File(dir, "metadata/version-hint.text")
-    val version = new String(java.nio.file.Files.readAllBytes(hint.toPath),
-      UTF_8).trim.toInt + 1
-    val dataDir = new File(dir, "data")
-    val staging = new File(dataDir, s".staging_rewrite_$snapId")
-    df.coalesce(nOut).write.parquet(staging.getPath)
-    val entries = staging.listFiles().filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName).zipWithIndex.map { case (p, i) =>
-        val name = f"compact-$snapId-$i%05d.parquet"
-        java.nio.file.Files.move(p.toPath,
-          new File(dataDir, name).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        Entry(1, s"data/$name")
-      }.toSeq
-    staging.listFiles().foreach(_.delete())
-    staging.delete()
-    commitSnapshot(dir, version, snapId, entries)
+    val entries = LakeFiles.stage(df.coalesce(nOut), dir)(_ =>
+      LakeFiles.unique(s"data/compact-$snapId"))
+      .map(f => PartEntry(1, f.path, Seq.empty))
+    commitManifests(dir, version, snapId, uniqueTag(snapId), entries,
+      carried = Nil)
     entries.size
   }
 
@@ -933,82 +952,69 @@ object IcebergTable {
     * version-hint for snapshot `snapshotId`; data file paths are
     * table-relative. */
   def commitSnapshot(tableDir: File, version: Int, snapshotId: Long,
-      entries: Seq[Entry]): Unit = {
-    val metaDir = new File(tableDir, "metadata")
-    metaDir.mkdirs()
-    val manifest = new File(metaDir, s"manifest-$snapshotId.avro")
-    writeAvro(manifest, manifestEntrySchema, entries.map { e =>
-      val df = new GenericData.Record(
-        manifestEntrySchema.getField("data_file").schema())
-      df.put("content", e.content)
-      df.put("file_path", e.dataFile)
-      df.put("file_format", "PARQUET")
-      df.put("record_count", 0L)
-      df.put("file_size_in_bytes", 0L)
-      val r = new GenericData.Record(manifestEntrySchema)
-      r.put("status", e.status)
-      r.put("snapshot_id",
-        if (e.addedSnapshotId >= 0) e.addedSnapshotId else snapshotId)
-      r.put("data_file", df)
-      r
-    })
-    val mlist = new File(metaDir, s"snap-$snapshotId.avro")
-    writeAvro(mlist, manifestListSchema, Seq {
-      val r = new GenericData.Record(manifestListSchema)
-      r.put("manifest_path", s"metadata/manifest-$snapshotId.avro")
-      r.put("manifest_length", manifest.length())
-      r.put("partition_spec_id", 0)
-      r.put("added_snapshot_id", snapshotId)
-      r
-    })
-    writeMetadataJson(tableDir, version, snapshotId, extra0 = "")
-  }
+      entries: Seq[Entry]): Unit =
+    commitManifests(tableDir, version, snapshotId, snapshotId.toString,
+      entries.map(partEntry), carried = Nil)
 
-  /** Schema / partition-spec fields of the prior metadata version,
-    * re-rendered for the next one — an append must not drop them or the
-    * table would silently lose its pruning metadata. */
-  private def carryForwardExtra(metaDir: File, version: Int): String = {
-    val prior = new File(metaDir, s"v${version - 1}.metadata.json")
-    if (!prior.isFile) return ""
-    val pm = mapper.readTree(new String(
-      java.nio.file.Files.readAllBytes(prior.toPath), UTF_8))
-    Seq("schema", "schemas", "current-schema-id", "partition-specs",
-      "default-spec-id")
-      .flatMap(k => Option(pm.get(k)).map(v => s""","$k":${v.toString}"""))
-      .mkString
+  /** Avro file tag of an engine writer's snapshot: unique to the writer. */
+  private def uniqueTag(snapshotId: Long): String =
+    s"$snapshotId-${java.util.UUID.randomUUID()}"
+
+  private def partEntry(e: Entry): PartEntry =
+    PartEntry(e.status, e.dataFile, Seq.empty, e.content, e.addedSnapshotId)
+
+  /** The one commit of a snapshot: write its manifest of `entries` and a
+    * manifest list holding the `carried` (path, added-snapshot) manifests
+    * plus the new one — both avro files named by `tag` — then publish
+    * metadata `version` put-if-absent. `extra` injects top-level metadata
+    * fields (schema / partition-specs), pre-rendered with a leading comma;
+    * empty = carry the prior version's forward. */
+  private def commitManifests(tableDir: File, version: Int, snapshotId: Long,
+      tag: String, entries: Seq[PartEntry], carried: Seq[(String, Long)],
+      extra: String = "", summary: Map[String, String] = Map.empty): Unit = {
+    val manifest = s"metadata/manifest-$tag.avro"
+    writeManifest(new File(tableDir, manifest), snapshotId, entries)
+    val list = s"metadata/snap-$tag.avro"
+    writeAvro(new File(tableDir, list), manifestListSchema,
+      (carried :+ (manifest -> snapshotId)).map { case (p, sid) =>
+        val r = new GenericData.Record(manifestListSchema)
+        r.put("manifest_path", p)
+        r.put("manifest_length", resolve(tableDir, p).length())
+        r.put("partition_spec_id", 0)
+        r.put("added_snapshot_id", sid)
+        r
+      })
+    writeMetadataJson(tableDir, version, snapshotId, list, extra, summary)
   }
 
   /** vN.metadata.json + version-hint, carrying prior snapshots forward
     * (real metadata.json keeps the full history — that is what time
-    * travel and $snapshots read). `extra` injects additional top-level
-    * fields (schema / partition-specs), pre-rendered with a leading
-    * comma; empty = carry the prior version's forward. */
+    * travel and $snapshots read). The prior version is read once: its
+    * snapshots, its current snapshot (the new one's parent) and, when
+    * `extra0` is empty, its schema / partition-spec fields (an append
+    * must not drop them or the table would silently lose its pruning
+    * metadata). */
   private def writeMetadataJson(tableDir: File, version: Int,
-      snapshotId: Long, extra0: String,
-      summary: Map[String, String] = Map.empty): Unit = {
-    val metaDir = new File(tableDir, "metadata")
-    val extra =
-      if (extra0.nonEmpty) extra0 else carryForwardExtra(metaDir, version)
-    val prior = new File(metaDir, s"v${version - 1}.metadata.json")
-    val priorSnaps: Seq[String] =
-      if (!prior.isFile) Seq.empty
-      else {
-        val pm = mapper.readTree(new String(
-          java.nio.file.Files.readAllBytes(prior.toPath), UTF_8))
-        val arr = pm.get("snapshots")
-        (0 until arr.size()).map(i => arr.get(i).toString)
-          .filterNot(_.contains(s""""snapshot-id":$snapshotId"""))
-      }
+      snapshotId: Long, manifestList: String, extra0: String,
+      summary: Map[String, String]): Unit = {
+    val prior = new File(tableDir, s"metadata/v${version - 1}.metadata.json")
+    val pm = if (!prior.isFile) None else Some(mapper.readTree(new String(
+      java.nio.file.Files.readAllBytes(prior.toPath), UTF_8)))
+    val extra = if (extra0.nonEmpty) extra0 else pm.map(m =>
+      Seq("schema", "schemas", "current-schema-id", "partition-specs",
+        "default-spec-id")
+        .flatMap(k => Option(m.get(k)).map(v => s""","$k":${v.toString}"""))
+        .mkString).getOrElse("")
+    val priorSnaps: Seq[String] = pm.toSeq.flatMap { m =>
+      val arr = m.get("snapshots")
+      (0 until arr.size()).map(i => arr.get(i).toString)
+        .filterNot(_.contains(s""""snapshot-id":$snapshotId"""))
+    }
     // real writers stamp timestamp-ms + parent-snapshot-id on every
     // snapshot — $history and timestamp time travel read them
-    val parent: Option[Long] =
-      if (!prior.isFile) None
-      else {
-        val pm = mapper.readTree(new String(
-          java.nio.file.Files.readAllBytes(prior.toPath), UTF_8))
-        Option(pm.get("current-snapshot-id")).map(_.asLong)
-          .filter(_ != snapshotId)
-      }
+    val parent: Option[Long] = pm.flatMap(m =>
+      Option(m.get("current-snapshot-id")).map(_.asLong)
+        .filter(_ != snapshotId))
     val summaryJson =
       if (summary.isEmpty) ""
       else summary.toSeq.sortBy(_._1).map { case (k, v) =>
@@ -1019,19 +1025,14 @@ object IcebergTable {
         parent.map(p => s""","parent-snapshot-id":$p""").getOrElse("") +
         s""","timestamp-ms":${System.currentTimeMillis()}""" +
         summaryJson +
-        s""","manifest-list":"metadata/snap-$snapshotId.avro"}"""))
+        s""","manifest-list":"$manifestList"}"""))
       .mkString("[", ",", "]")
     val metaJson =
       s"""{"format-version":1,"table-uuid":"graft-fixture","location":
          |"${tableDir.getPath}","current-snapshot-id":$snapshotId,
          |"snapshots":$snapJson$extra}"""
         .stripMargin.replace("\n", "")
-    java.nio.file.Files.write(
-      new File(metaDir, s"v$version.metadata.json").toPath,
-      metaJson.getBytes(UTF_8))
-    java.nio.file.Files.write(
-      new File(metaDir, "version-hint.text").toPath,
-      version.toString.getBytes(UTF_8))
+    publishMetadata(tableDir, version, metaJson)
   }
 
   /** One entry of a PARTITIONED manifest: `partition` is the transformed
@@ -1040,9 +1041,11 @@ object IcebergTable {
       partition: Seq[(String, Any)], content: Int = 0,
       addedSnapshotId: Long = -1L)
 
-  /** Manifest whose data_file records carry the partition tuple. */
-  private def writePartitionedManifest(metaDir: File, snapshotId: Long,
-      entries: Seq[PartEntry]): File = {
+  /** Write `entries` as manifest `f` of snapshot `snapshotId` — the one
+    * manifest-entry builder. The data_file records carry a partition
+    * record when the entries carry partition tuples. */
+  private def writeManifest(f: File, snapshotId: Long,
+      entries: Seq[PartEntry]): Unit = {
     def leafType(v: Any): String = v match {
       case _: Int | _: java.lang.Integer => "int"
       case _: Long | _: java.lang.Long => "long"
@@ -1050,32 +1053,37 @@ object IcebergTable {
       case other => throw new IllegalArgumentException(
         s"partition value type unsupported: $other")
     }
-    val partFieldsJson = entries.head.partition.map { case (n, v) =>
-      s"""{"name":"$n","type":["null","${leafType(v)}"],"default":null}"""
-    }.mkString("[", ",", "]")
-    val entrySchema = new Schema.Parser().parse(
-      s"""{"type":"record","name":"manifest_entry","fields":[
-         |{"name":"status","type":"int"},
-         |{"name":"snapshot_id","type":"long"},
-         |{"name":"data_file","type":{"type":"record","name":"r2","fields":[
-         |{"name":"content","type":"int"},
-         |{"name":"file_path","type":"string"},
-         |{"name":"file_format","type":"string"},
-         |{"name":"partition","type":{"type":"record","name":"r102","fields":$partFieldsJson}},
-         |{"name":"record_count","type":"long"},
-         |{"name":"file_size_in_bytes","type":"long"}]}}]}"""
-        .stripMargin.replace("\n", ""))
+    val entrySchema =
+      if (entries.forall(_.partition.isEmpty)) manifestEntrySchema
+      else {
+        val partFieldsJson = entries.head.partition.map { case (n, v) =>
+          s"""{"name":"$n","type":["null","${leafType(v)}"],"default":null}"""
+        }.mkString("[", ",", "]")
+        new Schema.Parser().parse(
+          s"""{"type":"record","name":"manifest_entry","fields":[
+             |{"name":"status","type":"int"},
+             |{"name":"snapshot_id","type":"long"},
+             |{"name":"data_file","type":{"type":"record","name":"r2","fields":[
+             |{"name":"content","type":"int"},
+             |{"name":"file_path","type":"string"},
+             |{"name":"file_format","type":"string"},
+             |{"name":"partition","type":{"type":"record","name":"r102","fields":$partFieldsJson}},
+             |{"name":"record_count","type":"long"},
+             |{"name":"file_size_in_bytes","type":"long"}]}}]}"""
+            .stripMargin.replace("\n", ""))
+      }
     val dfSchema = entrySchema.getField("data_file").schema()
-    val partSchema = dfSchema.getField("partition").schema()
-    val manifest = new File(metaDir, s"manifest-$snapshotId.avro")
-    writeAvro(manifest, entrySchema, entries.map { e =>
-      val pr = new GenericData.Record(partSchema)
-      e.partition.foreach { case (n, v) => pr.put(n, v) }
+    val partSchema = Option(dfSchema.getField("partition")).map(_.schema())
+    writeAvro(f, entrySchema, entries.map { e =>
       val df = new GenericData.Record(dfSchema)
       df.put("content", e.content)
       df.put("file_path", e.dataFile)
       df.put("file_format", "PARQUET")
-      df.put("partition", pr)
+      partSchema.foreach { ps =>
+        val pr = new GenericData.Record(ps)
+        e.partition.foreach { case (n, v) => pr.put(n, v) }
+        df.put("partition", pr)
+      }
       df.put("record_count", 0L)
       df.put("file_size_in_bytes", 0L)
       val r = new GenericData.Record(entrySchema)
@@ -1085,7 +1093,6 @@ object IcebergTable {
       r.put("data_file", df)
       r
     })
-    manifest
   }
 
   /** Write a partitioned snapshot: manifest entries carry the partition
@@ -1099,18 +1106,6 @@ object IcebergTable {
       specFields: Seq[(String, String, String)],
       entries: Seq[PartEntry]): Unit = {
     require(entries.nonEmpty, "partitioned commit needs entries")
-    val metaDir = new File(tableDir, "metadata")
-    metaDir.mkdirs()
-    val manifest = writePartitionedManifest(metaDir, snapshotId, entries)
-    val mlist = new File(metaDir, s"snap-$snapshotId.avro")
-    writeAvro(mlist, manifestListSchema, Seq {
-      val r = new GenericData.Record(manifestListSchema)
-      r.put("manifest_path", s"metadata/manifest-$snapshotId.avro")
-      r.put("manifest_length", manifest.length())
-      r.put("partition_spec_id", 0)
-      r.put("added_snapshot_id", snapshotId)
-      r
-    })
     val schemaJson = schemaFields.zipWithIndex.map { case ((n, t), i) =>
       s"""{"id":${i + 1},"name":"$n","required":false,"type":"$t"}"""
     }.mkString("""{"type":"struct","fields":[""", ",", "]}")
@@ -1119,8 +1114,9 @@ object IcebergTable {
     val specJson = specFields.zipWithIndex.map { case ((n, tr, src), i) =>
       s"""{"name":"$n","transform":"$tr","source-id":${srcIds(src)},"field-id":${1000 + i}}"""
     }.mkString("""[{"spec-id":0,"fields":[""", ",", "]}]")
-    writeMetadataJson(tableDir, version, snapshotId,
-      extra0 = s""","schema":$schemaJson,"partition-specs":$specJson,"default-spec-id":0""")
+    commitManifests(tableDir, version, snapshotId, snapshotId.toString,
+      entries, carried = Nil,
+      extra = s""","schema":$schemaJson,"partition-specs":$specJson,"default-spec-id":0""")
   }
 
   // ---------- writer: INSERT INTO (append snapshot)
@@ -1133,67 +1129,36 @@ object IcebergTable {
   def appendSnapshot(tableDir: File, version: Int, snapshotId: Long,
       entries: Seq[Entry],
       summary: Map[String, String] = Map.empty): Unit =
-    appendWith(tableDir, version, snapshotId, summary, metaDir => {
-      val manifest = new File(metaDir, s"manifest-$snapshotId.avro")
-      writeAvro(manifest, manifestEntrySchema, entries.map { e =>
-        val df = new GenericData.Record(
-          manifestEntrySchema.getField("data_file").schema())
-        df.put("content", e.content)
-        df.put("file_path", e.dataFile)
-        df.put("file_format", "PARQUET")
-        df.put("record_count", 0L)
-        df.put("file_size_in_bytes", 0L)
-        val r = new GenericData.Record(manifestEntrySchema)
-        r.put("status", e.status)
-        r.put("snapshot_id",
-          if (e.addedSnapshotId >= 0) e.addedSnapshotId else snapshotId)
-        r.put("data_file", df)
-        r
-      })
-      manifest
-    })
+    appendSnapshotPartitioned(tableDir, version, snapshotId,
+      entries.map(partEntry), summary)
 
   /** Fast-append of PARTITIONED entries (transform-partitioned insert). */
   def appendSnapshotPartitioned(tableDir: File, version: Int,
       snapshotId: Long, entries: Seq[PartEntry],
-      summary: Map[String, String] = Map.empty): Unit =
-    appendWith(tableDir, version, snapshotId, summary,
-      writePartitionedManifest(_, snapshotId, entries))
+      summary: Map[String, String] = Map.empty): Unit = {
+    val hinted = new File(tableDir, "metadata/version-hint.text").isFile
+    fastAppend(tableDir, if (hinted) Some(loadMeta(tableDir)) else None,
+      version, snapshotId, entries, summary)
+  }
 
-  private def appendWith(tableDir: File, version: Int, snapshotId: Long,
-      summary: Map[String, String], mkManifest: File => File): Unit = {
-    val metaDir = new File(tableDir, "metadata")
-    metaDir.mkdirs()
-    // prior manifests (empty for a brand-new table)
-    val priorManifests: Seq[(String, Long)] = {
-      val hint = new File(metaDir, "version-hint.text")
-      if (!hint.isFile) Seq.empty
-      else {
-        val meta = loadMeta(tableDir)
-        val cur = meta.get("current-snapshot-id").asLong
-        val snaps = meta.get("snapshots")
-        (0 until snaps.size()).map(snaps.get)
-          .find(_.get("snapshot-id").asLong == cur)
-          .map(_.get("manifest-list").asText).toSeq
-          .flatMap(ml => avroRecords(resolve(tableDir, ml))
-            .map(r => (r.get("manifest_path").toString,
-              r.get("added_snapshot_id").asInstanceOf[Long])))
-      }
+  /** Fast-append over the metadata `base` a writer read (None for a
+    * brand-new table): the current snapshot's manifests carry forward. */
+  private def fastAppend(tableDir: File,
+      base: Option[com.fasterxml.jackson.databind.JsonNode], version: Int,
+      snapshotId: Long, entries: Seq[PartEntry],
+      summary: Map[String, String] = Map.empty): Unit = {
+    val carried = base.toSeq.flatMap { meta =>
+      val cur = meta.get("current-snapshot-id").asLong
+      val snaps = meta.get("snapshots")
+      (0 until snaps.size()).map(snaps.get)
+        .find(_.get("snapshot-id").asLong == cur)
+        .map(_.get("manifest-list").asText).toSeq
+        .flatMap(ml => avroRecords(resolve(tableDir, ml))
+          .map(r => (r.get("manifest_path").toString,
+            r.get("added_snapshot_id").asInstanceOf[Long])))
     }
-    mkManifest(metaDir)
-    val mlist = new File(metaDir, s"snap-$snapshotId.avro")
-    val all = priorManifests :+
-      (s"metadata/manifest-$snapshotId.avro", snapshotId)
-    writeAvro(mlist, manifestListSchema, all.map { case (p, sid) =>
-      val r = new GenericData.Record(manifestListSchema)
-      r.put("manifest_path", p)
-      r.put("manifest_length", resolve(tableDir, p).length())
-      r.put("partition_spec_id", 0)
-      r.put("added_snapshot_id", sid)
-      r
-    })
-    writeMetadataJson(tableDir, version, snapshotId, extra0 = "",
-      summary = summary)
+    commitManifests(tableDir, version, snapshotId, uniqueTag(snapshotId),
+      entries, carried, summary = summary)
   }
 
   /** INSERT INTO (append) an Iceberg table — the reference's
@@ -1215,7 +1180,13 @@ object IcebergTable {
     * streaming sinks use for exactly-once); a batch at-or-below the
     * table's watermark for that appId is skipped and None returned. */
   def insertAppendTxn(s: SparkSession, tableDir: String, df: DataFrame,
-      txn: Option[(String, Long)]): Option[Long] = {
+      txn: Option[(String, Long)]): Option[Long] =
+    append(s, tableDir, df, txn).map(_._1)
+
+  /** [[insertAppendTxn]] returning (snapshot id, rows written); the row
+    * count comes from the staged files' footers, not a table scan. */
+  private[graft] def append(s: SparkSession, tableDir: String,
+      df: DataFrame, txn: Option[(String, Long)]): Option[(Long, Long)] = {
     import org.apache.spark.sql.functions.col
     val dir = new File(tableDir).getCanonicalFile
     txn.foreach { case (app, ver) =>
@@ -1224,7 +1195,7 @@ object IcebergTable {
     val summary = txn.map { case (app, ver) =>
       Map(s"graft.txn.$app" -> ver.toString)
     }.getOrElse(Map.empty[String, String])
-    val meta = loadMeta(dir)
+    val (meta, snapId, version) = writeBase(dir)
     val spec = partitionSpec(meta)
     val tableSchema = read(s, dir.getPath).schema
     require(df.schema.fields.map(f => (f.name, f.dataType)).sortBy(_._1)
@@ -1232,73 +1203,26 @@ object IcebergTable {
         .sortBy(_._1)),
       s"INSERT schema ${df.schema.simpleString} does not match table " +
         s"schema ${tableSchema.simpleString}")
-    val snaps = meta.get("snapshots")
-    val snapId = (0 until snaps.size())
-      .map(snaps.get(_).get("snapshot-id").asLong).foldLeft(0L)(math.max) + 1
-    val hint = new File(dir, "metadata/version-hint.text")
-    val version = new String(java.nio.file.Files.readAllBytes(hint.toPath),
-      UTF_8).trim.toInt + 1
-    val dataDir = new File(dir, "data")
-    dataDir.mkdirs()
-    val staging = new File(dataDir, s".staging_insert_$snapId")
     val src = df.select(tableSchema.fieldNames.map(col).toIndexedSeq: _*)
-    def rmRec(f: File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRec)
-      f.delete()
+    // transform-partitioned tables write through partitionBy on helper
+    // columns holding the TRANSFORMED values; the files land flat in
+    // data/ and the helpers' values become the manifest tuples
+    val helpers = spec.indices.map(i => s"__gpt_$i")
+    val withParts = spec.zip(helpers).foldLeft(src) { case (acc, (sf, h)) =>
+      acc.withColumn(h, transformCol(sf, tableSchema(sf.source).dataType))
     }
-    if (spec.isEmpty) {
-      src.write.parquet(staging.getPath)
-      val entries = staging.listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .sortBy(_.getName).zipWithIndex.map { case (p, i) =>
-          val name = f"insert-$snapId-$i%05d.parquet"
-          java.nio.file.Files.move(p.toPath,
-            new File(dataDir, name).toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          Entry(1, s"data/$name")
-        }.toSeq
-      rmRec(staging)
-      require(entries.nonEmpty, "INSERT produced no data files")
-      appendSnapshot(dir, version, snapId, entries, summary)
-    } else {
-      val withParts = spec.zipWithIndex.foldLeft(src) {
-        case (acc, (sf, i)) => acc.withColumn(s"__gpt_$i",
-          transformCol(sf, tableSchema(sf.source).dataType))
-      }
-      withParts.write
-        .partitionBy(spec.indices.map(i => s"__gpt_$i"): _*)
-        .parquet(staging.getPath)
-      val parsers =
-        spec.map(sf => partParser(sf, tableSchema(sf.source).dataType))
-      val entries = Seq.newBuilder[PartEntry]
-      var i = 0
-      def walk(d: File, vals: Map[Int, Any]): Unit =
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .sortBy(_.getName).foreach {
-            case sub if sub.isDirectory && sub.getName.contains("=") =>
-              val Array(k, v) = sub.getName.split("=", 2)
-              val idx = k.stripPrefix("__gpt_").toInt
-              val dv = java.net.URLDecoder.decode(v, "UTF-8")
-              val value = if (dv == "__HIVE_DEFAULT_PARTITION__") null
-              else parsers(idx)(dv)
-              walk(sub, vals + (idx -> value))
-            case f if f.isFile && f.getName.endsWith(".parquet") =>
-              val name = f"insert-$snapId-$i%05d.parquet"
-              i += 1
-              java.nio.file.Files.move(f.toPath,
-                new File(dataDir, name).toPath,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-              entries += PartEntry(1, s"data/$name",
-                spec.zipWithIndex.map { case (sf, j) => sf.name -> vals(j) })
-            case _ =>
-          }
-      walk(staging, Map.empty)
-      rmRec(staging)
-      val es = entries.result()
-      require(es.nonEmpty, "INSERT produced no data files")
-      appendSnapshotPartitioned(dir, version, snapId, es, summary)
-    }
-    Some(snapId)
+    val parsers =
+      spec.map(sf => partParser(sf, tableSchema(sf.source).dataType))
+    val staged = LakeFiles.stage(withParts, dir, helpers)(_ =>
+      LakeFiles.unique(s"data/insert-$snapId"))
+    require(staged.nonEmpty, "INSERT produced no data files")
+    fastAppend(dir, Some(meta), version, snapId, staged.map { f =>
+      PartEntry(1, f.path, spec.zip(helpers.zip(parsers)).map {
+        case (sf, (h, parse)) =>
+          sf.name -> Option(f.partition(h)).map(parse).orNull
+      })
+    }, summary)
+    Some((snapId, staged.map(_.rows).sum))
   }
 
   /** Latest committed `graft.txn.<appId>` watermark across the table's
@@ -1329,21 +1253,16 @@ object IcebergTable {
       condition: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
     val dir = new File(tableDir).getCanonicalFile
-    val meta = loadMeta(dir)
+    val (meta, snapId, version) = writeBase(dir)
     val cur = meta.get("current-snapshot-id").asLong
     val matched = scan(s, dir.getPath, cur, Seq.empty, keepTags = true)
       .filter(coalesce(condition, lit(false)))
       .select(col("__fp").as("file_path"), col("__pos").as("pos"))
     val n = matched.count()
     if (n == 0L) return 0L
-    val snaps = meta.get("snapshots")
-    val snapId = (0 until snaps.size())
-      .map(snaps.get(_).get("snapshot-id").asLong).foldLeft(0L)(math.max) + 1
-    val hint = new File(dir, "metadata/version-hint.text")
-    val version = new String(java.nio.file.Files.readAllBytes(hint.toPath),
-      UTF_8).trim.toInt + 1
-    val rel = writeDataFile(matched, dir, f"delete-$snapId%05d.parquet")
-    appendSnapshot(dir, version, snapId, Seq(Entry(1, rel, content = 1)))
+    val rel = writeDataFile(matched, dir, LakeFiles.unique(s"delete-$snapId"))
+    fastAppend(dir, Some(meta), version, snapId,
+      Seq(PartEntry(1, rel, Seq.empty, content = 1)))
     n
   }
 
@@ -1362,7 +1281,7 @@ object IcebergTable {
     import org.apache.spark.sql.functions._
     require(sets.nonEmpty, "UPDATE needs SET columns")
     val dir = new File(tableDir).getCanonicalFile
-    val meta = loadMeta(dir)
+    val (meta, snapId, version) = writeBase(dir)
     val cur = meta.get("current-snapshot-id").asLong
     val tableSchema = read(s, dir.getPath).schema
     sets.keys.foreach(k => require(tableSchema.fieldNames.contains(k),
@@ -1373,24 +1292,18 @@ object IcebergTable {
     try {
       val n = matched.count()
       if (n == 0L) return 0L
-      val snaps = meta.get("snapshots")
-      val snapId = (0 until snaps.size())
-        .map(snaps.get(_).get("snapshot-id").asLong)
-        .foldLeft(0L)(math.max) + 1
-      val hint = new File(dir, "metadata/version-hint.text")
-      val version = new String(
-        java.nio.file.Files.readAllBytes(hint.toPath), UTF_8).trim.toInt + 1
       val delRel = writeDataFile(
         matched.select(col("__fp").as("file_path"), col("__pos").as("pos")),
-        dir, f"delete-$snapId%05d.parquet")
+        dir, LakeFiles.unique(s"delete-$snapId"))
       val updated = matched.select(tableSchema.fields.map { f =>
         sets.get(f.name).map(_.cast(f.dataType).as(f.name))
           .getOrElse(col(f.name))
       }.toIndexedSeq: _*)
       val dataRel = writeDataFile(updated, dir,
-        f"update-$snapId%05d.parquet")
-      appendSnapshot(dir, version, snapId, Seq(
-        Entry(1, delRel, content = 1), Entry(1, dataRel)))
+        LakeFiles.unique(s"update-$snapId"))
+      fastAppend(dir, Some(meta), version, snapId, Seq(
+        PartEntry(1, delRel, Seq.empty, content = 1),
+        PartEntry(1, dataRel, Seq.empty)))
       n
     } finally matched.unpersist()
   }
@@ -1416,7 +1329,7 @@ object IcebergTable {
       require(!source.columns.contains(c),
         s"MERGE source may not have a column named $c"))
     val dir = new File(tableDir).getCanonicalFile
-    val meta = loadMeta(dir)
+    val (meta, snapId, version) = writeBase(dir)
     val cur = meta.get("current-snapshot-id").asLong
     val tableSchema = read(s, dir.getPath).schema
     (matchedUpdate.keySet ++ notMatchedInsert.toSeq.flatMap(_.keySet))
@@ -1460,23 +1373,16 @@ object IcebergTable {
       val nDead = dead.count()
       val anyNew = newRows.exists(_.limit(1).count() > 0)
       if (nDead == 0 && !anyNew) return MergeStats(0, 0, 0)
-      val snaps = meta.get("snapshots")
-      val snapId = (0 until snaps.size())
-        .map(snaps.get(_).get("snapshot-id").asLong)
-        .foldLeft(0L)(math.max) + 1
-      val hint = new File(dir, "metadata/version-hint.text")
-      val version = new String(
-        java.nio.file.Files.readAllBytes(hint.toPath), UTF_8).trim.toInt + 1
-      val entries = Seq.newBuilder[Entry]
+      val entries = Seq.newBuilder[PartEntry]
       if (nDead > 0)
-        entries += Entry(1, writeDataFile(
+        entries += PartEntry(1, writeDataFile(
           dead.select(col("__fp").as("file_path"), col("__pos").as("pos")),
-          dir, f"delete-$snapId%05d.parquet"), content = 1)
+          dir, LakeFiles.unique(s"delete-$snapId")), Seq.empty, content = 1)
       newRows.filter(_ => anyNew).foreach { nr =>
-        entries += Entry(1, writeDataFile(nr, dir,
-          f"merge-$snapId%05d.parquet"))
+        entries += PartEntry(1, writeDataFile(nr, dir,
+          LakeFiles.unique(s"merge-$snapId")), Seq.empty)
       }
-      appendSnapshot(dir, version, snapId, entries.result())
+      fastAppend(dir, Some(meta), version, snapId, entries.result())
       MergeStats(updated, deleted, inserted)
     } finally matches.unpersist()
   }
@@ -1549,17 +1455,7 @@ object IcebergTable {
 
   /** Write `df` as one parquet data file under data/ (table-relative
     * name returned). */
-  def writeDataFile(df: DataFrame, tableDir: File, name: String): String = {
-    val dataDir = new File(tableDir, "data")
-    dataDir.mkdirs()
-    val staging = new File(dataDir, s".staging_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(staging.getPath)
-    val part = staging.listFiles().find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath,
-      new File(dataDir, name).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    staging.listFiles().foreach(_.delete())
-    staging.delete()
-    s"data/$name"
-  }
+  def writeDataFile(df: DataFrame, tableDir: File, name: String): String =
+    LakeFiles.stage(df.coalesce(1), tableDir)(_ => s"data/$name")
+      .head.path
 }

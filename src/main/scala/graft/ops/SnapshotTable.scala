@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   *
   * Layout: `<base>/v<N>/` parquet snapshots + `<base>/_current` holding
   * the committed version number. The pointer flip is
-  * `Files.move(..., ATOMIC_MOVE)` — atomic on POSIX; on object stores the
+  * [[LakeFiles.publishReplace]] (temp file + `ATOMIC_MOVE`) — atomic on
+  * POSIX; on object stores the
   * equivalent is a metastore pointer swap, which is exactly what the
   * reference's connectors do at 100 TB (the data files are immutable
   * either way, so the mechanism scales: commit cost is one pointer write,
@@ -93,13 +94,8 @@ object SnapshotTable {
   }
 
   /** Flip the pointer to `next` atomically (write-temp + atomic rename). */
-  private[ops] def flipPointer(base: java.io.File, next: Int): Unit = {
-    val tmp = new java.io.File(base, s"_current.tmp$next")
-    java.nio.file.Files.write(tmp.toPath, next.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, pointer(base).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private[ops] def flipPointer(base: java.io.File, next: Int): Unit =
+    LakeFiles.publishReplace(pointer(base), next.toString.getBytes("UTF-8"))
 
   /** Write `df` as the next snapshot and commit it atomically. Returns the
     * committed version. Concurrent plain writes both land (distinct

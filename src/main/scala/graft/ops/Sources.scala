@@ -20,6 +20,38 @@ object Sources {
 
   private def tmp(name: String): String = s"/tmp/graft_sources/$name"
 
+  private def rmRec(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRec)
+    f.delete()
+  }
+
+  /** One root per JVM for the table fixtures the gates build, so a JVM
+    * never reuses a fixture an older build left in the temp directory.
+    * Removed when the JVM exits. */
+  private lazy val fixtureRoot: java.io.File = {
+    val root = java.nio.file.Files.createTempDirectory("graft_fixtures_")
+      .toFile
+    sys.addShutdownHook(rmRec(root))
+    root
+  }
+
+  /** The fixture directory `<kind>_<hash of dir>` under the JVM's fixture
+    * root. `build` runs unless the fixture's done marker exists, after
+    * wiping whatever an earlier, failed build left there — the writers'
+    * put-if-absent commits would refuse to overwrite it. */
+  private[graft] def fixture(kind: String, dir: String)
+      (build: java.io.File => Unit): java.io.File = synchronized {
+    val name = s"${kind}_${Integer.toHexString(dir.hashCode)}"
+    val base = new java.io.File(fixtureRoot, name)
+    val done = new java.io.File(fixtureRoot, s"$name.done")
+    if (!done.exists()) {
+      rmRec(base)
+      build(base)
+      require(done.createNewFile(), s"fixture $name built twice")
+    }
+    base
+  }
+
   def csvRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val out = tmp("nation_csv")
     val src = t(s, dir, "nation")
@@ -301,10 +333,7 @@ object Sources {
     * ignored the <= 1000 rows would double and the hash would differ; the
     * oracle is the plain predicate over the base table. */
   def deltaRead(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_delta_" + Integer.toHexString(dir.hashCode))
-    val v1 = new java.io.File(base, "_delta_log/00000000000000000001.json")
-    if (!v1.exists()) {
+    val base = fixture("delta", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -335,9 +364,7 @@ object Sources {
     * visible stale slice duplicates, a visible inflight file adds rows —
     * either breaks the hash. */
   def hudiRead(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_hudi_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, ".hoodie/002.commit").exists()) {
+    val base = fixture("hudi", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -366,9 +393,7 @@ object Sources {
     * ignored the logs — the CoW path — would keep the stale statuses and
     * the deleted rows, and the hash would differ. */
   def hudiMorRead(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_hudi_mor_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, ".hoodie/003.deltacommit").exists()) {
+    val base = fixture("hudi_mor", dir) { base =>
       base.mkdirs()
       HudiCow.writeProperties(base, "MERGE_ON_READ", "o_orderkey")
       val o = t(s, dir, "orders").select("o_orderkey", "o_orderstatus")
@@ -397,9 +422,7 @@ object Sources {
     * <= 500 and (500, 1500]. Reading the current snapshot must skip the
     * tombstoned entry or rows <= 1000 double and the hash breaks. */
   def icebergRead(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_iceberg_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "metadata/v2.metadata.json").exists()) {
+    val base = fixture("iceberg", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -428,9 +451,7 @@ object Sources {
     * non-pruning reader fails the gate loudly) and (b) apply the
     * residual filter for exact rows. */
   def icebergTransformsRead(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_iceberg_tr_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "metadata/v1.metadata.json").exists()) {
+    val base = fixture("iceberg_tr", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -460,9 +481,7 @@ object Sources {
     * _metadata.row_index — ignored deletes leave 5 extra rows and break
     * the hash. */
   def icebergV2Deletes(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_iceberg_v2_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "metadata/v1.metadata.json").exists()) {
+    val base = fixture("iceberg_v2", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -484,10 +503,7 @@ object Sources {
     * replay. A broken commit (missing adds, wrong partitionValues, or a
     * non-atomic half-write) changes the hash. */
   def dmlInsertDelta(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_delta_ins_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "_delta_log/00000000000000000001.json")
-        .exists()) {
+    val base = fixture("delta_ins", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -511,10 +527,7 @@ object Sources {
     * table. A rewrite that dropped unaffected files, resurrected removed
     * rows, or evaluated SET against post-update rows changes the hash. */
   def dmlDeltaCow(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_delta_cow_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "_delta_log/00000000000000000002.json")
-        .exists()) {
+    val base = fixture("delta_cow", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -542,9 +555,7 @@ object Sources {
     * after the delete and must be untouched by it. The gate re-reads the
     * final snapshot through the sequence-scoped reader. */
   def dmlDeleteIceberg(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_iceberg_del_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "metadata/v3.metadata.json").exists()) {
+    val base = fixture("iceberg_del", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -567,9 +578,7 @@ object Sources {
     * ordinal 2 and the deleted rows' IMAGES (resolved from the
     * positional-delete tuples against the pre-snapshot scan) at 3. */
   def srcIcebergCdf(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_iceberg_cdf_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "metadata/v3.metadata.json").exists()) {
+    val base = fixture("iceberg_cdf", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -595,15 +604,7 @@ object Sources {
     * partition tuples), then the engine APPENDS through the normal
     * commit path to prove the imported table is writable. */
   def dmlConvertDelta(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_delta_conv_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "_delta_log/00000000000000000001.json")
-        .exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      rm(base)
+    val base = fixture("delta_conv", dir) { base =>
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
       o.filter(col("o_orderkey") <= 500)
@@ -624,10 +625,7 @@ object Sources {
     * positions 0..4 — the 5 smallest keys. A reader that ignored the
     * vector (the pre-guard failure mode) resurrects them → hash break. */
   def srcDeltaDv(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_delta_dv_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "_delta_log/00000000000000000000.json")
-        .exists()) {
+    val base = fixture("delta_dv", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -652,10 +650,7 @@ object Sources {
     * deleted rows at v2 (the unchanged rewritten rows cancel out in the
     * multiset diff). Read back through the SQL delta_changes() spelling. */
   def srcDeltaCdf(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_delta_cdf_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "_delta_log/00000000000000000002.json")
-        .exists()) {
+    val base = fixture("delta_cdf", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -677,9 +672,7 @@ object Sources {
     * plus the replacement/insert data file). Same clause fixture as the
     * Delta merge gate so the two formats share oracle semantics. */
   def dmlMergeIceberg(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_iceberg_mrg_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "metadata/v2.metadata.json").exists()) {
+    val base = fixture("iceberg_mrg", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -710,9 +703,7 @@ object Sources {
     * sets status 'X' on keys <= 100 and then DELETEs keys > 950 — the
     * stacked merge-on-read layers must compose. */
   def dmlUpdateIceberg(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_iceberg_upd_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "metadata/v3.metadata.json").exists()) {
+    val base = fixture("iceberg_upd", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -738,10 +729,7 @@ object Sources {
     * double-matched rewrite, or inserts leaking matched keys all change
     * the hash. */
   def dmlMergeDelta(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_delta_mrg_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "_delta_log/00000000000000000001.json")
-        .exists()) {
+    val base = fixture("delta_mrg", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -779,9 +767,7 @@ object Sources {
     * current snapshot. Time travel to the pre-insert snapshot is pinned
     * in IcebergSpec. */
   def dmlInsertIceberg(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_iceberg_ins_" + Integer.toHexString(dir.hashCode))
-    if (!new java.io.File(base, "metadata/v2.metadata.json").exists()) {
+    val base = fixture("iceberg_ins", dir) { base =>
       base.mkdirs()
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")

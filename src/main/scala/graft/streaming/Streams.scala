@@ -198,16 +198,8 @@ object Streams {
     * a sink that lost a batch, applied one twice, or let the replay
     * through changes the hash. */
   def deltaSinkE2e(s: SparkSession, dir: String): DataFrame = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_delta_sink_" + Integer.toHexString(dir.hashCode))
-    val table = new java.io.File(root, "table")
-    val done = new java.io.File(root, "_done")
-    if (!done.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      rm(root) // wipe any half-finished earlier attempt
+    val root = graft.ops.Sources.fixture("delta_sink", dir) { root =>
+      val table = new java.io.File(root, "table")
       val ev = t(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
       val in = new java.io.File(root, "in")
@@ -229,9 +221,9 @@ object Streams {
       val wm = graft.ops.DeltaLake.txnVersion(
         s, table.getPath, "stream_delta_sink")
       require(wm.contains(2L), s"txn watermark $wm, expected Some(2)")
-      done.createNewFile()
     }
-    graft.ops.DeltaLake.read(s, table.getPath).orderBy("event_id")
+    graft.ops.DeltaLake.read(s, new java.io.File(root, "table").getPath)
+      .orderBy("event_id")
   }
 
   /** End-to-end Delta SOURCE → Delta SINK incremental pipeline: table A
@@ -241,17 +233,9 @@ object Streams {
     * A source that re-emits the snapshot, misses the increment, or a
     * sink that double-applies changes the row-level hash. */
   def deltaSourceE2e(s: SparkSession, dir: String): DataFrame = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_delta_src_" + Integer.toHexString(dir.hashCode))
-    val a = new java.io.File(root, "a")
-    val b = new java.io.File(root, "b")
-    val done = new java.io.File(root, "_done")
-    if (!done.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      rm(root)
+    val root = graft.ops.Sources.fixture("delta_src", dir) { root =>
+      val a = new java.io.File(root, "a")
+      val b = new java.io.File(root, "b")
       a.mkdirs(); b.mkdirs()
       val ev = t(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
@@ -279,9 +263,9 @@ object Streams {
       graft.ops.DeltaLake.insert(s, a.getPath,
         ev.filter(col("event_id") > 5000))
       runOnce() // restart: only the appended commit flows
-      done.createNewFile()
     }
-    graft.ops.DeltaLake.read(s, b.getPath).orderBy("event_id")
+    graft.ops.DeltaLake.read(s, new java.io.File(root, "b").getPath)
+      .orderBy("event_id")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -101,6 +101,24 @@ class DeltaSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(3L -> "c", 4L -> "d"))
   }
 
+  test("checkpoint replay keeps partition values, null ones included") {
+    val dir = freshDir("ckpt_part")
+    val full = new org.apache.spark.sql.types.StructType()
+      .add("k", "long").add("p", "string")
+    DeltaLake.writeDataFile(Seq(1L).toDF("k"), dir, "a.parquet")
+    DeltaLake.writeDataFile(Seq(2L).toDF("k"), dir, "b.parquet")
+    DeltaLake.commit(dir, 0, Seq(DeltaLake.protocolAction,
+      DeltaLake.metaDataAction(full, Seq("p")),
+      DeltaLake.addAction("a.parquet", Map("p" -> "x")),
+      DeltaLake.addAction("b.parquet", Map("p" -> null))))
+    DeltaLake.writeCheckpoint(spark, dir)
+    new File(dir, "_delta_log").listFiles()
+      .filter(_.getName.endsWith(".json")).foreach(f => assert(f.delete()))
+    val out = DeltaLake.read(spark, dir.getPath).orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(out.toSeq == Seq((1L, "x"), (2L, null)))
+  }
+
   test("filters push down to the parquet scan through the replay") {
     val dir = freshDir("push")
     val df = (1L to 100L).map(i => (i, s"row$i")).toDF("k", "s")
@@ -346,22 +364,54 @@ class DeltaSpec extends AnyFunSuite {
   }
 
   test("insert writes a checkpoint every 10 commits (replay stays O(10))") {
-    val dir = freshDir("ins_ckpt")
-    val df = Seq((0L, "base")).toDF("k", "s")
+    // the cadence belongs to the shared commit: a table that receives
+    // only inserts and one that receives only updates both checkpoint
+    val writers: Seq[(String, (File, Int) => Unit, Seq[(Long, String)])] = Seq(
+      ("ins_ckpt", (dir, i) => DeltaLake.insert(spark, dir.getPath,
+        Seq((i.toLong, s"v$i")).toDF("k", "s")),
+        (0L to 9L).map(i => (i, if (i == 0) "base" else s"v$i"))),
+      ("upd_ckpt", (dir, i) => DeltaLake.update(spark, dir.getPath,
+        col("k") === 0L, Map("s" -> lit(s"u$i"))),
+        Seq((0L, "u9"))))
+    writers.foreach { case (tag, write, expected) =>
+      val dir = freshDir(tag)
+      val df = Seq((0L, "base")).toDF("k", "s")
+      DeltaLake.writeDataFile(df, dir, "f0.parquet")
+      DeltaLake.commit(dir, 0, Seq(DeltaLake.protocolAction,
+        DeltaLake.metaDataAction(df.schema),
+        DeltaLake.addAction("f0.parquet")))
+      (1 to 9).foreach(write(dir, _))
+      val logDir = new File(dir, "_delta_log")
+      assert(logDir.listFiles().exists(
+        _.getName == "00000000000000000009.checkpoint.parquet"), tag)
+      def rows = DeltaLake.read(spark, dir.getPath).orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(rows == expected, tag)
+      // the checkpoint is self-sufficient: retention may delete the commits
+      logDir.listFiles().filter(_.getName.endsWith(".json"))
+        .foreach(f => assert(f.delete()))
+      assert(rows == expected, tag)
+    }
+  }
+
+  test("commit is put-if-absent: a second commit of a version raises") {
+    val dir = freshDir("put_if_absent")
+    val df = Seq((1L, "a")).toDF("k", "s")
     DeltaLake.writeDataFile(df, dir, "f0.parquet")
     DeltaLake.commit(dir, 0, Seq(DeltaLake.protocolAction,
       DeltaLake.metaDataAction(df.schema), DeltaLake.addAction("f0.parquet")))
-    (1 to 9).foreach { i =>
-      DeltaLake.insert(spark, dir.getPath, Seq((i.toLong, s"v$i")).toDF("k", "s"))
+    val v1 = new File(dir, "_delta_log/00000000000000000001.json")
+    DeltaLake.commit(dir, 1, Seq(DeltaLake.removeAction("f0.parquet")))
+    val before = java.nio.file.Files.readAllBytes(v1.toPath)
+    // a writer that picked the same version loses instead of overwriting
+    intercept[java.util.ConcurrentModificationException] {
+      DeltaLake.commit(dir, 1, Seq(DeltaLake.addAction("f0.parquet")))
     }
-    val logDir = new File(dir, "_delta_log")
-    assert(logDir.listFiles().exists(
-      _.getName == "00000000000000000009.checkpoint.parquet"))
-    assert(DeltaLake.read(spark, dir.getPath).count() == 10)
-    // the checkpoint is self-sufficient: retention may delete the commits
-    logDir.listFiles().filter(_.getName.endsWith(".json"))
-      .foreach(f => assert(f.delete()))
-    assert(DeltaLake.read(spark, dir.getPath).count() == 10)
+    assert(java.nio.file.Files.readAllBytes(v1.toPath).sameElements(before))
+    assert(DeltaLake.read(spark, dir.getPath).count() == 0L)
+    // no temporary file is left in the log
+    assert(new File(dir, "_delta_log").list().toSet ==
+      Set("00000000000000000000.json", "00000000000000000001.json"))
   }
 
   test("INSERT INTO delta_scan / iceberg_scan works in SQL text") {

@@ -310,6 +310,29 @@ class IcebergSpec extends AnyFunSuite {
     assert(IcebergTable.read(spark, dir.getPath).count() == 3)
   }
 
+  test("metadata versions are put-if-absent: a stale writer raises") {
+    val dir = freshDir("put_if_absent")
+    val a = IcebergTable.writeDataFile(Seq((1L, "a")).toDF("k", "s"), dir,
+      "a.parquet")
+    IcebergTable.commitSnapshot(dir, 1, 1L, Seq(IcebergTable.Entry(1, a)))
+    IcebergTable.insertAppend(spark, dir.getPath,
+      Seq((2L, "b")).toDF("k", "s"))
+    val v2 = new File(dir, "metadata/v2.metadata.json")
+    val before = java.nio.file.Files.readAllBytes(v2.toPath)
+    // a writer that read v1 and commits v2 lost the race: it raises and
+    // the winner's metadata stays byte-identical
+    val b = IcebergTable.writeDataFile(Seq((3L, "c")).toDF("k", "s"), dir,
+      "b.parquet")
+    intercept[java.util.ConcurrentModificationException] {
+      IcebergTable.appendSnapshot(dir, 2, 9L, Seq(IcebergTable.Entry(1, b)))
+    }
+    assert(java.nio.file.Files.readAllBytes(v2.toPath).sameElements(before))
+    assert(IcebergTable.read(spark, dir.getPath).orderBy("k").collect()
+      .map(_.getLong(0)).toSeq == Seq(1L, 2L))
+    assert(new String(java.nio.file.Files.readAllBytes(
+      new File(dir, "metadata/version-hint.text").toPath)) == "2")
+  }
+
   test("insertAppend into a transform-partitioned table keeps pruning exact") {
     val dir = freshDir("ins_part")
     val entries = (0 until 3).map { b =>
