@@ -41,18 +41,20 @@ object Tables {
 
   /** Memoized parquet scan of an arbitrary stable path (also used for the
     * materialized TPC-DS facts — same staleness argument as above: the
-    * materializer validates/rewrites once per JVM before the first
-    * memoized read and calls [[invalidate]] on rewrite).
+    * materializer writes each fact once, before its first read).
     *
     * Callers self-joining a table get the SAME DataFrame instance twice;
     * disambiguate with df("col") via explicit aliases (`df.as("l")`), not
     * by re-reading — the analyzer's DeduplicateRelations pass handles the
     * shared ExprIds, exactly as for a reused `val` within one query.
     *
-    * Entries of STOPPED sessions evict lazily on the next call from any
-    * session (r13 ADVICE: a long-lived multi-session host would otherwise
-    * pin every dead session's DataFrames for the JVM lifetime). */
+    * Entries of STOPPED sessions evict lazily whenever a miss adds an
+    * entry (a long-lived multi-session host would otherwise pin every
+    * dead session's DataFrames for the JVM lifetime); a hit costs one
+    * lookup. */
   def scan(spark: SparkSession, path: String): DataFrame = {
+    val hit = scanMemo.get((spark, path))
+    if (hit != null) return hit
     val it = scanMemo.keySet().iterator()
     while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
     scanMemo.computeIfAbsent((spark, path), k => spark.read.parquet(k._2))

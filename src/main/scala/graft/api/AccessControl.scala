@@ -2,7 +2,6 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import scala.collection.concurrent.TrieMap
 
 /** Role-based access control statements — the reference's DCL surface
   * (SqlBase.g4:115-137,155-156: CREATE/DROP ROLE, GRANT/REVOKE roles,
@@ -31,9 +30,10 @@ import scala.collection.concurrent.TrieMap
   * Enforcement is opt-in per session (`enable(spark)`, the analog of
   * attaching an access-control plugin): when on, every plain query that
   * reaches the translate path is checked for SELECT on each referenced
-  * view before execution. State is session-keyed like every other
-  * statement family; at scale this is coordinator-side metadata — zero
-  * cost in the data plane.
+  * view before execution. State is one SessionScope catalog slot, so the
+  * statement server's per-request clones enforce the same roles, grants
+  * and policies; at scale this is coordinator-side metadata — zero cost
+  * in the data plane.
   */
 object AccessControl {
 
@@ -41,13 +41,6 @@ object AccessControl {
     granteeType: String, adminOption: Boolean)
   private case class PrivGrant(privilege: String, table: String,
     grantee: String, granteeType: String, grantOption: Boolean, grantor: String)
-
-  private val roles = TrieMap.empty[String, Set[String]] // sid → role names
-  private val roleGrants = TrieMap.empty[String, Vector[RoleGrant]]
-  private val privGrants = TrieMap.empty[String, Vector[PrivGrant]]
-  private val users = TrieMap.empty[String, String] // sid → current user
-  private val setRole = TrieMap.empty[String, Option[Set[String]]] // None=ALL
-  private val enforce = TrieMap.empty[String, Boolean]
 
   // ---- row filters + column masks (reference SPI SystemAccessControl
   // .getRowFilters / .getColumnMasks returning ViewExpressions the
@@ -57,26 +50,41 @@ object AccessControl {
     grantee: String, predicate: String)
   private case class ColumnMask(table: String, column: String,
     granteeType: String, grantee: String, expression: String)
-  private val rowFilters = TrieMap.empty[String, Vector[RowFilter]]
-  private val columnMasks = TrieMap.empty[String, Vector[ColumnMask]]
+
+  val BuiltinRoles: Set[String] = Set("admin", "public")
+  private val Privileges = Seq("SELECT", "INSERT", "DELETE", "UPDATE")
+
+  /** One session's access-control state. */
+  private case class Acl(
+    roles: Set[String] = BuiltinRoles,
+    roleGrants: Vector[RoleGrant] = Vector.empty,
+    privGrants: Vector[PrivGrant] = Vector.empty,
+    user: String = "graft",
+    setRole: Option[Set[String]] = None, // None = SET ROLE ALL
+    enforce: Boolean = false,
+    rowFilters: Vector[RowFilter] = Vector.empty,
+    columnMasks: Vector[ColumnMask] = Vector.empty)
+
+  private val state = SessionScope.catalog(Acl())
+  private def acl(spark: SparkSession): Acl = SessionScope.get(spark, state)
+  private def edit(spark: SparkSession)(f: Acl => Acl): Unit =
+    SessionScope.update(spark, state)(f)
 
   def setRowFilter(spark: SparkSession, table: String, granteeType: String,
       grantee: String, predicate: String): Unit =
-    rowFilters.updateWith(sid(spark))(v => Some(v.getOrElse(Vector.empty) :+
+    edit(spark)(a => a.copy(rowFilters = a.rowFilters :+
       RowFilter(table.toLowerCase, granteeType.toUpperCase, grantee, predicate)))
   def setColumnMask(spark: SparkSession, table: String, column: String,
       granteeType: String, grantee: String, expression: String): Unit =
-    columnMasks.updateWith(sid(spark))(v => Some(v.getOrElse(Vector.empty) :+
+    edit(spark)(a => a.copy(columnMasks = a.columnMasks :+
       ColumnMask(table.toLowerCase, column.toLowerCase,
         granteeType.toUpperCase, grantee, expression)))
-  def clearPolicies(spark: SparkSession): Unit = {
-    rowFilters.remove(sid(spark)); columnMasks.remove(sid(spark))
-  }
+  def clearPolicies(spark: SparkSession): Unit =
+    edit(spark)(_.copy(rowFilters = Vector.empty, columnMasks = Vector.empty))
 
-  private def appliesTo(id: String, user: String, granteeType: String,
-      grantee: String): Boolean =
-    (granteeType == "USER" && grantee == user) ||
-      (granteeType == "ROLE" && enabledRoles(id, user).contains(grantee))
+  private def appliesTo(a: Acl, granteeType: String, grantee: String): Boolean =
+    (granteeType == "USER" && grantee == a.user) ||
+      (granteeType == "ROLE" && enabledRoles(a).contains(grantee))
 
   /** Apply the identity's row filters and column masks by SECURING THE
     * VIEW for the duration of one statement: every policied temp view is
@@ -95,12 +103,9 @@ object AccessControl {
     * invisible to concurrent queries; on a directly shared session the
     * caller holds the statement scope. */
   def secureViews(spark: SparkSession, text: String): () => Unit = {
-    val id = sid(spark)
-    val user = currentUser(spark)
-    val rf = rowFilters.getOrElse(id, Vector.empty)
-      .filter(f => appliesTo(id, user, f.granteeType, f.grantee))
-    val cm = columnMasks.getOrElse(id, Vector.empty)
-      .filter(m => appliesTo(id, user, m.granteeType, m.grantee))
+    val a = acl(spark)
+    val rf = a.rowFilters.filter(f => appliesTo(a, f.granteeType, f.grantee))
+    val cm = a.columnMasks.filter(m => appliesTo(a, m.granteeType, m.grantee))
     if (rf.isEmpty && cm.isEmpty) return () => ()
     val policied = (rf.map(_.table) ++ cm.map(_.table)).distinct
       .filter(t => scala.util.Try(spark.catalog.tableExists(t)).getOrElse(false))
@@ -178,31 +183,19 @@ object AccessControl {
     () => originals.foreach { case (t, orig) => orig.createOrReplaceTempView(t) }
   }
 
-  val BuiltinRoles: Set[String] = Set("admin", "public")
-  private val Privileges = Seq("SELECT", "INSERT", "DELETE", "UPDATE")
+  def currentUser(spark: SparkSession): String = acl(spark).user
+  def setUser(spark: SparkSession, u: String): Unit = edit(spark)(_.copy(user = u))
 
-  private def sid(spark: SparkSession) = DdlStatements.sessionId(spark)
-  private def rolesOf(id: String) = roles.getOrElseUpdate(id, BuiltinRoles)
+  def enable(spark: SparkSession): Unit = edit(spark)(_.copy(enforce = true))
+  def disable(spark: SparkSession): Unit = edit(spark)(_.copy(enforce = false))
 
-  def currentUser(spark: SparkSession): String =
-    users.getOrElse(sid(spark), "graft")
-  def setUser(spark: SparkSession, u: String): Unit = users.put(sid(spark), u)
+  def reset(spark: SparkSession): Unit = edit(spark)(_ => Acl())
 
-  def enable(spark: SparkSession): Unit = enforce.put(sid(spark), true)
-  def disable(spark: SparkSession): Unit = enforce.remove(sid(spark))
-
-  def reset(spark: SparkSession): Unit = {
-    val id = sid(spark)
-    roles.remove(id); roleGrants.remove(id); privGrants.remove(id)
-    users.remove(id); setRole.remove(id); enforce.remove(id)
-    rowFilters.remove(id); columnMasks.remove(id)
-  }
-
-  /** Transitive closure of role grants from an identity (user + public). */
-  private def applicableRoles(id: String, user: String): Set[String] = {
-    val grants = roleGrants.getOrElse(id, Vector.empty)
+  /** Transitive closure of role grants from the current user (+ public). */
+  private def applicableRoles(a: Acl): Set[String] = {
+    val grants = a.roleGrants
     var acc = Set("public")
-    var frontier: Set[(String, String)] = Set(("USER", user), ("ROLE", "public"))
+    var frontier: Set[(String, String)] = Set(("USER", a.user), ("ROLE", "public"))
     var done = Set.empty[(String, String)]
     while (frontier.nonEmpty) {
       done ++= frontier
@@ -214,9 +207,9 @@ object AccessControl {
     acc
   }
 
-  private def enabledRoles(id: String, user: String): Set[String] = {
-    val applicable = applicableRoles(id, user)
-    setRole.getOrElse(id, None) match {
+  private def enabledRoles(a: Acl): Set[String] = {
+    val applicable = applicableRoles(a)
+    a.setRole match {
       case None => applicable // SET ROLE ALL (default)
       case Some(sel) => sel.intersect(applicable) + "public"
     }
@@ -224,15 +217,14 @@ object AccessControl {
 
   /** SELECT check for one view name; raises the reference's message. */
   def checkSelect(spark: SparkSession, table: String): Unit = {
-    val id = sid(spark)
-    if (enforce.getOrElse(id, false)) {
-      val user = currentUser(spark)
-      val held = enabledRoles(id, user)
+    val a = acl(spark)
+    if (a.enforce) {
+      val held = enabledRoles(a)
       val ok = held.contains("admin") ||
-        privGrants.getOrElse(id, Vector.empty).exists { g =>
+        a.privGrants.exists { g =>
           g.table.equalsIgnoreCase(table) &&
             (g.privilege == "SELECT" || g.privilege == "ALL") &&
-            ((g.granteeType == "USER" && g.grantee == user) ||
+            ((g.granteeType == "USER" && g.grantee == a.user) ||
               (g.granteeType == "ROLE" && held.contains(g.grantee)))
         }
       if (!ok) throw new SecurityException(
@@ -242,7 +234,7 @@ object AccessControl {
 
   /** Check every view referenced by an analyzed plan. */
   def checkPlan(spark: SparkSession, df: DataFrame): DataFrame = {
-    if (enforce.getOrElse(sid(spark), false)) {
+    if (acl(spark).enforce) {
       val names = df.queryExecution.analyzed.collect {
         case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
           s.identifier.name
@@ -270,95 +262,95 @@ object AccessControl {
 
   def dispatch(ses: SqlSession, text: String): Option[DataFrame] = {
     val spark = ses.spark
-    val id = sid(spark)
+    val a = acl(spark)
     def missing(r: String) =
       throw new IllegalArgumentException(s"Role '$r' does not exist")
     def requireRoles(rs: Seq[String]): Unit =
-      rs.find(r => !rolesOf(id).contains(r)).foreach(missing)
+      rs.find(r => !a.roles.contains(r)).foreach(missing)
     text.trim.stripSuffix(";").trim match {
       case CreateRole(name, admin) =>
         val r = name.toLowerCase
-        if (admin != null && !rolesOf(id).contains(admin.toLowerCase) &&
-          admin.toLowerCase != currentUser(spark)) missing(admin.toLowerCase)
-        roles.put(id, rolesOf(id) + r)
-        if (admin != null)
-          addRoleGrant(id, RoleGrant(r, admin.toLowerCase, "ROLE", adminOption = true))
+        if (admin != null && !a.roles.contains(admin.toLowerCase) &&
+          admin.toLowerCase != a.user) missing(admin.toLowerCase)
+        edit(spark) { b =>
+          val created = b.copy(roles = b.roles + r)
+          if (admin == null) created
+          else addRoleGrant(created,
+            RoleGrant(r, admin.toLowerCase, "ROLE", adminOption = true))
+        }
         Some(status(spark, "CREATE ROLE"))
       case DropRole(name) =>
         val r = name.toLowerCase
         if (BuiltinRoles.contains(r))
           throw new IllegalArgumentException(s"Cannot drop role $r")
-        if (!rolesOf(id).contains(r)) missing(r)
-        roles.put(id, rolesOf(id) - r)
-        roleGrants.updateWith(id)(_.map(_.filterNot(g =>
-          g.role == r || (g.granteeType == "ROLE" && g.grantee == r))))
+        if (!a.roles.contains(r)) missing(r)
+        edit(spark)(b => b.copy(roles = b.roles - r,
+          roleGrants = b.roleGrants.filterNot(g =>
+            g.role == r || (g.granteeType == "ROLE" && g.grantee == r))))
         Some(status(spark, "DROP ROLE"))
       case GrantPriv(privs, table, gType, grantee, withOpt) =>
         val ps = parsePrivileges(privs)
         if (ps.nonEmpty) {
-          val gt = principalType(gType, grantee, id)
+          val gt = principalType(gType, grantee, a)
           if (gt == "ROLE") requireRoles(Seq(grantee.toLowerCase))
           val gn = grantee.toLowerCase
-          ps.foreach { p =>
-            addPrivGrant(id, PrivGrant(p, table.toLowerCase, gn, gt,
-              withOpt != null, currentUser(spark)))
-          }
+          edit(spark)(b => ps.foldLeft(b)((c, p) => addPrivGrant(c,
+            PrivGrant(p, table.toLowerCase, gn, gt, withOpt != null, a.user))))
           Some(status(spark, "GRANT"))
         } else None // not privilege keywords → let other dispatchers try
       case RevokePriv(privs, table, gType, grantee) =>
         val ps = parsePrivileges(privs)
         if (ps.nonEmpty) {
-          val gt = principalType(gType, grantee, id)
+          val gt = principalType(gType, grantee, a)
           val gn = grantee.toLowerCase
-          privGrants.updateWith(id)(_.map(_.filterNot(g =>
+          edit(spark)(b => b.copy(privGrants = b.privGrants.filterNot(g =>
             ps.contains(g.privilege) && g.table == table.toLowerCase &&
               g.grantee == gn && g.granteeType == gt)))
           Some(status(spark, "REVOKE"))
         } else None
       case GrantRoles(rs, gType, grantee, withAdmin) =>
         val roleList = rs.split(',').map(_.trim.toLowerCase).filter(_.nonEmpty).toSeq
-        if (roleList.forall(rolesOf(id).contains)) {
-          val gt = principalType(gType, grantee, id)
-          roleList.foreach(r => addRoleGrant(id,
-            RoleGrant(r, grantee.toLowerCase, gt, withAdmin != null)))
+        if (roleList.forall(a.roles.contains)) {
+          val gt = principalType(gType, grantee, a)
+          edit(spark)(b => roleList.foldLeft(b)((c, r) => addRoleGrant(c,
+            RoleGrant(r, grantee.toLowerCase, gt, withAdmin != null))))
           Some(status(spark, "GRANT ROLE"))
-        } else if (gType != null || roleList.exists(rolesOf(id).contains)) {
+        } else if (gType != null || roleList.exists(a.roles.contains)) {
           // clearly role-shaped (explicit USER/ROLE or a known role) → raise
           requireRoles(roleList); None
         } else None // unknown single name: likely a privilege-less GRANT typo
       case RevokeRoles(rs, gType, grantee) =>
         val roleList = rs.split(',').map(_.trim.toLowerCase).filter(_.nonEmpty).toSeq
-        if (roleList.forall(rolesOf(id).contains)) {
-          val gt = principalType(gType, grantee, id)
+        if (roleList.forall(a.roles.contains)) {
+          val gt = principalType(gType, grantee, a)
           val gn = grantee.toLowerCase
-          roleGrants.updateWith(id)(_.map(_.filterNot(g =>
+          edit(spark)(b => b.copy(roleGrants = b.roleGrants.filterNot(g =>
             roleList.contains(g.role) && g.grantee == gn && g.granteeType == gt)))
           Some(status(spark, "REVOKE ROLE"))
         } else None
-      case SetRoleSt(which) => which.toUpperCase match {
-        case "ALL" => setRole.put(id, None); Some(status(spark, "SET ROLE"))
-        case "NONE" =>
-          setRole.put(id, Some(Set.empty)); Some(status(spark, "SET ROLE"))
-        case _ =>
-          val r = which.toLowerCase
-          if (!applicableRoles(id, currentUser(spark)).contains(r))
-            throw new IllegalArgumentException(s"Cannot set role $r")
-          setRole.put(id, Some(Set(r)))
-          Some(status(spark, "SET ROLE"))
-      }
+      case SetRoleSt(which) =>
+        val sel = which.toUpperCase match {
+          case "ALL" => None
+          case "NONE" => Some(Set.empty[String])
+          case _ =>
+            val r = which.toLowerCase
+            if (!applicableRoles(a).contains(r))
+              throw new IllegalArgumentException(s"Cannot set role $r")
+            Some(Set(r))
+        }
+        edit(spark)(_.copy(setRole = sel))
+        Some(status(spark, "SET ROLE"))
       case ShowRoles() =>
-        Some(strings(spark, "role_name", rolesOf(id).toSeq.sorted))
+        Some(strings(spark, "role_name", a.roles.toSeq.sorted))
       case ShowCurRoles() =>
-        Some(strings(spark, "role_name",
-          enabledRoles(id, currentUser(spark)).toSeq.sorted))
+        Some(strings(spark, "role_name", enabledRoles(a).toSeq.sorted))
       case ShowRoleGrants() =>
-        val user = currentUser(spark)
         Some(strings(spark, "role_name",
-          ("public" +: roleGrants.getOrElse(id, Vector.empty)
-            .filter(g => g.granteeType == "USER" && g.grantee == user)
+          ("public" +: a.roleGrants
+            .filter(g => g.granteeType == "USER" && g.grantee == a.user)
             .map(_.role)).distinct.sorted))
       case ShowGrants(table) =>
-        val rows = privGrants.getOrElse(id, Vector.empty)
+        val rows = a.privGrants
           .filter(g => table == null || g.table == table.toLowerCase)
           .sortBy(g => (g.table, g.grantee, g.privilege))
           .map(g => Row(g.grantor, "USER", g.grantee, g.granteeType,
@@ -374,22 +366,14 @@ object AccessControl {
     }
   }
 
-  private def addRoleGrant(id: String, g: RoleGrant): Unit =
-    roleGrants.updateWith(id) {
-      case Some(v) if v.contains(g) => Some(v)
-      case Some(v) => Some(v :+ g)
-      case None => Some(Vector(g))
-    }
+  private def addRoleGrant(a: Acl, g: RoleGrant): Acl =
+    if (a.roleGrants.contains(g)) a else a.copy(roleGrants = a.roleGrants :+ g)
 
-  private def addPrivGrant(id: String, g: PrivGrant): Unit =
-    privGrants.updateWith(id) {
-      case Some(v) =>
-        // re-grant replaces (grant option may change)
-        Some(v.filterNot(o => o.privilege == g.privilege &&
-          o.table == g.table && o.grantee == g.grantee &&
-          o.granteeType == g.granteeType) :+ g)
-      case None => Some(Vector(g))
-    }
+  /** A re-grant replaces the old one (the grant option may change). */
+  private def addPrivGrant(a: Acl, g: PrivGrant): Acl =
+    a.copy(privGrants = a.privGrants.filterNot(o => o.privilege == g.privilege &&
+      o.table == g.table && o.grantee == g.grantee &&
+      o.granteeType == g.granteeType) :+ g)
 
   /** "SELECT, INSERT" → Seq("SELECT","INSERT"); "ALL PRIVILEGES" →
     * Seq("ALL"); anything non-privilege → empty (→ role-grant path). */
@@ -405,9 +389,9 @@ object AccessControl {
   /** Explicit USER/ROLE keyword wins; otherwise a known role name is a
     * role, anything else a user (the reference's PrincipalSpecification
     * UNSPECIFIED resolution). */
-  private def principalType(explicit: String, name: String, id: String): String =
+  private def principalType(explicit: String, name: String, a: Acl): String =
     if (explicit != null) explicit.toUpperCase
-    else if (rolesOf(id).contains(name.toLowerCase)) "ROLE"
+    else if (a.roles.contains(name.toLowerCase)) "ROLE"
     else "USER"
 
   private def strings(spark: SparkSession, col: String, vs: Seq[String]): DataFrame =

@@ -3,7 +3,6 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.collection.concurrent.TrieMap
 
 /** DDL / catalog statement surface of the reference coordinator: CREATE /
   * DROP VIEW (presto-main-base/.../execution/CreateViewTask.java,
@@ -26,9 +25,9 @@ import scala.collection.concurrent.TrieMap
   * exact per-column stats (the reference's ANALYZE-backed path; its
   * connector-estimated path is Spark's CBO, pinned in StatsSpec).
   *
-  * State keys on the SparkSession identity like SessionStatements, so
-  * created objects follow the session exactly as the reference's
-  * per-session metadata does.
+  * Created objects live in a SessionScope catalog slot: they follow the
+  * session, and the statement server's per-request clones see them, as
+  * every request sees the reference's coordinator metadata.
   */
 object DdlStatements {
 
@@ -36,7 +35,7 @@ object DdlStatements {
   private final case class ViewEntry(definition: String) extends Entry
   private final case class TableEntry(path: String) extends Entry
 
-  private val objects = TrieMap.empty[(String, String), Entry]
+  private val objects = SessionScope.catalog(Map.empty[String, Entry])
 
   private val CreateView =
     """(?is)\ACREATE\s+(OR\s+REPLACE\s+)?VIEW\s+([\w.]+)\s+AS\s+(.+)\z""".r
@@ -73,20 +72,23 @@ object DdlStatements {
   /** Try to handle `text` as a DDL/catalog statement; None → plain query. */
   def dispatch(ses: SqlSession, text: String): Option[DataFrame] = {
     val spark = ses.spark
-    val sid = DdlStatements.sessionId(spark)
+    def entry(name: String) = SessionScope.get(spark, objects).get(name)
+    def put(name: String, e: Entry) =
+      SessionScope.update(spark, objects)(_ + (name -> e))
+    def remove(name: String) = SessionScope.update(spark, objects)(_ - name)
     text.trim.stripSuffix(";").trim match {
       case CreateView(orReplace, rawName, query) =>
         val name = local(rawName)
         if (orReplace == null && exists(spark, name))
           throw new IllegalArgumentException(s"View already exists: $name")
         ses.sql(query).createOrReplaceTempView(name)
-        objects.put((sid, name), ViewEntry(query.trim))
+        put(name, ViewEntry(query.trim))
         Some(status(spark, "CREATE VIEW"))
       case DropView(ifExists, rawName) =>
         val name = local(rawName)
-        objects.get((sid, name)) match {
+        entry(name) match {
           case Some(_: ViewEntry) =>
-            spark.catalog.dropTempView(name); objects.remove((sid, name))
+            spark.catalog.dropTempView(name); remove(name)
             Some(status(spark, "DROP VIEW"))
           case Some(_: TableEntry) =>
             throw new IllegalArgumentException(s"Not a view: $name (use DROP TABLE)")
@@ -101,18 +103,18 @@ object DdlStatements {
           else throw new IllegalArgumentException(s"Table already exists: $name")
         } else {
           val df = ses.sql(query)
-          val path = tablePath(sid, name)
+          val path = tablePath(name)
           df.write.mode(SaveMode.Overwrite).parquet(path)
           val back = spark.read.parquet(path)
           back.createOrReplaceTempView(name)
-          objects.put((sid, name), TableEntry(path))
+          put(name, TableEntry(path))
           Some(rowsResult(spark, back.count()))
         }
       case DropTable(ifExists, rawName) =>
         val name = local(rawName)
-        objects.get((sid, name)) match {
+        entry(name) match {
           case Some(TableEntry(path)) =>
-            spark.catalog.dropTempView(name); objects.remove((sid, name))
+            spark.catalog.dropTempView(name); remove(name)
             deletePath(spark, path)
             Some(status(spark, "DROP TABLE"))
           case Some(_: ViewEntry) =>
@@ -123,7 +125,7 @@ object DdlStatements {
         }
       case InsertInto(rawName, query) =>
         val name = local(rawName)
-        objects.get((sid, name)) match {
+        entry(name) match {
           case Some(TableEntry(path)) =>
             val target = spark.read.parquet(path).schema
             val src = ses.sql(query)
@@ -154,32 +156,32 @@ object DdlStatements {
         }
       case RenameTable(rawFrom, rawTo) =>
         val (from, to) = (local(rawFrom), local(rawTo))
-        objects.get((sid, from)) match {
+        entry(from) match {
           case Some(e: TableEntry) =>
             if (exists(spark, to))
               throw new IllegalArgumentException(s"Target table already exists: $to")
-            spark.catalog.dropTempView(from); objects.remove((sid, from))
+            spark.catalog.dropTempView(from); remove(from)
             spark.read.parquet(e.path).createOrReplaceTempView(to)
-            objects.put((sid, to), e)
+            put(to, e)
             Some(status(spark, "RENAME TABLE"))
           case _ => throw new IllegalArgumentException(s"Table not found: $from")
         }
       case RenameView(rawFrom, rawTo) =>
         val (from, to) = (local(rawFrom), local(rawTo))
-        objects.get((sid, from)) match {
+        entry(from) match {
           case Some(v: ViewEntry) =>
             if (exists(spark, to))
               throw new IllegalArgumentException(s"Target view already exists: $to")
             val plan = spark.table(from)
-            spark.catalog.dropTempView(from); objects.remove((sid, from))
+            spark.catalog.dropTempView(from); remove(from)
             plan.createOrReplaceTempView(to)
-            objects.put((sid, to), v)
+            put(to, v)
             Some(status(spark, "RENAME VIEW"))
           case _ => throw new IllegalArgumentException(s"View not found: $from")
         }
       case Truncate(rawName) =>
         val name = local(rawName)
-        objects.get((sid, name)) match {
+        entry(name) match {
           case Some(TableEntry(path)) =>
             val schema = spark.read.parquet(path).schema
             spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -207,7 +209,7 @@ object DdlStatements {
           StructType(Seq(StructField("schema", StringType, nullable = false)))))
       case ShowCreateView(rawName) =>
         val name = local(rawName)
-        objects.get((sid, name)) match {
+        entry(name) match {
           case Some(ViewEntry(definition)) =>
             Some(spark.createDataFrame(
               spark.sparkContext.parallelize(
@@ -233,7 +235,7 @@ object DdlStatements {
           ("(?i)\\A" + java.util.regex.Pattern.quote(p)
             .replace("%", "\\E.*\\Q").replace("_", "\\E.\\Q") + "\\z").r)
         val names = (spark.catalog.listFunctions().collect()
-          .map(_.name.toLowerCase) ++ SqlFunctions.list(sid))
+          .map(_.name.toLowerCase) ++ SqlFunctions.list(spark))
           .distinct.sorted
           .filter(n => pat.forall(_.findFirstIn(n).isDefined))
         Some(spark.createDataFrame(
@@ -399,25 +401,16 @@ object DdlStatements {
     case other => other.sql.toLowerCase
   }
 
-  /** Session key for state maps and on-disk table paths: a UUID assigned
-    * per SparkSession instance. Identity hashes are NOT unique — two
-    * sessions (or two JVMs sharing java.io.tmpdir/graft-tables) can
-    * collide, letting one session's CTAS overwrite or DROP delete
-    * another's data. The weak map lets sessions be collected. */
-  private val sessionIds =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, String]())
-  def sessionId(spark: SparkSession): String =
-    sessionIds.computeIfAbsent(spark, _ => java.util.UUID.randomUUID().toString)
-
   private def local(name: String): String = name.split('.').last.toLowerCase
 
   private def exists(spark: SparkSession, name: String): Boolean =
     spark.catalog.tableExists(name)
 
-  private def tablePath(sid: String, name: String): String =
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft-tables/$sid/$name").getAbsolutePath
+  /** A fresh directory per CTAS: two sessions (or two JVMs sharing
+    * java.io.tmpdir/graft-tables) never write or DROP each other's data. */
+  private def tablePath(name: String): String =
+    new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft-tables/$name-${java.util.UUID.randomUUID()}").getAbsolutePath
 
   private def deletePath(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -1,7 +1,6 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.collection.concurrent.TrieMap
 import graft.functions.EnumRuntime
 
 /** Enum + distinct types through the dialect (reference
@@ -20,8 +19,8 @@ import graft.functions.EnumRuntime
   * spelling) splices a membership-validated cast, `enum_key('mood', x)`
   * splices the reverse lookup (the type-name argument replaces the
   * reference's static-type dispatch — the documented deviation), and
-  * distinct-type names rewrite to their base type. Registry is
-  * session-keyed like the rest of the DDL surface.
+  * distinct-type names rewrite to their base type. The registry is a
+  * SessionScope catalog slot like the rest of the DDL surface.
   */
 object EnumTypes {
 
@@ -29,16 +28,14 @@ object EnumTypes {
   private final case class EnumEntry(b64: String) extends TypeEntry
   private final case class DistinctEntry(baseType: String) extends TypeEntry
 
-  private val types = TrieMap.empty[(String, String), TypeEntry]
+  /** Lowercase type name → definition. */
+  private val types = SessionScope.catalog(Map.empty[String, TypeEntry])
 
   private val CreateType =
     """(?is)\ACREATE\s+TYPE\s+([\w.]+)\s+AS\s+(.+?)\s*;?\s*\z""".r
   private val DropType =
     """(?is)\ADROP\s+TYPE\s+(IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*\z""".r
   private val EnumSig = """(?is)\A(bigint|varchar)enum\s*\(.*\)\z""".r
-
-  private def key(spark: SparkSession, name: String): (String, String) =
-    (DdlStatements.sessionId(spark), name.toLowerCase)
 
   /** Parse `BigintEnum(tn{"K":1,…})` / `VarcharEnum(tn{"K":"v",…})` into
     * (typeName, isBigint, entries) — the TypeSignature.parseEnumMap state
@@ -130,12 +127,14 @@ object EnumTypes {
                 "types (distinct types) are supported")
             DistinctEntry(base)
         }
-        types.put(key(spark, name), entry)
+        SessionScope.update(spark, types)(_ + (name.toLowerCase -> entry))
         Some(DdlStatements.statusResult(spark, s"CREATE TYPE $name"))
       case DropType(ifExists, name) =>
-        val removed = types.remove(key(spark, name)).isDefined
-        if (!removed && ifExists == null)
-          throw new IllegalArgumentException(s"Type not found: $name")
+        SessionScope.update(spark, types) { ts =>
+          if (!ts.contains(name.toLowerCase) && ifExists == null)
+            throw new IllegalArgumentException(s"Type not found: $name")
+          ts - name.toLowerCase
+        }
         Some(DdlStatements.statusResult(spark, s"DROP TYPE $name"))
       case _ => None
     }
@@ -152,10 +151,7 @@ object EnumTypes {
     * aliases. No-op for sessions with no registered types and no inline
     * signatures (one cheap regex test). */
   def rewrite(spark: SparkSession, original: String): String = {
-    val sid = DdlStatements.sessionId(spark)
-    val session = types.snapshot().collect {
-      case ((s, n), e) if s == sid => n -> e
-    }
+    val session = SessionScope.get(spark, types)
     if (session.isEmpty &&
       "(?i)(bigint|varchar)enum\\s*\\(".r
         .findFirstIn(Dialect.masked(original)).isEmpty)

@@ -2,7 +2,6 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import scala.collection.concurrent.TrieMap
 
 /** Session-statement surface of the reference's coordinator: PREPARE /
   * EXECUTE [USING] / DEALLOCATE PREPARE (presto-main-base/.../execution/
@@ -12,9 +11,11 @@ import scala.collection.concurrent.TrieMap
   * and SET / RESET / SHOW SESSION (…/execution/SetSessionTask.java,
   * ResetSessionTask.java, properties in …/SystemSessionProperties.java).
   *
-  * Statements are session-scoped: state keys on `spark.sessionUUID`, so
-  * prepared names and properties follow the SparkSession exactly like the
-  * reference's Session object. Two reference properties are bridged to
+  * Statements are session-scoped: prepared names and properties live in
+  * SessionScope request slots, so they follow the SparkSession exactly
+  * like the reference's Session object, and a statement-server clone
+  * starts without them (the client resends them in headers, see
+  * [[responseHeaders]]). Two reference properties are bridged to
   * their Spark equivalents (`hash_partition_count` →
   * spark.sql.shuffle.partitions, `join_distribution_type` → the broadcast
   * threshold); every property round-trips through SHOW SESSION.
@@ -26,8 +27,8 @@ import scala.collection.concurrent.TrieMap
   */
 object SessionStatements {
 
-  private val prepared = TrieMap.empty[(String, String), String]
-  private val props = TrieMap.empty[(String, String), String]
+  private val prepared = SessionScope.request(Map.empty[String, String])
+  private val props = SessionScope.request(Map.empty[String, String])
 
   private val Prepare = """(?is)\APREPARE\s+(\w+)\s+FROM\s+(.+)\z""".r
   private val Execute = """(?is)\AEXECUTE\s+(\w+)(?:\s+USING\s+(.+))?\z""".r
@@ -46,29 +47,28 @@ object SessionStatements {
   /** Try to handle `text` as a session statement; None → plain query. */
   def dispatch(ses: SqlSession, text: String): Option[DataFrame] = {
     val spark = ses.spark
-    val sid = DdlStatements.sessionId(spark)
     text.trim.stripSuffix(";").trim match {
       case Prepare(name, query) =>
-        prepared.put((sid, name.toLowerCase), query.trim)
+        SessionScope.update(spark, prepared)(_ + (name.toLowerCase -> query.trim))
         Some(status(spark, "PREPARE"))
       case Execute(name, using) =>
-        val q = lookup(sid, name)
+        val q = lookup(spark, name)
         val params = Option(using).map(splitTopLevel).getOrElse(Nil)
         Some(ses.sql(substitute(q, params)))
       case Dealloc(name) =>
-        lookup(sid, name) // raises on unknown name like DeallocateTask
-        prepared.remove((sid, name.toLowerCase))
+        lookup(spark, name) // raises on unknown name like DeallocateTask
+        SessionScope.update(spark, prepared)(_ - name.toLowerCase)
         Some(status(spark, "DEALLOCATE"))
       case DescIn(name) =>
-        val n = countParameters(lookup(sid, name))
+        val n = countParameters(lookup(spark, name))
         Some(spark.createDataFrame(
           spark.sparkContext.parallelize(
             (1 to n).map(i => Row(i.toLong, "unknown")), 1),
           StructType(Seq(StructField("position", LongType, nullable = false),
             StructField("type", StringType, nullable = false)))))
       case DescOut(name) =>
-        val schema = ses.sql(substitute(lookup(sid, name),
-          List.fill(countParameters(lookup(sid, name)))("NULL"))).schema
+        val schema = ses.sql(substitute(lookup(spark, name),
+          List.fill(countParameters(lookup(spark, name)))("NULL"))).schema
         Some(spark.createDataFrame(
           spark.sparkContext.parallelize(
             // reference type spellings (DescribeOutputRewrite emits varchar
@@ -79,16 +79,16 @@ object SessionStatements {
             StructField("type", StringType, nullable = false)))))
       case SetSess(key, raw) =>
         val v = unquote(raw.trim)
-        props.put((sid, key), v)
+        SessionScope.update(spark, props)(_ + (key -> v))
         bridge(spark, key, Some(v))
         Some(status(spark, "SET SESSION"))
       case ResetSess(key) =>
-        props.remove((sid, key))
+        SessionScope.update(spark, props)(_ - key)
         bridge(spark, key, None)
         Some(status(spark, "RESET SESSION"))
       case ShowSess() =>
-        val rows = props.collect { case ((s, k), v) if s == sid => (k, v) }
-          .toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) }
+        val rows = SessionScope.get(spark, props).toSeq.sortBy(_._1)
+          .map { case (k, v) => Row(k, v) }
         Some(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
           StructType(Seq(StructField("name", StringType, nullable = false),
             StructField("value", StringType, nullable = false)))))
@@ -112,8 +112,25 @@ object SessionStatements {
     }
   }
 
-  private def lookup(sid: String, name: String): String =
-    prepared.getOrElse((sid, name.toLowerCase),
+  /** Response headers of a session statement, as the reference's
+    * coordinator reports them (PrestoHeaders.java:28-34): the client folds
+    * them into its next request's X-Presto-* headers. Values are the ones
+    * [[dispatch]] applies, URL-encoded. */
+  def responseHeaders(text: String): Map[String, String] = {
+    def enc(v: String) = java.net.URLEncoder.encode(v, "UTF-8")
+    text.trim.stripSuffix(";").trim match {
+      case SetSess(key, raw) =>
+        Map("X-Presto-Set-Session" -> s"$key=${enc(unquote(raw.trim))}")
+      case ResetSess(key) => Map("X-Presto-Clear-Session" -> key)
+      case Prepare(name, query) =>
+        Map("X-Presto-Added-Prepare" -> s"$name=${enc(query.trim)}")
+      case Dealloc(name) => Map("X-Presto-Deallocated-Prepare" -> name)
+      case _ => Map.empty
+    }
+  }
+
+  private def lookup(spark: SparkSession, name: String): String =
+    SessionScope.get(spark, prepared).getOrElse(name.toLowerCase,
       throw new IllegalArgumentException(
         s"Prepared statement not found: ${name.toLowerCase}"))
 

@@ -1,6 +1,6 @@
 package graft.api
 
-import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.SparkSession
 
 /** SQL-invoked function DDL — the reference's CREATE FUNCTION surface
   * (presto-docs sql/create-function; grammar in
@@ -39,8 +39,8 @@ object SqlFunctions {
       returns: String,
       body: String)
 
-  /** (sessionId, lowercase unqualified name) → definition. */
-  private val registry = TrieMap.empty[(String, String), SqlFunctionDef]
+  /** Lowercase unqualified name → definition. */
+  private val registry = SessionScope.catalog(Map.empty[String, SqlFunctionDef])
 
   private val CreateHead =
     """(?is)\ACREATE\s+(OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?FUNCTION\s+([\w.]+)\s*\(""".r
@@ -53,7 +53,7 @@ object SqlFunctions {
     """(?is)\A(?:COMMENT\s+'(?:[^']|'')*'|LANGUAGE\s+\w+|NOT\s+DETERMINISTIC|DETERMINISTIC|RETURNS\s+NULL\s+ON\s+NULL\s+INPUT|CALLED\s+ON\s+NULL\s+INPUT)\s+""".r
 
   /** Try `text` as CREATE/DROP FUNCTION; None → not a function statement. */
-  def dispatch(sid: String, text: String): Option[String] = {
+  def dispatch(spark: SparkSession, text: String): Option[String] = {
     val t = text.trim.stripSuffix(";").trim
     CreateHead.findPrefixMatchOf(t) match {
       case Some(m) =>
@@ -78,15 +78,20 @@ object SqlFunctions {
             s"CREATE FUNCTION $name: only SQL-bodied routines (RETURN expr) " +
               "are supported; EXTERNAL routines are out of scope"))
         val body = tail.substring(bodyM.end).trim
-        if (!orReplace && registry.contains((sid, name)))
-          throw new IllegalArgumentException(s"Function already exists: $name")
-        registry.put((sid, name), SqlFunctionDef(name, params, retType, body))
+        SessionScope.update(spark, registry) { fns =>
+          if (!orReplace && fns.contains(name))
+            throw new IllegalArgumentException(s"Function already exists: $name")
+          fns + (name -> SqlFunctionDef(name, params, retType, body))
+        }
         Some("CREATE FUNCTION")
       case None => t match {
         case DropFunction(ifExists, rawName) =>
           val name = rawName.split('.').last.toLowerCase
-          if (registry.remove((sid, name)).isEmpty && ifExists == null)
-            throw new IllegalArgumentException(s"Function not found: $name")
+          SessionScope.update(spark, registry) { fns =>
+            if (!fns.contains(name) && ifExists == null)
+              throw new IllegalArgumentException(s"Function not found: $name")
+            fns - name
+          }
           Some("DROP FUNCTION")
         case _ => None
       }
@@ -94,11 +99,8 @@ object SqlFunctions {
   }
 
   /** Registered names for SHOW FUNCTIONS. */
-  def list(sid: String): Seq[String] =
-    registry.keys.collect { case (s, n) if s == sid => n }.toSeq.sorted
-
-  def lookup(sid: String, name: String): Option[SqlFunctionDef] =
-    registry.get((sid, name.toLowerCase))
+  def list(spark: SparkSession): Seq[String] =
+    SessionScope.get(spark, registry).keys.toSeq.sorted
 
   /** `p1 type1, p2 type2, …` — types may carry parens (decimal(10,2)). */
   private def parseParams(s: String): Seq[(String, String)] = {
@@ -133,12 +135,13 @@ object SqlFunctions {
     * recursion bound, like the reference's cyclic-function detection in
     * SqlFunctionUtils). No registered functions → the text is returned
     * untouched in one registry probe. */
-  def inline(sid: String, text: String): String = {
-    if (!registry.keysIterator.exists(_._1 == sid)) return text
+  def inline(spark: SparkSession, text: String): String = {
+    val fns = SessionScope.get(spark, registry)
+    if (fns.isEmpty) return text
     var t = text
     var depth = 0
     while (depth < MaxInlineDepth) {
-      val next = inlineOnce(sid, t)
+      val next = inlineOnce(fns, t)
       if (next == t) return t
       t = next
       depth += 1
@@ -148,10 +151,11 @@ object SqlFunctions {
         " — recursive function definitions are not supported")
   }
 
-  private def inlineOnce(sid: String, text: String): String = {
+  private def inlineOnce(fns: Map[String, SqlFunctionDef],
+      text: String): String = {
     val m = Text.masked(text)
     // collect call sites across all registered names, replace right-to-left
-    val sites = registry.keysIterator.collect { case (s, n) if s == sid => n }
+    val sites = fns.keysIterator
       .flatMap { name =>
         val re = ("(?i)(?<![\\w.])(?:[\\w]+\\.)*" +
           java.util.regex.Pattern.quote(name) + "\\s*\\(").r
@@ -162,7 +166,7 @@ object SqlFunctions {
     // next fixpoint pass — replacing the inner call shifts outer indices
     val replaced = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
     for ((name, start, openEnd) <- sites) {
-      val defn = registry((sid, name))
+      val defn = fns(name)
       val close = Text.matchParen(m, openEnd - 1)
       if (replaced.exists { case (f, t0) => f < close && start < t0 }) ()
       else {

@@ -77,14 +77,14 @@ final class SqlSession private (val spark: SparkSession) {
     }
     val text = text1
     SessionStatements.dispatch(this, text)
-      .orElse(SqlFunctions.dispatch(DdlStatements.sessionId(spark), text)
+      .orElse(SqlFunctions.dispatch(spark, text)
         .map(DdlStatements.statusResult(spark, _)))
       .orElse(AccessControl.dispatch(this, text))
       .orElse(EnumTypes.dispatch(this, text))
       .orElse(DdlStatements.dispatch(this, text)).getOrElse {
       // SQL-invoked functions inline at translate time, the reference's
       // InlineSqlFunctions strategy (no-op when none are registered)
-      val inlined0 = SqlFunctions.inline(DdlStatements.sessionId(spark), text)
+      val inlined0 = SqlFunctions.inline(spark, text)
       // enum / distinct types splice their validated casts here (the
       // reference's static-type dispatch, done at rewrite time)
       val inlined = EnumTypes.rewrite(spark, inlined0)

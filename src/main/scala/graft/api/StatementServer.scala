@@ -686,35 +686,19 @@ object StatementServer {
     }
   }
 
-  /** Response-header side effects of the statement itself, as the
-    * reference's coordinator reports them (PrestoHeaders.java:28-34): the
-    * client folds these into its next request's X-Presto-* headers. */
-  private def statementHeaders(sql: String): Map[String, String] = {
-    val t = sql.trim
-    val SetSession = """(?is)\ASET\s+SESSION\s+([\w.]+)\s*=\s*(.+)\z""".r
-    val ResetSession = """(?is)\ARESET\s+SESSION\s+([\w.]+)\z""".r
-    val Prepare = """(?is)\APREPARE\s+(\w+)\s+FROM\s+(.+)\z""".r
-    val Dealloc = """(?is)\ADEALLOCATE\s+PREPARE\s+(\w+)\z""".r
-    // USE catalog.schema | USE schema (UseTask.java: the coordinator
-    // answers Set-Catalog/Set-Schema headers, the CLIENT carries them)
-    val Use = """(?is)\AUSE\s+(?:(\w+)\.)?(\w+)\z""".r
-    t match {
+  // USE catalog.schema | USE schema (UseTask.java: the coordinator
+  // answers Set-Catalog/Set-Schema headers, the CLIENT carries them)
+  private val Use = """(?is)\AUSE\s+(?:(\w+)\.)?(\w+)\z""".r
+
+  /** Response-header side effects of the statement itself: USE here, the
+    * session statements in SessionStatements.responseHeaders. */
+  private def statementHeaders(sql: String): Map[String, String] =
+    sql.trim match {
       case Use(cat, sch) =>
-        (if (cat != null) Map("X-Presto-Set-Catalog" -> cat)
-         else Map.empty[String, String]) +
+        Option(cat).map("X-Presto-Set-Catalog" -> _).toMap +
           ("X-Presto-Set-Schema" -> sch)
-      case SetSession(k, v) =>
-        Map("X-Presto-Set-Session" ->
-          (k + "=" + java.net.URLEncoder.encode(
-            v.trim.stripPrefix("'").stripSuffix("'"), "UTF-8")))
-      case ResetSession(k) => Map("X-Presto-Clear-Session" -> k)
-      case Prepare(name, body) =>
-        Map("X-Presto-Added-Prepare" ->
-          (name + "=" + java.net.URLEncoder.encode(body.trim, "UTF-8")))
-      case Dealloc(name) => Map("X-Presto-Deallocated-Prepare" -> name)
-      case _ => Map.empty
+      case t => SessionStatements.responseHeaders(t)
     }
-  }
 
   private def run(q: QueryExec): Unit = {
     // atomic QUEUED -> RUNNING: a DELETE that already failed the query
@@ -730,14 +714,15 @@ object StatementServer {
     // queries run on a per-request session CLONE: isolated conf / temp
     // views / prepares, so concurrent requests cannot observe each
     // other's SET SESSION — the reference rebuilds a Session per request
-    // from the same headers. Shared-state DDL runs on the SHARED session
-    // (serialized on its own lane) so catalog effects persist.
-    val qSession =
-      if (shared) spark
-      else org.apache.spark.sql.graftbridge.SessionBridge.cloneSession(spark)
+    // from the same headers. The clone inherits the shared session's
+    // catalog state (views, functions, types, access control) and starts
+    // without its request state (SessionScope.fork). Shared-state DDL runs
+    // on the SHARED session (serialized on its own lane) so catalog
+    // effects persist.
+    val qSession = if (shared) spark else SessionScope.fork(spark)
     val ses = SqlSession.wrap(qSession)
     // on the shared session, header context must unwind after the
-    // statement; on a clone it dies with the clone
+    // statement; a clone's request state is released with the clone
     val applied = scala.collection.mutable.ListBuffer.empty[String]
     val appliedConf =
       scala.collection.mutable.ListBuffer.empty[(String, String)]

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import scala.collection.concurrent.TrieMap
+import graft.api.SessionScope
 
 /** Explicit transactions over managed snapshot tables — the reference's
   * session transaction-control statements (SqlBase.g4 START TRANSACTION /
@@ -46,24 +47,27 @@ object Transactions {
     val staged = scala.collection.mutable.ArrayBuffer.empty[Staged]
   }
 
-  private val txs = TrieMap.empty[String, Tx]
-
-  private def sid(spark: SparkSession): String =
-    graft.api.DdlStatements.sessionId(spark)
+  /** The session's open transaction: request state, so a statement-server
+    * clone starts outside it. */
+  private val open = SessionScope.request(Option.empty[Tx])
+  private def txOf(spark: SparkSession): Option[Tx] =
+    SessionScope.get(spark, open)
+  private def end(spark: SparkSession): Unit =
+    SessionScope.update(spark, open)(_ => None)
   private def key(base: java.io.File): String = base.getAbsolutePath
 
-  def inTransaction(spark: SparkSession): Boolean = txs.contains(sid(spark))
+  def inTransaction(spark: SparkSession): Boolean = txOf(spark).isDefined
 
   def begin(spark: SparkSession, readOnly: Boolean = false,
-      isolation: String = "READ COMMITTED"): Unit = {
-    if (inTransaction(spark))
-      throw new IllegalStateException("Nested transactions not supported")
-    txs.put(sid(spark), new Tx(readOnly, isolation))
-    ()
-  }
+      isolation: String = "READ COMMITTED"): Unit =
+    SessionScope.update(spark, open) { tx =>
+      if (tx.isDefined)
+        throw new IllegalStateException("Nested transactions not supported")
+      Some(new Tx(readOnly, isolation))
+    }
 
   private def current(spark: SparkSession): Tx =
-    txs.getOrElse(sid(spark),
+    txOf(spark).getOrElse(
       throw new IllegalStateException("No transaction in progress"))
 
   /** The version this transaction reads for `base`: latest own staged
@@ -78,7 +82,7 @@ object Transactions {
 
   /** Snapshot-isolated read (plain committed read outside a transaction). */
   def read(spark: SparkSession, base: java.io.File): DataFrame =
-    txs.get(sid(spark)) match {
+    txOf(spark) match {
       case None => SnapshotTable.read(spark, base)
       case Some(tx) => spark.read.parquet(
         SnapshotTable.versionDir(base, readVersion(tx, base)).getAbsolutePath)
@@ -161,8 +165,7 @@ object Transactions {
         .view.mapValues(_.last.stagedV).toMap
       tx.staged.filter(s => finals(key(s.base)) != s.stagedV)
         .foreach(s => dropDir(SnapshotTable.versionDir(s.base, s.stagedV)))
-      txs.remove(sid(spark))
-      ()
+      end(spark)
     } catch {
       case e: Throwable => rollback(spark); throw e
     }
@@ -173,8 +176,7 @@ object Transactions {
     val tx = current(spark)
     tx.staged.foreach(s =>
       dropDir(SnapshotTable.versionDir(s.base, s.stagedV)))
-    txs.remove(sid(spark))
-    ()
+    end(spark)
   }
 
   private def dropDir(f: java.io.File): Unit = {

@@ -47,64 +47,17 @@ object Tpcds {
     * presto-tpcds/.../TpcdsConnectorFactory.java), read the parquet;
     * otherwise derive from the TPC-H fixtures. Correctness runs never
     * materialize, so the oracle prelude and the Spark derivation stay the
-    * compared pair. */
-  /** Paths whose on-disk schema already matched the current derivation this
-    * JVM: the mat() guard below builds the derivation plan and re-reads the
-    * parquet footer to compare columns, which costs real driver time — done
-    * per query call it added ~0.2-1s to EVERY benchmarked TPC-DS query.
-    * One validation per path per JVM keeps the guard and the timings. */
-  private val matValidated =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Fingerprint of a derivation: full schema (names + types) plus the
-    * normalized logical plan, so a builder change that keeps column names
-    * but alters a value formula or a type still invalidates materialized
-    * parquet. Expression ids (#123) vary per JVM and are stripped. */
-  private def derivationPrint(df: DataFrame): String = {
-    val plan = df.queryExecution.logical.toString
-      .replaceAll("#\\d+L?", "#")
-    Integer.toHexString((df.schema.toDDL + "\n" + plan).hashCode)
-  }
-
-  private def fpFile(out: java.io.File) = new java.io.File(out, "_fingerprint")
-
-  private def writeFingerprint(out: java.io.File, fp: String): Unit =
-    java.nio.file.Files.write(fpFile(out).toPath, fp.getBytes("UTF-8"))
-
-  private def fingerprintMatches(out: java.io.File, fp: String): Boolean =
-    fpFile(out).isFile && new String(
-      java.nio.file.Files.readAllBytes(fpFile(out).toPath), "UTF-8") == fp
-
+    * compared pair. Only a complete write (Hadoop's `_SUCCESS` marker) is
+    * read; [[materializeFacts]] never rewrites one, so a scan can't be
+    * stale. Tables.scan memoizes the DataFrame per (session, path): each
+    * spark.read.parquet costs a file listing, a footer read and an
+    * analysis pass, measured at 0.1-0.3 s per query call across the
+    * 99-query bench. */
   private def mat(s: SparkSession, dir: String, name: String)
       (derive: => DataFrame): DataFrame = {
     val p = new java.io.File(dir, s"_tpcds/$name")
-    // Reuse only a COMPLETE write (Hadoop's _SUCCESS marker) carrying the
-    // current derivation's fingerprint — a builder change (names, types,
-    // or value formulas) or a crashed write would otherwise silently
-    // serve stale/partial parquet.
-    if (new java.io.File(p, "_SUCCESS").isFile) {
-      val path = p.getAbsolutePath
-      // Tables.scan memoizes the DataFrame per (session, path): each
-      // spark.read.parquet costs a fresh file listing + footer read +
-      // analysis on the driver — per query call that was 0.1-0.3 s
-      // across the 99-query bench (r13, measured)
-      if (matValidated.contains(path)) graft.Tables.scan(s, path)
-      else {
-        val derived = derive
-        if (fingerprintMatches(p, derivationPrint(derived))) {
-          matValidated.add(path); graft.Tables.scan(s, path)
-        } else {
-          derived.write.mode("overwrite").parquet(path)
-          writeFingerprint(p, derivationPrint(derived))
-          // drop cached file listings — downstream derivations already
-          // planned against the old part files would FAILED_READ otherwise
-          s.catalog.refreshByPath(path)
-          graft.Tables.invalidate(path)
-          matValidated.add(path)
-          graft.Tables.scan(s, path)
-        }
-      }
-    } else derive
+    if (new java.io.File(p, "_SUCCESS").isFile) graft.Tables.scan(s, p.getAbsolutePath)
+    else derive
   }
 
   /** The derived facts a bench run materializes (big enough to matter —
@@ -113,14 +66,17 @@ object Tpcds {
     "store_sales", "store_returns", "catalog_sales", "catalog_returns",
     "web_sales", "web_returns", "inventory")
 
-  /** Write the derived facts under `dir/_tpcds` once (idempotent). Order
-    * matters: the channel splits derive from store_sales/store_returns, so
-    * those materialize first and the splits then scan the written parquet
-    * instead of re-joining lineitem⋈orders. */
-  def materializeFacts(s: SparkSession, dir: String): Unit =
+  /** Write the derived facts under `dir/_tpcds`, once: raises if
+    * `dir/_tpcds` already exists, so facts written by an older derivation
+    * can never be served. Order matters: the channel splits derive from
+    * store_sales/store_returns, so those materialize first and the splits
+    * then scan the written parquet instead of re-joining lineitem⋈orders. */
+  def materializeFacts(s: SparkSession, dir: String): Unit = {
+    val root = new java.io.File(dir, "_tpcds")
+    if (root.exists) throw new IllegalStateException(
+      s"$root already exists: materialize the TPC-DS facts into a fresh directory")
     materializableFacts.foreach { n =>
-      val out = new java.io.File(dir, s"_tpcds/$n")
-      def build = n match {
+      val derived = n match {
         case "store_sales" => deriveStoreSales(s, dir)
         case "store_returns" => deriveStoreReturns(s, dir)
         case "inventory" => deriveInventory(s, dir)
@@ -129,24 +85,9 @@ object Tpcds {
         case "web_sales" => webSales(s, dir)
         case "web_returns" => webReturns(s, dir)
       }
-      if (!new java.io.File(out, "_SUCCESS").isFile) {
-        // first materialization: `build` goes through mat(), which with no
-        // _SUCCESS returns the raw derivation plan — write it + fingerprint
-        val derived = build
-        derived.write.mode("overwrite").parquet(out.getAbsolutePath)
-        writeFingerprint(out, derivationPrint(derived))
-        s.catalog.refreshByPath(out.getAbsolutePath)
-        matValidated.add(out.getAbsolutePath)
-      } else {
-        // existing write: mat() is the SINGLE validator/writer — invoking
-        // the builder here (outside the timed region) makes it check the
-        // fingerprint and re-materialize + refresh on drift. A second
-        // guard at this level would see mat()'s post-rewrite SCAN plan,
-        // mistake it for drift, and overwrite the parquet it is reading.
-        build
-        ()
-      }
+      derived.write.parquet(new java.io.File(root, n).getAbsolutePath)
     }
+  }
 
   // ---- derived dimensions -------------------------------------------------
   // Dimensions stay IN-MEMORY derivations on purpose (facts materialize,

@@ -1,12 +1,16 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.api.{AccessControl, SqlSession}
+import graft.api.{AccessControl, SqlSession, StatementClient, StatementServer}
 
 /** DCL statement family + opt-in SELECT enforcement
   * (api/AccessControl.scala). */
-class DclSpec extends AnyFunSuite {
+class DclSpec extends AnyFunSuite with BeforeAndAfterAll {
   import TestSpark._
+
+  // statement-server clones inherit the shared session's access control
+  override def afterAll(): Unit = AccessControl.reset(spark)
 
   private def fresh(): SqlSession = {
     AccessControl.reset(spark)
@@ -148,6 +152,25 @@ class DclSpec extends AnyFunSuite {
       AccessControl.setUser(spark, "dave")
       val clear = q.sql("SELECT n_name FROM nation").collect().map(_.getString(0))
       assert(clear.exists(!_.endsWith("***")))
+    } finally AccessControl.reset(spark)
+  }
+
+  test("policies and enforcement reach reads sent through /v1/statement") {
+    val q = fresh()
+    val base = StatementServer.ensureStarted(spark, pageSize = 10)
+    val sql = "SELECT count(*) AS c FROM nation"
+    def viaHttp() = StatementClient.execute(spark, base, sql).head.getLong(0)
+    try {
+      AccessControl.setUser(spark, "alice")
+      AccessControl.setRowFilter(spark, "nation", "USER", "alice",
+        "n_regionkey = 0")
+      val direct = q.sql(sql).head.getLong(0)
+      assert(direct == 5L)
+      assert(viaHttp() == direct)
+      AccessControl.enable(spark)
+      val e = intercept[RuntimeException](viaHttp())
+      assert(e.getMessage.contains("Access Denied: Cannot select from table nation"),
+        e.getMessage)
     } finally AccessControl.reset(spark)
   }
 

@@ -260,6 +260,23 @@ class StatementProtocolSpec extends AnyFunSuite {
     // shared server state: a headerless SHOW SESSION must not list it
     assert(!StatementClient.execute(spark, base, "SHOW SESSION")
       .collect().exists(_.getString(0) == "optimize_hash_generation"))
+    // the header carries the value SET SESSION applied ('' is one quote),
+    // so a client resending it reproduces that value
+    val quoted = finalHeaders("SET SESSION optimize_hash_generation = 'it''s'")
+    val kv = quoted("X-Presto-Set-Session")
+    assert(java.net.URLDecoder.decode(kv, "UTF-8") ==
+      "optimize_hash_generation=it's", kv)
+    var r = StatementClient.post(base, "SHOW SESSION",
+      Map("X-Presto-Session" -> kv))
+    val shown = Vector.newBuilder[org.apache.spark.sql.Row]
+    while (r.nextUri.isDefined) {
+      shown ++= r.data
+      r = StatementClient.advance(r.nextUri.get)
+    }
+    shown ++= r.data
+    assert(shown.result().exists(row =>
+      row.getString(0) == "optimize_hash_generation" &&
+        row.getString(1) == "it's"), shown.result().toString)
     val prep = finalHeaders("PREPARE hdr_q FROM SELECT 1 AS one")
     assert(prep.get("X-Presto-Added-Prepare").exists(_.startsWith("hdr_q=")),
       prep.toString)
@@ -269,6 +286,20 @@ class StatementProtocolSpec extends AnyFunSuite {
       Map("X-Presto-Prepared-Statement" -> prep("X-Presto-Added-Prepare")))
     assert(dealloc.get("X-Presto-Deallocated-Prepare").contains("hdr_q"),
       dealloc.toString)
+  }
+
+  test("a function and a type created over the wire serve the next request") {
+    def run(sql: String) = StatementClient.execute(spark, base, sql).collect()
+    run("CREATE FUNCTION proto_inc(x bigint) RETURNS bigint RETURN x + 1")
+    run("""CREATE TYPE proto_mood AS BigintEnum(proto_mood{"HAPPY":0, "SAD":1})""")
+    try {
+      val row = run(
+        "SELECT proto_inc(41) AS v, enum_key('proto_mood', 1) AS k")(0)
+      assert(row.getLong(0) == 42L && row.getString(1) == "SAD", row)
+    } finally {
+      run("DROP FUNCTION proto_inc")
+      run("DROP TYPE proto_mood")
+    }
   }
 
   test("/v1/info and the infoUri /v1/query/{id} endpoints answer") {
