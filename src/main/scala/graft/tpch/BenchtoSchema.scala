@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** The benchto TPC-H schema adapter: temp views `tpch_<table>` with the
   * tpch connector's UNPREFIXED column names, so the 22 reference texts
-  * (presto-benchto-benchmarks/src/main/resources/sql/presto/tpch/qNN.sql)
-  * run after nothing but benchto's own `${database}.${schema}.${prefix}`
-  * template substitution.
+  * (the resources `benchto/tpch/qNN.sql`, read by BenchtoTexts) run after
+  * nothing but benchto's own `${database}.${schema}.${prefix}` template
+  * substitution.
   *
   * The fixture star schema carries the value-bearing columns; the
   * remaining TPC-H columns (commit/receipt dates, ship modes, phones,

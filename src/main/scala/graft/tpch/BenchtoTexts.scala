@@ -1,20 +1,12 @@
 package graft.tpch
 
-/** The 22 benchto TPC-H reference texts, read VERBATIM from the public
-  * benchmark kit at run time (presto-benchto-benchmarks/src/main/
-  * resources/sql/presto/tpch/qNN.sql — never copied into this repo) and
+/** The 22 benchto TPC-H reference texts, kept as classpath resources in
+  * the kit's own form (`benchto/tpch/qNN.sql`, see the README there) and
   * re-aimed at the fixture domains with the same global substitutions the
   * value-gating spec uses (TpchTextSpec): calendar 1992-1998 → 1995-2001,
-  * kit literal domains → fixture NATION_<k>/part-type words. Shared by the
-  * spec (which adds per-query substitutions + replica comparison) and the
-  * bench's `tpch_sql` suite (which measures the texts through the dialect
-  * — the reference's own benchto method measures exactly these texts). */
+  * kit literal domains → fixture NATION_<k>/part-type words. The spec adds
+  * per-query substitutions and compares each text against a replica. */
 object BenchtoTexts {
-
-  val dir =
-    "/root/reference/presto-benchto-benchmarks/src/main/resources/sql/presto/tpch"
-
-  def available: Boolean = new java.io.File(dir, "q01.sql").isFile
 
   /** Fixture-domain parameter substitutions applied to every text. */
   val params: Seq[(String, String)] = Seq(
@@ -25,16 +17,39 @@ object BenchtoTexts {
     "forest%" -> "blue%",
     "'1992-" -> "'1995-", "'1993-" -> "'1996-", "'1994-" -> "'1997-")
 
+  /** A kit text read from the classpath (`path` is absolute). */
+  def resource(path: String): String = {
+    val in = getClass.getResourceAsStream(path)
+    require(in != null, s"benchto text $path is not on the classpath")
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** The TPC-H text `q` as the kit writes it (template refs included). */
+  def raw(q: String): String = resource(s"/benchto/tpch/$q.sql")
+
+  /** Drops a trailing `LIMIT n` so a test compares every row; a no-op on
+    * the texts the kit writes without one (q71, q87). */
+  val stripLimit: (String, String) = ("(?i)LIMIT\\s+\\d+\\s*$", "")
+
+  /** Apply per-query regex substitutions in order. Each pattern except
+    * `stripLimit` must match the text it is applied to: a pattern that
+    * matches nothing would leave the kit literal in place and the query
+    * silently un-re-aimed. */
+  def substitute(q: String, text: String, subs: Seq[(String, String)]): String =
+    subs.foldLeft(text) { case (t, sub @ (from, to)) =>
+      require(sub == stripLimit || from.r.findFirstIn(t).isDefined,
+        s"$q: substitution pattern /$from/ matches nothing in the text")
+      t.replaceAll(from, to)
+    }
+
   def text(q: String, subs: (String, String)*): String = {
-    val raw = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/$q.sql")), "UTF-8")
-    val base = params.foldLeft(raw
+    val base = params.foldLeft(raw(q)
       .replaceAll(
         "\"\\$\\{database\\}\"\\.\"\\$\\{schema\\}\"\\.\"\\$\\{prefix\\}(\\w+)\"",
         "tpch_$1")
       .replaceAll("\\s+", " ").trim.stripSuffix(";")) {
       case (t, (from, to)) => t.replace(from, to)
     }
-    subs.foldLeft(base) { case (t, (from, to)) => t.replaceAll(from, to) }
+    substitute(q, base, subs)
   }
 }

@@ -148,13 +148,10 @@ class SqlSessionSpec extends AnyFunSuite {
       "forest%" -> "blue%",
       // fixture calendar runs 1995-2001, not the kit's 1992-1998
       "'1992-" -> "'1995-", "'1993-" -> "'1996-", "'1994-" -> "'1997-")
-    val dir = "/root/reference/presto-benchto-benchmarks/src/main/resources/sql/presto/tpch"
     val all = (1 to 22).map(i => f"q$i%02d")
     var nonEmpty = 0
     for (q <- all) {
-      val raw = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/$q.sql")), "UTF-8")
-      val sql = params.foldLeft(raw
+      val sql = params.foldLeft(tpch.BenchtoTexts.raw(q)
         .replaceAll("\"\\$\\{database\\}\"\\.\"\\$\\{schema\\}\"\\.\"\\$\\{prefix\\}(\\w+)\"", "tpch_$1")
         .trim.stripSuffix(";")) { case (t, (from, to)) => t.replace(from, to) }
       val rows = session.sql(sql).collect() // must plan + execute

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.api.SqlSession
 
 /** The benchto TPC-DS reference texts through the SQL dialect
-  * (presto-benchto-benchmarks/src/main/resources/sql/presto/tpcds/qNN.sql)
-  * against the derived ds tables — the texts are read verbatim from the
-  * reference tree and instantiated the way benchto does: template
+  * against the derived ds tables — the texts are the kit's
+  * (`sql/presto/tpcds/qNN.sql`), kept in-repo as the test resources
+  * `benchto/tpcds/qNN.sql`, and instantiated the way benchto does: template
   * substitution for `${database}.${schema}.`, plus per-query PARAMETER
   * substitutions (the literals dsqgen stamps into each template: years,
   * manager ids, county lists) re-aimed at the fixture calendar (1992-1998)

@@ -4,17 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.api.SqlSession
 
-/** Shared harness for the benchto TPC-DS reference texts
-  * (presto-benchto-benchmarks/src/main/resources/sql/presto/tpcds/qNN.sql):
-  * view registration over the derived ds tables, template substitution, and
-  * the canonical value-comparison helpers used by TpcdsSqlSpec/TpcdsSqlSpec2.
+/** Shared harness for the benchto TPC-DS reference texts (the kit's
+  * `sql/presto/tpcds/<q>.sql`, kept in-repo as the test resources
+  * `benchto/tpcds/<q>.sql`): view registration over the derived ds tables,
+  * template substitution, and the canonical value-comparison helpers used
+  * by TpcdsSqlSpec/TpcdsSqlSpec2.
   */
 object TpcdsText {
   import TestSpark._
   import tpcds.Tpcds
-
-  val dir =
-    "/root/reference/presto-benchto-benchmarks/src/main/resources/sql/presto/tpcds"
 
   /** (Re-)register the derived ds views. Other suites sharing the
     * SparkSession register raw fixture views under the SAME names
@@ -54,19 +52,19 @@ object TpcdsText {
   }
 
   /** Read a reference text, substitute the benchto template refs and the
-    * per-query parameters. `subs` are regex → replacement pairs. Every
-    * test calls text() first, so view re-registration rides here. */
+    * per-query parameters. `subs` are regex → replacement pairs, each of
+    * which must match (tpch.BenchtoTexts.substitute). Every test calls
+    * text() first, so view re-registration rides here. */
   def text(q: String, subs: (String, String)*): String = {
     session; registerViews()
-    val raw = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/$q.sql")), "UTF-8")
+    val raw = tpch.BenchtoTexts.resource(s"/benchto/tpcds/$q.sql")
     // collapse whitespace so parameter substitutions are line-break-proof
     val t0 = raw.replaceAll("\\$\\{database\\}\\.\\$\\{schema\\}\\.", "")
       .replaceAll("\\s+", " ").trim.stripSuffix(";")
-    subs.foldLeft(t0) { case (t, (from, to)) => t.replaceAll(from, to) }
+    tpch.BenchtoTexts.substitute(q, t0, subs)
   }
 
-  val stripLimit: (String, String) = ("(?i)LIMIT\\s+\\d+\\s*$", "")
+  val stripLimit: (String, String) = tpch.BenchtoTexts.stripLimit
 
   /** Canonical compare: text columns renamed positionally to the gate's
     * (aliases differ, semantics don't), doubles rounded to 2 dp, rows

@@ -5,12 +5,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.api.SqlSession
 
-/** Value-gates ALL 22 benchto TPC-H reference texts
-  * (presto-benchto-benchmarks/src/main/resources/sql/presto/tpch/qNN.sql)
-  * through `SqlSession.sql()`: each text is compared row-for-row (float
-  * tolerance) against an independent DataFrame replica built over the same
-  * BenchtoSchema views — the r8 suite only smoke-ran these (rowcount), so a
-  * dialect bug that silently changed join semantics would have passed.
+/** Value-gates ALL 22 benchto TPC-H reference texts (the kit's
+  * `sql/presto/tpch/qNN.sql`, kept in-repo as the resources
+  * `benchto/tpch/qNN.sql`) through `SqlSession.sql()`: each text is
+  * compared row-for-row (float tolerance) against an independent
+  * DataFrame replica built over the same BenchtoSchema views — a
+  * rowcount smoke run would pass a dialect bug that silently changed join
+  * semantics.
   *
   * Global parameter substitutions re-aim the kit's 1992-1998 calendar and
   * literal domains at the fixture (calendar 1995-2001, single-word part
@@ -18,8 +19,6 @@ import graft.api.SqlSession
   * fixture slices (same role as benchto's own template parameters). */
 object TpchText {
   import TestSpark._
-
-  val dir = tpch.BenchtoTexts.dir
 
   lazy val session: SqlSession = {
     val ses = SqlSession.wrap(spark).loadTables(sf)
@@ -29,11 +28,11 @@ object TpchText {
   }
 
   /** Text loading + fixture-domain substitutions live in main scope
-    * (tpch.BenchtoTexts) — shared with the bench's tpch_sql suite. */
+    * (tpch.BenchtoTexts), next to the resources they read. */
   def text(q: String, subs: (String, String)*): String =
     tpch.BenchtoTexts.text(q, subs: _*)
 
-  val stripLimit: (String, String) = ("(?i)LIMIT\\s+\\d+\\s*$", "")
+  val stripLimit: (String, String) = tpch.BenchtoTexts.stripLimit
 
   def tv(n: String): DataFrame = { session; TestSpark.spark.table(s"tpch_$n") }
 }
@@ -474,6 +473,12 @@ class TpchTextSpec extends AnyFunSuite {
   test("q22: global sales opportunity (exact text, pinned empty)") {
     assertClose(session.sql(text("q22")), q22Replica(identity),
       allowEmpty = true)
+  }
+
+  test("a per-query substitution that matches nothing fails the text load") {
+    val e = intercept[IllegalArgumentException](text("q17", ("Brand#99", "Brand#16")))
+    assert(e.getMessage.contains("/Brand#99/"), e.getMessage)
+    assert(text("q01", stripLimit) == text("q01"), "stripLimit is optional")
   }
 
   test("q22: non-empty variant (selective NOT EXISTS)") {
