@@ -140,105 +140,49 @@ object EnumTypes {
     }
   }
 
-  // matched on Dialect.masked text (so occurrences inside string
-  // literals/comments are ignored); the name literal itself is blanked
+  // call heads are matched on the masked text (an enum_key( inside a
+  // string literal or comment is left alone); the name literal is blanked
   // by the mask, so it is re-read from the original at the same offsets
   private val enumKeyOpen = """(?i)\benum_key\s*\(""".r
   private val enumKeyName = """\s*'([^']+)'\s*,""".r
+  private val inlineSig = "(?i)(bigint|varchar)enum\\s*\\(".r
+  private val inlineCastTail = """(?is)\sAS\s+((bigint|varchar)enum\s*\(.*)\z""".r
 
   /** Splice enum semantics into a statement: inline-signature casts,
     * registered-name casts, enum_key name resolution, distinct-type
     * aliases. No-op for sessions with no registered types and no inline
-    * signatures (one cheap regex test). */
+    * signatures (one cheap regex test). Each cast kind goes through the
+    * shared CAST rewrite, which raises past its cap instead of leaving
+    * later casts unrewritten (they would fail analysis confusingly). */
   def rewrite(spark: SparkSession, original: String): String = {
     val session = SessionScope.get(spark, types)
     if (session.isEmpty &&
-      "(?i)(bigint|varchar)enum\\s*\\(".r
-        .findFirstIn(Dialect.masked(original)).isEmpty)
+      inlineSig.findFirstIn(Text.masked(original)).isEmpty)
       return original
-    var cur = original
     // 1. inline signature casts: CAST(x AS BigintEnum(tn{...}))
-    var guard = 0
-    var changed = true
-    val inlineTail = """(?is)\sAS\s+((bigint|varchar)enum\s*\(.*)\z""".r
-    // the 32-cast cap raises instead of silently stopping: a statement
-    // past the cap would otherwise leave later casts unrewritten and
-    // fail analysis with a confusing error (r12 ADVICE fix)
-    def guardTrip(): Unit = if (guard > 32) throw new IllegalStateException(
-      "enum rewrite: more than 32 enum casts in one statement")
-    while (changed) {
-      changed = false; guard += 1
-      val m = Dialect.masked(cur)
-      val hit = Dialect.castOpen.findAllMatchIn(m).flatMap { mt =>
-        val end = Dialect.matchParen(m, mt.end - 1)
-        val span = m.substring(mt.start, end - 1) // drop closing paren
-        inlineTail.findFirstMatchIn(span).map(t =>
-          (mt.start, end, mt.end, mt.start + t.start, mt.start + t.start(1)))
-      }.nextOption()
-      hit.foreach { case (start, end, exprFrom, exprTo, sigFrom) =>
-        guardTrip()
-        val sig = cur.substring(sigFrom, end - 1)
-        val (tn, isBigint, entries) = parseEnumSignature(sig)
-        val b64 = EnumRuntime.encode(tn.toLowerCase, isBigint, entries)
-        cur = cur.substring(0, start) +
-          s"graft_enum_cast('$b64', ${cur.substring(exprFrom, exprTo)})" +
-          cur.substring(end)
-        changed = true
-      }
+    val inlined = Text.rewriteCasts(original, inlineCastTail) { (expr, group) =>
+      val (tn, isBigint, entries) = parseEnumSignature(group(1))
+      val b64 = EnumRuntime.encode(tn.toLowerCase, isBigint, entries)
+      s"graft_enum_cast('$b64', $expr)"
     }
-    // 2. enum_key('name', x) → graft_enum_key('<def>', x): call sites
-    // found on the MASKED text (an enum_key( inside a string literal or
-    // comment is left alone — r12 ADVICE fix); the name literal is
-    // blanked by the mask, so it is re-read from the original
-    locally {
-      val m = Dialect.masked(cur)
-      val sb = new StringBuilder
-      var last = 0
-      enumKeyOpen.findAllMatchIn(m).foreach { open =>
-        enumKeyName.findPrefixMatchOf(
-          cur.subSequence(open.end, cur.length)).foreach { nm =>
-          val name = nm.group(1)
-          session.get(name.toLowerCase) match {
-            case Some(EnumEntry(b64)) =>
-              sb.append(cur.substring(last, open.start))
-              sb.append(s"graft_enum_key('$b64',")
-              last = open.end + nm.end
-            case _ => throw new IllegalArgumentException(
-              s"enum_key: unknown enum type '$name'")
-          }
+    // 2. enum_key('name', x) → graft_enum_key('<def>', x)
+    val keyed = Text.rewriteCalls(inlined, enumKeyOpen, enumKeyName) {
+      (_, nm) =>
+        session.get(nm.group(1).toLowerCase) match {
+          case Some(EnumEntry(b64)) => s"graft_enum_key('$b64',"
+          case _ => throw new IllegalArgumentException(
+            s"enum_key: unknown enum type '${nm.group(1)}'")
         }
-      }
-      sb.append(cur.substring(last))
-      cur = sb.toString
     }
     // 3. registered-name casts + distinct aliases
-    session.foreach { case (name, entry) =>
+    session.foldLeft(keyed) { case (cur, (name, entry)) =>
       val tail = s"""(?is)\\sAS\\s+${java.util.regex.Pattern.quote(name)}\\s*\\z""".r
-      guard = 0; changed = true
-      while (changed) {
-        changed = false; guard += 1
-        val m = Dialect.masked(cur)
-        val hit = Dialect.castOpen.findAllMatchIn(m).flatMap { mt =>
-          val end = Dialect.matchParen(m, mt.end - 1)
-          val span = m.substring(mt.start, end - 1)
-          tail.findFirstMatchIn(span).map(t =>
-            (mt.start, end, mt.end, mt.start + t.start))
-        }.nextOption()
-        hit.foreach { case (start, end, exprFrom, exprTo) =>
-          guardTrip()
-          val inner = cur.substring(exprFrom, exprTo)
-          cur = entry match {
-            case EnumEntry(b64) =>
-              cur.substring(0, start) +
-                s"graft_enum_cast('$b64', $inner)" + cur.substring(end)
-            case DistinctEntry(base) =>
-              cur.substring(0, start) +
-                s"CAST($inner AS $base)" + cur.substring(end)
-          }
-          changed = true
+      Text.rewriteCasts(cur, tail) { (expr, _) =>
+        entry match {
+          case EnumEntry(b64) => s"graft_enum_cast('$b64', $expr)"
+          case DistinctEntry(base) => s"CAST($expr AS $base)"
         }
       }
     }
-    cur
   }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * the scan itself stays a fully distributed multi-file parquet read
   * (ops/DeltaLake.scala, ops/HudiCow.scala, ops/IcebergTable.scala);
   * only KB-sized log/manifest metadata is touched here. Occurrences
-  * inside string literals are left alone. */
+  * inside string literals and comments are left alone. */
 object LakeScans {
 
   private val InsertPat =
@@ -94,10 +94,7 @@ object LakeScans {
         }
         Some(DdlStatements.rowsResult(spark, n))
       case UpdatePat(kind, path, sets, cond) =>
-        val m = splitTop(sets).map { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          k.trim -> expr(v.trim)
-        }.toMap
+        val m = assignments(sets).map { case (k, v) => k -> expr(v) }
         val n = kind.toLowerCase match {
           case "delta" =>
             graft.ops.DeltaLake.update(spark, path, expr(cond), m)
@@ -109,27 +106,13 @@ object LakeScans {
     }
   }
 
-  /** Split on top-level commas (paren depth 0; quotes already constant
-    * inside this grammar position). */
-  private[api] def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          out += s.substring(start, i).trim
-          start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start).trim
-    out.result()
-  }
+  /** `SET a = e, b = f` → column → expression text; commas and `=`
+    * inside literals stay in their expression. */
+  private def assignments(sets: String): Map[String, String] =
+    Text.splitTop(sets).map { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      k.trim -> v.trim
+    }.toMap
 
   /** MERGE INTO delta_scan('/p') / iceberg_scan('/p') AS t USING <src>
     * AS s ON <cond> WHEN MATCHED [AND c] THEN DELETE / WHEN MATCHED THEN
@@ -147,10 +130,10 @@ object LakeScans {
         if (s0.startsWith("(") && s0.endsWith(")"))
           ses.sql(s0.substring(1, s0.length - 1))
         else ses.sql(s"SELECT * FROM $s0")
-      // split the when-clause tail on WHEN keywords (MATCHED never
-      // appears inside the clause expressions' grammar positions)
+      // split the when-clause tail on WHEN [NOT] MATCHED in code position
+      // (MATCHED is no expression keyword; literals are masked)
       val starts = """(?i)\bWHEN\s+(NOT\s+)?MATCHED\b""".r
-        .findAllMatchIn(whens).map(_.start).toSeq
+        .findAllMatchIn(Text.masked(whens)).map(_.start).toSeq
       val clauses = starts.zip(starts.drop(1) :+ whens.length).map {
         case (a, b) => whens.substring(a, b).trim
       }
@@ -161,13 +144,10 @@ object LakeScans {
         case WhenDelete(cond) =>
           del = Some(Option(cond).map(_.trim).getOrElse("true"))
         case WhenUpdate(sets) =>
-          upd = splitTop(sets).map { kv =>
-            val Array(k, v) = kv.split("=", 2)
-            k.trim -> v.trim
-          }.toMap
+          upd = assignments(sets)
         case WhenInsert(cols, vals) =>
-          val ks = splitTop(cols)
-          val vs = splitTop(vals)
+          val ks = Text.splitTop(cols)
+          val vs = Text.splitTop(vals)
           require(ks.length == vs.length,
             s"INSERT column/value count mismatch: $ks vs $vs")
           ins = Some(ks.zip(vs).toMap)
@@ -186,26 +166,14 @@ object LakeScans {
     case _ => None
   }
 
-  private val Pat =
-    ("""(?i)\b(delta|hudi|iceberg)_scan\s*\(\s*'([^']+)'""" +
-      """\s*(?:,\s*('?)([^)']+)\3\s*)?\)""").r
-
-  /** Blank string literals so matching never fires inside them
-    * (same single-quote doubling rule as the dialect). */
-  private def masked(text: String): String = {
-    val sb = new StringBuilder(text)
-    var i = 0
-    var inStr = false
-    while (i < sb.length) {
-      if (sb.charAt(i) == '\'') inStr = !inStr
-      else if (inStr) sb.setCharAt(i, ' ')
-      i += 1
-    }
-    sb.toString
-  }
-
-  private val ChangesPat =
-    """(?i)\b(delta|iceberg)_changes\s*\(\s*'([^']+)'\s*,\s*(\d+)\s*,\s*(\d+)\s*\)""".r
+  // call heads are found on the masked text (a head inside a literal or
+  // comment is never rewritten); the path and version literals are read
+  // from the original text right after the head
+  private val ScanHead = """(?i)\b(delta|hudi|iceberg)_scan\s*\(""".r
+  private val ScanArgs =
+    """\s*'([^']+)'\s*(?:,\s*(?:'([^']+)'|([^)']+))\s*)?\)""".r
+  private val ChangesHead = """(?i)\b(delta|iceberg)_changes\s*\(""".r
+  private val ChangesArgs = """\s*'([^']+)'\s*,\s*(\d+)\s*,\s*(\d+)\s*\)""".r
 
   def rewrite(spark: SparkSession, text: String): String =
     rewriteScans(spark, rewriteChanges(spark, text))
@@ -215,15 +183,12 @@ object LakeScans {
     * ops/IcebergTable.tableChanges) in FROM position. `from` is
     * INCLUSIVE here (the familiar table_changes spelling); Iceberg
     * positions are snapshot ORDINALS. */
-  private def rewriteChanges(spark: SparkSession, text: String): String = {
-    val hits = ChangesPat.findAllMatchIn(masked(text)).toSeq
-    if (hits.isEmpty) return text
-    val sb = new StringBuilder(text)
-    hits.reverseIterator.foreach { h =>
-      val kind = text.substring(h.start(1), h.end(1)).toLowerCase
-      val path = text.substring(h.start(2), h.end(2))
-      val from = text.substring(h.start(3), h.end(3)).toLong
-      val to = text.substring(h.start(4), h.end(4)).toLong
+  private def rewriteChanges(spark: SparkSession, text: String): String =
+    Text.rewriteCalls(text, ChangesHead, ChangesArgs) { (h, a) =>
+      val kind = h.group(1).toLowerCase
+      val path = a.group(1)
+      val from = a.group(2).toLong
+      val to = a.group(3).toLong
       val df = kind match {
         case "delta" =>
           graft.ops.DeltaLake.tableChanges(spark, path, from - 1, to)
@@ -233,22 +198,14 @@ object LakeScans {
       val view = s"graft_${kind}_changes_" + java.lang.Integer.toHexString(
         (path + from + "_" + to).hashCode)
       df.createOrReplaceTempView(view)
-      sb.replace(h.start, h.end, view)
+      view
     }
-    sb.toString
-  }
 
-  private def rewriteScans(spark: SparkSession, text: String): String = {
-    val m = masked(text)
-    val hits = Pat.findAllMatchIn(m).toSeq
-    if (hits.isEmpty) return text
-    val sb = new StringBuilder(text)
-    // replace right-to-left so earlier offsets stay valid
-    hits.reverseIterator.foreach { h =>
-      val kind = text.substring(h.start(1), h.end(1)).toLowerCase
-      val path = text.substring(h.start(2), h.end(2))
-      val arg = Option(h.group(4))
-        .map(_ => text.substring(h.start(4), h.end(4)).trim)
+  private def rewriteScans(spark: SparkSession, text: String): String =
+    Text.rewriteCalls(text, ScanHead, ScanArgs) { (h, a) =>
+      val kind = h.group(1).toLowerCase
+      val path = a.group(1)
+      val arg = Option(a.group(2)).orElse(Option(a.group(3))).map(_.trim)
       val df = (kind, arg) match {
         case ("delta", None) if path.endsWith("#history") =>
           graft.ops.DeltaLake.describeHistory(spark,
@@ -305,8 +262,6 @@ object LakeScans {
       val view = s"graft_${kind}_scan_" + java.lang.Integer.toHexString(
         (path + arg.getOrElse("")).hashCode)
       df.createOrReplaceTempView(view)
-      sb.replace(h.start, h.end, view)
+      view
     }
-    sb.toString
-  }
 }

@@ -37,7 +37,7 @@ object Procedures {
     text.trim match {
       case CallPat(name, argStr) =>
         val spark = ses.spark
-        val args = LakeScans.splitTop(argStr).filter(_.nonEmpty)
+        val args = Text.splitTop(argStr).filter(_.nonEmpty)
         def arg(i: Int): String = {
           require(i < args.length,
             s"procedure $name: missing argument ${i + 1}")

@@ -53,14 +53,14 @@ object SessionStatements {
         Some(status(spark, "PREPARE"))
       case Execute(name, using) =>
         val q = lookup(spark, name)
-        val params = Option(using).map(splitTopLevel).getOrElse(Nil)
+        val params = Option(using).map(Text.splitTop).getOrElse(Nil)
         Some(ses.sql(substitute(q, params)))
       case Dealloc(name) =>
         lookup(spark, name) // raises on unknown name like DeallocateTask
         SessionScope.update(spark, prepared)(_ - name.toLowerCase)
         Some(status(spark, "DEALLOCATE"))
       case DescIn(name) =>
-        val n = countParameters(lookup(spark, name))
+        val n = parameters(lookup(spark, name)).length
         Some(spark.createDataFrame(
           spark.sparkContext.parallelize(
             (1 to n).map(i => Row(i.toLong, "unknown")), 1),
@@ -68,7 +68,7 @@ object SessionStatements {
             StructField("type", StringType, nullable = false)))))
       case DescOut(name) =>
         val schema = ses.sql(substitute(lookup(spark, name),
-          List.fill(countParameters(lookup(spark, name)))("NULL"))).schema
+          List.fill(parameters(lookup(spark, name)).length)("NULL"))).schema
         Some(spark.createDataFrame(
           spark.sparkContext.parallelize(
             // reference type spellings (DescribeOutputRewrite emits varchar
@@ -171,51 +171,26 @@ object SessionStatements {
       s.substring(1, s.length - 1).replace("''", "'")
     else s
 
-  /** Positional `?` parameters outside string literals. */
-  private def countParameters(sql: String): Int = {
-    var n = 0; var i = 0; var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') inStr = !inStr
-      else if (c == '?' && !inStr) n += 1
-      i += 1
-    }
-    n
+  /** Offsets of the positional `?` parameters: code only, so a `?` in a
+    * literal, quoted identifier or comment is not one. */
+  private def parameters(sql: String): Seq[Int] = {
+    val m = Text.masked(sql)
+    m.indices.filter(m.charAt(_) == '?')
   }
 
   /** Substitute `?` placeholders left-to-right with literal texts —
     * the textual analogue of ParameterRewriter over the parsed tree. */
   private def substitute(sql: String, params: Seq[String]): String = {
+    val at = parameters(sql)
+    if (at.length != params.length) throw new IllegalArgumentException(
+      s"Incorrect number of parameters: expected ${at.length} but found " +
+        params.length)
     val sb = new StringBuilder
-    var i = 0; var inStr = false; var p = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') { inStr = !inStr; sb.append(c) }
-      else if (c == '?' && !inStr) {
-        if (p >= params.length) throw new IllegalArgumentException(
-          s"Incorrect number of parameters: expected > ${params.length}")
-        sb.append(params(p)); p += 1
-      } else sb.append(c)
-      i += 1
+    var last = 0
+    at.zip(params).foreach { case (i, p) =>
+      sb.append(sql.substring(last, i)).append(p)
+      last = i + 1
     }
-    if (p != params.length) throw new IllegalArgumentException(
-      s"Incorrect number of parameters: expected $p but found ${params.length}")
-    sb.toString
-  }
-
-  /** Split `USING a, b, c` on top-level commas (quotes and parens nest). */
-  private def splitTopLevel(s: String): List[String] = {
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    val sb = new StringBuilder
-    var depth = 0; var inStr = false
-    s.foreach { c =>
-      if (c == '\'') { inStr = !inStr; sb.append(c) }
-      else if (!inStr && (c == '(' || c == '[')) { depth += 1; sb.append(c) }
-      else if (!inStr && (c == ')' || c == ']')) { depth -= 1; sb.append(c) }
-      else if (!inStr && c == ',' && depth == 0) { out += sb.toString.trim; sb.clear() }
-      else sb.append(c)
-    }
-    if (sb.nonEmpty) out += sb.toString.trim
-    out.toList
+    sb.append(sql.substring(last)).toString
   }
 }

@@ -104,15 +104,12 @@ object SqlFunctions {
 
   /** `p1 type1, p2 type2, …` — types may carry parens (decimal(10,2)). */
   private def parseParams(s: String): Seq[(String, String)] = {
-    val trimmed = s.trim
-    if (trimmed.isEmpty) Seq.empty
-    else Text.topLevelArgs(Text.masked(trimmed), 0, trimmed.length).map {
-      case (from, to) =>
-        val p = trimmed.substring(from, to).trim
-        val sp = p.indexWhere(_.isWhitespace)
-        if (sp < 0) throw new IllegalArgumentException(
-          s"Malformed parameter declaration: '$p' (expected name type)")
-        (p.substring(0, sp).toLowerCase, p.substring(sp).trim)
+    if (s.trim.isEmpty) Seq.empty
+    else Text.splitTop(s).map { p =>
+      val sp = p.indexWhere(_.isWhitespace)
+      if (sp < 0) throw new IllegalArgumentException(
+        s"Malformed parameter declaration: '$p' (expected name type)")
+      (p.substring(0, sp).toLowerCase, p.substring(sp).trim)
     }
   }
 
@@ -202,89 +199,5 @@ object SqlFunctions {
     for ((from, to, arg) <- hits)
       body = body.substring(0, from) + s"($arg)" + body.substring(to)
     s"CAST(($body) AS ${defn.returns})"
-  }
-}
-
-/** Text-scanning helpers shared by the dialect layers: quote/comment
-  * segmentation, balanced-paren matching, top-level comma splitting. */
-private[api] object Text {
-
-  /** Split into (segment, isCode): code vs '…' strings (with '' escapes),
-    * "…" identifiers, `--` line and slash-star block comments. */
-  def segments(text: String): Seq[(String, Boolean)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-    val n = text.length
-    var i = 0
-    var start = 0
-    def flushCode(end: Int): Unit =
-      if (end > start) out += ((text.substring(start, end), true))
-    while (i < n) {
-      val c = text.charAt(i)
-      if (c == '\'' || c == '"') {
-        flushCode(i)
-        var j = i + 1
-        var open = true
-        while (j < n && open) {
-          if (text.charAt(j) == c) {
-            if (j + 1 < n && text.charAt(j + 1) == c) j += 2 // '' escape
-            else { open = false; j += 1 }
-          } else j += 1
-        }
-        out += ((text.substring(i, j), false)); i = j; start = j
-      } else if (c == '-' && i + 1 < n && text.charAt(i + 1) == '-') {
-        flushCode(i)
-        var j = i
-        while (j < n && text.charAt(j) != '\n') j += 1
-        out += ((text.substring(i, j), false)); i = j; start = j
-      } else if (c == '/' && i + 1 < n && text.charAt(i + 1) == '*') {
-        flushCode(i)
-        val e = text.indexOf("*/", i + 2)
-        val j = if (e < 0) n else e + 2
-        out += ((text.substring(i, j), false)); i = j; start = j
-      } else i += 1
-    }
-    flushCode(n)
-    out.toSeq
-  }
-
-  /** Original text with non-code spans blanked — safe for paren matching. */
-  def masked(text: String): String =
-    segments(text).map { case (seg, isCode) =>
-      if (isCode) seg else " " * seg.length
-    }.mkString
-
-  def matchParen(m: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < m.length) {
-      m.charAt(i) match {
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    m.length
-  }
-
-  /** Split `m` (masked) at top-level commas in [from, to) → index ranges. */
-  def topLevelArgs(m: String, from: Int, to: Int): Seq[(Int, Int)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var depth = 0
-    var start = from
-    var i = from
-    while (i < to) {
-      m.charAt(i) match {
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case ',' if depth == 0 => out += ((start, i)); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += ((start, to))
-    out.toSeq
   }
 }

@@ -41,41 +41,8 @@ final class SqlSession private (val spark: SparkSession) {
     LakeScans.dispatchMerge(this, text0).foreach(df => return df)
     LakeScans.dispatchDml(this, text0).foreach(df => return df)
     Procedures.dispatch(this, text0).foreach(df => return df)
-    // system.runtime.* observability tables (reference
-    // QuerySystemTable.java / NodesSystemTable.java): snapshot the
-    // statement-server registry into temp views at reference time
-    val text1 = {
-      var t = LakeScans.rewrite(spark, text0)
-      if ("(?i)\\bsystem\\.runtime\\.queries\\b".r.findFirstIn(t).isDefined) {
-        StatementServer.runtimeQueries(spark)
-          .createOrReplaceTempView("system_runtime_queries")
-        t = t.replaceAll("(?i)\\bsystem\\.runtime\\.queries\\b",
-          "system_runtime_queries")
-      }
-      if ("(?i)\\bsystem\\.runtime\\.nodes\\b".r.findFirstIn(t).isDefined) {
-        StatementServer.runtimeNodes(spark)
-          .createOrReplaceTempView("system_runtime_nodes")
-        t = t.replaceAll("(?i)\\bsystem\\.runtime\\.nodes\\b",
-          "system_runtime_nodes")
-      }
-      // information_schema.tables/columns (reference
-      // InformationSchemaMetadata.java:63-66 table set; ANSI shapes) —
-      // snapshot of the session catalog, reference type spellings
-      if ("(?i)\\binformation_schema\\.tables\\b".r.findFirstIn(t).isDefined) {
-        SqlSession.informationSchemaTables(spark)
-          .createOrReplaceTempView("information_schema_tables")
-        t = t.replaceAll("(?i)\\binformation_schema\\.tables\\b",
-          "information_schema_tables")
-      }
-      if ("(?i)\\binformation_schema\\.columns\\b".r.findFirstIn(t).isDefined) {
-        SqlSession.informationSchemaColumns(spark)
-          .createOrReplaceTempView("information_schema_columns")
-        t = t.replaceAll("(?i)\\binformation_schema\\.columns\\b",
-          "information_schema_columns")
-      }
-      t
-    }
-    val text = text1
+    val text = SqlSession.bindSystemTables(spark,
+      LakeScans.rewrite(spark, text0))
     SessionStatements.dispatch(this, text)
       .orElse(SqlFunctions.dispatch(spark, text)
         .map(DdlStatements.statusResult(spark, _)))
@@ -134,6 +101,35 @@ object SqlSession {
     GraftFunctions.register(spark)
     graft.rules.GraftRules.install(spark)
     new SqlSession(spark)
+  }
+
+  /** system.runtime.* observability tables (reference
+    * QuerySystemTable.java / NodesSystemTable.java) and
+    * information_schema.tables/columns (reference
+    * InformationSchemaMetadata.java:63-66 table set; ANSI shapes), each a
+    * snapshot taken when a statement names it. */
+  private val systemTables: Map[String, SparkSession => DataFrame] = Map(
+    "system.runtime.queries" -> StatementServer.runtimeQueries,
+    "system.runtime.nodes" -> StatementServer.runtimeNodes,
+    "information_schema.tables" -> informationSchemaTables,
+    "information_schema.columns" -> informationSchemaColumns)
+
+  private val systemTableName = systemTables.keys
+    .map(java.util.regex.Pattern.quote).mkString("(?i)\\b(", "|", ")\\b").r
+
+  /** Rewrite each system-table name in code position to a temp view
+    * (`system.runtime.queries` → `system_runtime_queries`) and snapshot
+    * the views it names; names inside literals and comments stay text. */
+  private def bindSystemTables(spark: SparkSession, text: String): String = {
+    if (systemTableName.findFirstIn(text).isEmpty) return text
+    val named = scala.collection.mutable.Set.empty[String]
+    val out = Text.mapCode(text)(systemTableName.replaceAllIn(_, { m =>
+      named += m.group(1).toLowerCase
+      m.group(1).toLowerCase.replace('.', '_')
+    }))
+    named.foreach(n =>
+      systemTables(n)(spark).createOrReplaceTempView(n.replace('.', '_')))
+    out
   }
 
   /** One (catalog, schema, name, type) row per catalog entry — the
@@ -196,6 +192,7 @@ object SqlSession {
   * (occurrence variant — no Spark builtin) routes to the registered
   * `graft_strpos3` expression instead of the 2-arg `instr` rename. */
 object Dialect {
+  import Text.{masked, matchParen, topLevelArgs}
 
   private val renames: Seq[(String, String)] = Seq(
     "approx_distinct" -> "approx_count_distinct",
@@ -253,49 +250,6 @@ object Dialect {
     "sketch_kll_quantile" -> "kll_quantile",
     "sketch_kll_rank" -> "kll_rank")
 
-  /** (segment, isCode) spans covering the whole text in order. */
-  private def segments(text: String): Seq[(String, Boolean)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-    val n = text.length
-    var i = 0
-    var start = 0
-    def flushCode(end: Int): Unit =
-      if (end > start) out += ((text.substring(start, end), true))
-    while (i < n) {
-      val c = text.charAt(i)
-      if (c == '\'' || c == '"') {
-        flushCode(i)
-        var j = i + 1
-        var open = true
-        while (j < n && open) {
-          if (text.charAt(j) == c) {
-            if (j + 1 < n && text.charAt(j + 1) == c) j += 2 // '' escape
-            else { open = false; j += 1 }
-          } else j += 1
-        }
-        out += ((text.substring(i, j), false)); i = j; start = j
-      } else if (c == '-' && i + 1 < n && text.charAt(i + 1) == '-') {
-        flushCode(i)
-        var j = i
-        while (j < n && text.charAt(j) != '\n') j += 1
-        out += ((text.substring(i, j), false)); i = j; start = j
-      } else if (c == '/' && i + 1 < n && text.charAt(i + 1) == '*') {
-        flushCode(i)
-        val e = text.indexOf("*/", i + 2)
-        val j = if (e < 0) n else e + 2
-        out += ((text.substring(i, j), false)); i = j; start = j
-      } else i += 1
-    }
-    flushCode(n)
-    out.toSeq
-  }
-
-  /** Original text with non-code spans blanked — safe for paren matching. */
-  private[api] def masked(text: String): String =
-    segments(text).map { case (seg, isCode) =>
-      if (isCode) seg else " " * seg.length
-    }.mkString
-
   private val strposCall = "(?i)\\bstrpos\\s*\\(".r
 
   /** Route the 3-arg occurrence variant to the registered
@@ -308,19 +262,8 @@ object Dialect {
     val sb = new StringBuilder
     var last = 0
     strposCall.findAllMatchIn(m).foreach { hit =>
-      var depth = 1
-      var commas = 0
-      var i = hit.end
-      while (i < m.length && depth > 0) {
-        m.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case ',' if depth == 1 => commas += 1
-          case _ =>
-        }
-        i += 1
-      }
-      if (commas >= 2) {
+      val close = matchParen(m, hit.end - 1)
+      if (topLevelArgs(m, hit.end, close - 1).length >= 3) {
         sb.append(original.substring(last, hit.start))
           .append("graft_strpos3(")
         last = hit.end
@@ -364,10 +307,12 @@ object Dialect {
     * CAST(x AS CHAR(n)) → rpad(CAST(x AS STRING), n, ' '). Known
     * deviation: comparing chars of two DIFFERENT declared lengths is
     * false here (the reference pads both to the longer length first). */
-  private[api] val castOpen = "(?i)\\bCAST\\s*\\(".r
-  // single \s before AS: masked literals read as spaces, so a greedy \s+
-  // would swallow the cast content when it is a string literal
-  private val charCastTail = "(?is)\\sAS\\s+CHAR\\s*\\(\\s*(\\d+)\\s*\\)\\s*\\)$".r
+  private val charCastTail = "(?is)\\sAS\\s+CHAR\\s*\\(\\s*(\\d+)\\s*\\)\\s*\\z".r
+
+  private def rewriteCharCast(original: String): String =
+    Text.rewriteCasts(original, charCastTail)((expr, group) =>
+      s"rpad(CAST($expr AS STRING), ${group(1)}, ' ')")
+
   /** Reference DECIMAL 'n.n' typed literals (SqlBase.g4 typeConstructor,
     * e.g. `DECIMAL '1.2'` in the benchto TPC-DS texts) → Spark's
     * BD-suffixed exact decimal literal. Runs pre-segmentation because the
@@ -381,42 +326,10 @@ object Dialect {
     * aliases (`expr "alias"`), so the dialect rewrites the quote character
     * itself. Double quotes inside single-quoted strings are data and are
     * left alone; the reference dialect has no double-quoted strings. */
-  private def rewriteAnsiQuotes(original: String): String = {
-    val sb = new StringBuilder(original.length)
-    var inStr = false
-    var i = 0
-    while (i < original.length) {
-      val c = original.charAt(i)
-      if (c == '\'') { inStr = !inStr; sb.append(c) }
-      else if (c == '"' && !inStr) sb.append('`')
-      else sb.append(c)
-      i += 1
-    }
-    sb.toString
-  }
-
-  private def rewriteCharCast(original: String): String = {
-    var cur = original
-    var changed = true
-    var guard = 0
-    while (changed && guard < 32) {
-      changed = false; guard += 1
-      val m = masked(cur)
-      val hit = castOpen.findAllMatchIn(m).flatMap { mt =>
-        val end = matchParen(m, mt.end - 1)
-        val span = m.substring(mt.start, end)
-        charCastTail.findFirstMatchIn(span).map(t =>
-          (mt.start, end, mt.end, mt.start + t.start, t.group(1)))
-      }.nextOption()
-      hit.foreach { case (start, end, cFrom, cTo, n) =>
-        cur = cur.substring(0, start) +
-          s"rpad(CAST(${cur.substring(cFrom, cTo)} AS STRING), $n, ' ')" +
-          cur.substring(end)
-        changed = true
-      }
-    }
-    cur
-  }
+  private def rewriteAnsiQuotes(original: String): String =
+    Text.segments(original).map { case (seg, isCode) =>
+      if (!isCode && seg.charAt(0) == '"') seg.replace('"', '`') else seg
+    }.mkString
 
   /** `TIME '<time> <zone>'` literals (per-value zone — the reference's
     * TIME WITH TIME ZONE literal form, SqlBase.g4 + SqlTimeWithTimeZone)
@@ -446,96 +359,21 @@ object Dialect {
         s"graft_tstz('${m.group(1)}')"))
 
   private val timeTzCastTail =
-    "(?is)\\sAS\\s+TIME\\s+WITH\\s+TIME\\s+ZONE\\s*\\)$".r
+    "(?is)\\sAS\\s+TIME\\s+WITH\\s+TIME\\s+ZONE\\s*\\z".r
 
   private val tsTzCastTail =
-    "(?is)\\sAS\\s+TIMESTAMP\\s+WITH\\s+TIME\\s+ZONE\\s*\\)$".r
+    "(?is)\\sAS\\s+TIMESTAMP\\s+WITH\\s+TIME\\s+ZONE\\s*\\z".r
 
   /** `CAST(x AS TIMESTAMP WITH TIME ZONE)` → graft_to_tstz(x). */
-  private def rewriteTsTzCast(original: String): String = {
-    var cur = original
-    var changed = true
-    var guard = 0
-    while (changed && guard < 32) {
-      changed = false; guard += 1
-      val m = masked(cur)
-      val hit = castOpen.findAllMatchIn(m).flatMap { mt =>
-        val end = matchParen(m, mt.end - 1)
-        val span = m.substring(mt.start, end)
-        tsTzCastTail.findFirstMatchIn(span).map(t =>
-          (mt.start, end, mt.end, mt.start + t.start))
-      }.nextOption()
-      hit.foreach { case (start, end, cFrom, cTo) =>
-        cur = cur.substring(0, start) +
-          s"graft_to_tstz(${cur.substring(cFrom, cTo)})" +
-          cur.substring(end)
-        changed = true
-      }
-    }
-    cur
-  }
+  private def rewriteTsTzCast(original: String): String =
+    Text.rewriteCasts(original, tsTzCastTail)((expr, _) =>
+      s"graft_to_tstz($expr)")
 
   /** `CAST(x AS TIME WITH TIME ZONE)` → graft_to_timetz(x) (type-dispatch
     * happens in the builder on the resolved argument type). */
-  private def rewriteTimeTzCast(original: String): String = {
-    var cur = original
-    var changed = true
-    var guard = 0
-    while (changed && guard < 32) {
-      changed = false; guard += 1
-      val m = masked(cur)
-      val hit = castOpen.findAllMatchIn(m).flatMap { mt =>
-        val end = matchParen(m, mt.end - 1)
-        val span = m.substring(mt.start, end)
-        timeTzCastTail.findFirstMatchIn(span).map(t =>
-          (mt.start, end, mt.end, mt.start + t.start))
-      }.nextOption()
-      hit.foreach { case (start, end, cFrom, cTo) =>
-        cur = cur.substring(0, start) +
-          s"graft_to_timetz(${cur.substring(cFrom, cTo)})" +
-          cur.substring(end)
-        changed = true
-      }
-    }
-    cur
-  }
-
-  /** End index (exclusive) of the parenthesized group opening at `open`
-    * (index of '('), measured on the masked text. */
-  private[api] def matchParen(m: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < m.length) {
-      m.charAt(i) match {
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    m.length
-  }
-
-  /** Split `span` (masked) at top-level commas → index ranges into it. */
-  private def topLevelArgs(m: String, from: Int, to: Int): Seq[(Int, Int)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var depth = 0
-    var start = from
-    var i = from
-    while (i < to) {
-      m.charAt(i) match {
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case ',' if depth == 0 => out += ((start, i)); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += ((start, to))
-    out.toSeq
-  }
+  private def rewriteTimeTzCast(original: String): String =
+    Text.rewriteCasts(original, timeTzCastTail)((expr, _) =>
+      s"graft_to_timetz($expr)")
 
   private val unnestRel =
     "(?i)(,|\\bCROSS\\s+JOIN|\\bFROM)\\s*UNNEST\\s*(?=\\()".r
@@ -887,41 +725,40 @@ object Dialect {
     // a clear error rather than Spark's parse failure.
     val base = rewriteTsTzCast(rewriteTimeTzCast(rewriteTsTzLiteral(
       rewriteTimeTzLiteral(rewriteAnsiQuotes(text)))))
-    if (timeWithTz.findFirstIn(masked(base)).isDefined)
+    val baseMasked = masked(base)
+    if (timeWithTz.findFirstIn(baseMasked).isDefined)
       throw new UnsupportedOperationException(
         "time with time zone is supported as a literal (TIME 'hh:mm:ss " +
           "<zone>'), in CAST, and through its functions (hour/minute/" +
           "second/timezone_hour/timezone_minute/at_timezone); it is not " +
           "supported as a DDL column type")
-    if (tsWithTz.findFirstIn(masked(base)).isDefined)
+    if (tsWithTz.findFirstIn(baseMasked).isDefined)
       throw new UnsupportedOperationException(
         "timestamp with time zone is supported as a literal (TIMESTAMP " +
           "'yyyy-MM-dd hh:mm:ss <zone>'), in CAST, and through its " +
           "functions (year/quarter/month/day/hour/minute/second/" +
           "millisecond/timezone_hour/timezone_minute/at_timezone/" +
           "graft_tstz_format); it is not supported as a DDL column type")
-    segments(rewriteTableSample(rewriteUnnest(rewriteSubscripts(
+    Text.mapCode(rewriteTableSample(rewriteUnnest(rewriteSubscripts(
       rewriteExcludeColumns(rewriteGroupsFrame(rewriteUnitCalls(
         rewriteCharCast(rewriteStrpos3(rewriteQuantified(
           rewriteDecimalLiteral(base)))))))),
-      unnestStructRows))).map {
-      case (seg, false) => seg
-      case (seg, true) =>
-        val renamed = renames.foldLeft(seg) { case (t, (from, to)) =>
-          t.replaceAll(s"(?i)\\b$from\\s*\\(", s"$to(")
-        }
-        // reference bare niladic spellings Spark only accepts with parens
-        // (SqlBase.g4 specialDateTimeFunction: LOCALTIMESTAMP / LOCALTIME)
-        renamed
-          // reference's unbounded VARCHAR type name (StandardTypes.java:31)
-          // — Spark's varchar demands a length; STRING is the same type
-          .replaceAll("(?i)\\bvarchar\\b(?!\\s*\\()", "string")
-          .replaceAll("(?i)\\blocaltimestamp\\b(?!\\s*\\()", "localtimestamp()")
-          // reference CURRENT_TIME (niladic, returns time with time zone)
-          .replaceAll("(?i)\\bcurrent_time\\b(?!\\s*\\()", "current_time()")
-          .replaceAll("(?i)\\blocaltime\\b(?!\\s*\\()",
-            "make_time(hour(localtimestamp()), minute(localtimestamp()), " +
-              "CAST(extract(SECOND FROM localtimestamp()) AS DOUBLE))")
-    }.mkString
+      unnestStructRows))) { seg =>
+      val renamed = renames.foldLeft(seg) { case (t, (from, to)) =>
+        t.replaceAll(s"(?i)\\b$from\\s*\\(", s"$to(")
+      }
+      // reference bare niladic spellings Spark only accepts with parens
+      // (SqlBase.g4 specialDateTimeFunction: LOCALTIMESTAMP / LOCALTIME)
+      renamed
+        // reference's unbounded VARCHAR type name (StandardTypes.java:31)
+        // — Spark's varchar demands a length; STRING is the same type
+        .replaceAll("(?i)\\bvarchar\\b(?!\\s*\\()", "string")
+        .replaceAll("(?i)\\blocaltimestamp\\b(?!\\s*\\()", "localtimestamp()")
+        // reference CURRENT_TIME (niladic, returns time with time zone)
+        .replaceAll("(?i)\\bcurrent_time\\b(?!\\s*\\()", "current_time()")
+        .replaceAll("(?i)\\blocaltime\\b(?!\\s*\\()",
+          "make_time(hour(localtimestamp()), minute(localtimestamp()), " +
+            "CAST(extract(SECOND FROM localtimestamp()) AS DOUBLE))")
+    }
   }
 }

@@ -425,53 +425,24 @@ object StatementServer {
       case _ if lower.startsWith("array(") =>
         ArrayType(sparkType(s.substring(6, s.length - 1)))
       case _ if lower.startsWith("map(") =>
-        val inner = s.substring(4, s.length - 1)
-        val cut = topLevelSplit(inner)
-        MapType(sparkType(inner.substring(0, cut)),
-          sparkType(inner.substring(cut + 1)))
+        val Seq(k, v) = typeArgs(s.substring(4, s.length - 1))
+        MapType(sparkType(k), sparkType(v))
       case _ if lower.startsWith("row(") =>
-        StructType(splitAll(s.substring(4, s.length - 1)))
+        StructType(typeArgs(s.substring(4, s.length - 1)).map { f =>
+          val sp = f.indexOf(' ')
+          StructField(f.substring(0, sp), sparkType(f.substring(sp + 1)))
+        })
       case other => throw new IllegalArgumentException(s"type: $other")
     }
   }
 
-  /** Index of the first top-level ',' (depth-0 wrt parens). */
-  private def topLevelSplit(s: String): Int = {
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => return i
-        case _ =>
-      }
-      i += 1
+  /** A wire type's parameters, cut at its top-level commas. Field names
+    * are unquoted on the wire, so the type text itself is scanned (a name
+    * holding an apostrophe must not open a literal). */
+  private def typeArgs(s: String): Seq[String] =
+    Text.topLevelArgs(s, 0, s.length).map { case (a, b) =>
+      s.substring(a, b).trim
     }
-    -1
-  }
-
-  private def splitAll(s: String): Array[StructField] = {
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => parts += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    parts += s.substring(start)
-    parts.toArray.map { f =>
-      val ft = f.trim
-      val sp = ft.indexOf(' ')
-      StructField(ft.substring(0, sp), sparkType(ft.substring(sp + 1)))
-    }
-  }
 
   // ---------- value serde (schema-driven; rows-as-arrays like the
   // reference's JSON data pages)

@@ -479,7 +479,8 @@ class DeltaSpec extends AnyFunSuite {
     assert(ses.sql(s"DELETE FROM delta_scan('${dd.getPath}') WHERE k = 3")
       .collect()(0).getLong(0) == 1L)
     assert(ses.sql(
-      s"UPDATE delta_scan('${dd.getPath}') SET v = v * 10 WHERE k = 2")
+      s"UPDATE delta_scan('${dd.getPath}') " +
+        "SET v = CASE WHEN 'x,y' <> '' THEN v * 10 END WHERE k = 2")
       .collect()(0).getLong(0) == 1L)
     assert(ses.sql(s"SELECT k, v FROM delta_scan('${dd.getPath}') " +
       "ORDER BY k").collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -513,15 +514,15 @@ class DeltaSpec extends AnyFunSuite {
          |       AS x(mk, mv)) AS s
          |ON t.k = s.mk
          |WHEN MATCHED AND s.mk = 3 THEN DELETE
-         |WHEN MATCHED THEN UPDATE SET v = s.mv
-         |WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (s.mk, 'n', s.mv)
+         |WHEN MATCHED THEN UPDATE SET v = CASE WHEN 'x,y' <> '' THEN s.mv END
+         |WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (s.mk, 'n,1', s.mv)
          |""".stripMargin).collect()
     assert(r(0).getLong(0) == 3L) // 1 updated + 1 deleted + 1 inserted
     val out = ses.sql(s"SELECT k, s, v FROM delta_scan('${dd.getPath}') " +
       "ORDER BY k").collect().map(x =>
       (x.getLong(0), x.getString(1), x.getDouble(2)))
     assert(out.toSeq == Seq((1L, "a", 1.0), (2L, "b", 20.0),
-      (4L, "n", 40.0)))
+      (4L, "n,1", 40.0)))
   }
 
   test("DELETE rewrites only the files holding matches; NULL keeps rows") {

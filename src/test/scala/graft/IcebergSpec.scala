@@ -509,13 +509,15 @@ class IcebergSpec extends AnyFunSuite {
          |USING (SELECT * FROM (VALUES (4, 0.5), (9, 9.0)) AS x(mk, mv))
          |  AS s
          |ON t.k = s.mk
-         |WHEN MATCHED THEN UPDATE SET v = s.mv
-         |WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (s.mk, 'i', s.mv)
+         |WHEN MATCHED THEN UPDATE SET v = CASE WHEN 'x,y' <> '' THEN s.mv END
+         |WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (s.mk, 'i,j', s.mv)
          |""".stripMargin).collect()
     assert(r(0).getLong(0) == 2L)
     assert(IcebergTable.read(spark, dir.getPath).orderBy("k").collect()
       .map(x => (x.getLong(0), x.getDouble(2))).toSeq ==
       Seq((1L, 1.0), (2L, 20.0), (4L, 0.5), (9L, 9.0)))
+    assert(IcebergTable.read(spark, dir.getPath).where("k = 9")
+      .select("s").collect()(0).getString(0) == "i,j")
   }
 
   test("metadata tables: history/manifests/refs/partitions/properties") {

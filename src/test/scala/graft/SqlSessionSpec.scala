@@ -127,6 +127,18 @@ class SqlSessionSpec extends AnyFunSuite {
     assert(r.getString(0) == "a" && r.getInt(1) == 7)
   }
 
+  test("more than 32 CHAR casts raises; 32 still pad") {
+    def casts(n: Int) = (1 to n)
+      .map(i => s"length(CAST('a' AS CHAR(3))) AS c$i").mkString(", ")
+    val r = session.sql(s"SELECT ${casts(32)}").collect()(0)
+    assert((0 until 32).forall(r.getInt(_) == 3))
+    // the 33rd cast must not be left unpadded (length 1) silently
+    val e = intercept[IllegalStateException] {
+      session.sql(s"SELECT ${casts(33)}").collect()
+    }
+    assert(e.getMessage.contains("more than 32"), e.getMessage)
+  }
+
   test("ALL 22 reference benchto TPC-H texts run through SqlSession") {
     // benchto instantiates "${database}"."${schema}"."${prefix}table" via
     // template substitution and uses the tpch connector's UNPREFIXED column
@@ -456,6 +468,13 @@ class SqlSessionSpec extends AnyFunSuite {
     // string parameters keep their quotes through substitution
     session.sql("PREPARE ps2 FROM SELECT n_name FROM nation WHERE n_name = ?")
     assert(session.sql("EXECUTE ps2 USING 'NATION_7'").collect().length == 1)
+    // parameters are found in code only: the `?` inside a quoted
+    // identifier is not one, and an apostrophe in a comment hides none
+    session.sql("PREPARE ps3 FROM SELECT n_name AS \"who?\" FROM nation " +
+      "-- the nation's key\nWHERE n_nationkey = ?")
+    val ps3 = session.sql("EXECUTE ps3 USING 7")
+    assert(ps3.columns.toSeq == Seq("who?"))
+    assert(ps3.collect().length == 1)
   }
 
   test("DESCRIBE INPUT and DESCRIBE OUTPUT report parameters and schema") {

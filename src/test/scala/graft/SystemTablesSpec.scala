@@ -29,6 +29,16 @@ class SystemTablesSpec extends AnyFunSuite {
     assert(r.getAs[String]("state") == "active")
   }
 
+  test("system-table names inside literals and comments stay text") {
+    val r = SqlSession.wrap(spark).sql(
+      """SELECT 'see system.runtime.queries' AS q,
+        |  'information_schema.tables or information_schema.columns' AS i
+        |  -- system.runtime.nodes""".stripMargin).collect()(0)
+    assert(r.getString(0) == "see system.runtime.queries")
+    assert(r.getString(1) ==
+      "information_schema.tables or information_schema.columns")
+  }
+
   test("system.runtime.queries shows a finished query with its text") {
     base
     StatementClient.execute(spark, base,
