@@ -68,7 +68,7 @@ object Cli {
         }
         if (text.endsWith(";")) {
           buf.clear()
-          runOne(spark, base, text.stripSuffix(";"))
+          runOne(spark, base, text)
           print("graft> ")
         }
       }

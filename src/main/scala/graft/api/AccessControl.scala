@@ -267,7 +267,7 @@ object AccessControl {
       throw new IllegalArgumentException(s"Role '$r' does not exist")
     def requireRoles(rs: Seq[String]): Unit =
       rs.find(r => !a.roles.contains(r)).foreach(missing)
-    text.trim.stripSuffix(";").trim match {
+    text match {
       case CreateRole(name, admin) =>
         val r = name.toLowerCase
         if (admin != null && !a.roles.contains(admin.toLowerCase) &&

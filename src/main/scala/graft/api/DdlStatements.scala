@@ -76,7 +76,7 @@ object DdlStatements {
     def put(name: String, e: Entry) =
       SessionScope.update(spark, objects)(_ + (name -> e))
     def remove(name: String) = SessionScope.update(spark, objects)(_ - name)
-    text.trim.stripSuffix(";").trim match {
+    text match {
       case CreateView(orReplace, rawName, query) =>
         val name = local(rawName)
         if (orReplace == null && exists(spark, name))

@@ -32,9 +32,9 @@ object EnumTypes {
   private val types = SessionScope.catalog(Map.empty[String, TypeEntry])
 
   private val CreateType =
-    """(?is)\ACREATE\s+TYPE\s+([\w.]+)\s+AS\s+(.+?)\s*;?\s*\z""".r
+    """(?is)\ACREATE\s+TYPE\s+([\w.]+)\s+AS\s+(.+)\z""".r
   private val DropType =
-    """(?is)\ADROP\s+TYPE\s+(IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*\z""".r
+    """(?is)\ADROP\s+TYPE\s+(IF\s+EXISTS\s+)?([\w.]+)\z""".r
   private val EnumSig = """(?is)\A(bigint|varchar)enum\s*\(.*\)\z""".r
 
   /** Parse `BigintEnum(tn{"K":1,…})` / `VarcharEnum(tn{"K":"v",…})` into
@@ -114,7 +114,7 @@ object EnumTypes {
     * Spark's native struct types). */
   def dispatch(ses: SqlSession, text: String): Option[DataFrame] = {
     val spark = ses.spark
-    text.trim match {
+    text match {
       case CreateType(name, definition) =>
         val entry = definition.trim match {
           case sig @ EnumSig(_) =>

@@ -22,8 +22,9 @@ import org.apache.spark.sql.SparkSession
   * inside string literals and comments are left alone. */
 object LakeScans {
 
-  private val InsertPat =
-    """(?is)\AINSERT\s+INTO\s+(delta|iceberg)_scan\s*\(\s*'([^']+)'\s*\)\s+(.+)\z""".r
+  // matched on the masked text (Text.Pattern), groups read from the original
+  private val InsertPat = new Text.Pattern(
+    """(?is)INSERT\s+INTO\s+(delta|iceberg)_scan\s*\(\s*'([^']+)'\s*\)\s+(.+)""".r)
 
   /** INSERT INTO delta_scan('/p') / iceberg_scan('/p') SELECT ... — the
     * SQL-text surface over the engine's lake append writers
@@ -34,7 +35,7 @@ object LakeScans {
     * BEFORE the FROM-position scan rewrite or the target spelling would
     * be swallowed as a read. */
   def dispatchInsert(ses: SqlSession, text: String)
-      : Option[org.apache.spark.sql.DataFrame] = text.trim match {
+      : Option[org.apache.spark.sql.DataFrame] = text match {
     case InsertPat(kind, path, query) =>
       import org.apache.spark.sql.functions.col
       val spark = ses.spark
@@ -58,24 +59,24 @@ object LakeScans {
     case _ => None
   }
 
-  private val MergePat =
-    ("""(?is)\AMERGE\s+INTO\s+(delta|iceberg)_scan\s*\(\s*'([^']+)'\s*\)\s+""" +
+  private val MergePat = new Text.Pattern(
+    ("""(?is)MERGE\s+INTO\s+(delta|iceberg)_scan\s*\(\s*'([^']+)'\s*\)\s+""" +
       """(?:AS\s+)?t\s+USING\s+(.+?)\s+(?:AS\s+)?s\s+ON\s+(.+?)\s+""" +
-      """(WHEN\s.+)\z""").r
-  private val WhenDelete =
-    """(?is)\AWHEN\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+DELETE\s*\z""".r
-  private val WhenUpdate =
-    """(?is)\AWHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+(.+)\z""".r
-  private val WhenInsert =
-    ("""(?is)\AWHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s*""" +
-      """\(([^)]*)\)\s*VALUES\s*\((.+)\)\s*\z""").r
+      """(WHEN\s.+)""").r)
+  private val WhenDelete = new Text.Pattern(
+    """(?is)WHEN\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+DELETE\s*""".r)
+  private val WhenUpdate = new Text.Pattern(
+    """(?is)WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+(.+)""".r)
+  private val WhenInsert = new Text.Pattern(
+    ("""(?is)WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s*""" +
+      """\(([^)]*)\)\s*VALUES\s*\((.+)\)\s*""").r)
 
-  private val DeletePat =
-    ("""(?is)\ADELETE\s+FROM\s+(delta|iceberg)_scan\s*\(\s*'([^']+)'""" +
-      """\s*\)\s+WHERE\s+(.+)\z""").r
-  private val UpdatePat =
-    ("""(?is)\AUPDATE\s+(delta|iceberg)_scan\s*\(\s*'([^']+)'\s*\)\s+""" +
-      """SET\s+(.+?)\s+WHERE\s+(.+)\z""").r
+  private val DeletePat = new Text.Pattern(
+    ("""(?is)DELETE\s+FROM\s+(delta|iceberg)_scan\s*\(\s*'([^']+)'""" +
+      """\s*\)\s+WHERE\s+(.+)""").r)
+  private val UpdatePat = new Text.Pattern(
+    ("""(?is)UPDATE\s+(delta|iceberg)_scan\s*\(\s*'([^']+)'\s*\)\s+""" +
+      """SET\s+(.+?)\s+WHERE\s+(.+)""").r)
 
   /** DELETE FROM delta_scan('/p') WHERE c / UPDATE ..._scan('/p') SET
     * a = e, ... WHERE c — the reference's row-level DML grammar over the
@@ -86,7 +87,7 @@ object LakeScans {
       : Option[org.apache.spark.sql.DataFrame] = {
     import org.apache.spark.sql.functions.expr
     val spark = ses.spark
-    text.trim match {
+    text match {
       case DeletePat(kind, path, cond) =>
         val n = kind.toLowerCase match {
           case "delta" => graft.ops.DeltaLake.delete(spark, path, expr(cond))
@@ -122,7 +123,7 @@ object LakeScans {
     * merge-on-read). Aliases are fixed to t/s (the clause expressions are
     * evaluated under those names). Returns the affected row count. */
   def dispatchMerge(ses: SqlSession, text: String)
-      : Option[org.apache.spark.sql.DataFrame] = text.trim match {
+      : Option[org.apache.spark.sql.DataFrame] = text match {
     case MergePat(kind, path, sourceSql, onCond, whens) =>
       val spark = ses.spark
       val s0 = sourceSql.trim

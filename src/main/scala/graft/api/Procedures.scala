@@ -34,7 +34,7 @@ object Procedures {
   }
 
   def dispatch(ses: SqlSession, text: String): Option[DataFrame] =
-    text.trim match {
+    text match {
       case CallPat(name, argStr) =>
         val spark = ses.spark
         val args = Text.splitTop(argStr).filter(_.nonEmpty)

@@ -47,7 +47,7 @@ object SessionStatements {
   /** Try to handle `text` as a session statement; None → plain query. */
   def dispatch(ses: SqlSession, text: String): Option[DataFrame] = {
     val spark = ses.spark
-    text.trim.stripSuffix(";").trim match {
+    text match {
       case Prepare(name, query) =>
         SessionScope.update(spark, prepared)(_ + (name.toLowerCase -> query.trim))
         Some(status(spark, "PREPARE"))
@@ -118,7 +118,7 @@ object SessionStatements {
     * [[dispatch]] applies, URL-encoded. */
   def responseHeaders(text: String): Map[String, String] = {
     def enc(v: String) = java.net.URLEncoder.encode(v, "UTF-8")
-    text.trim.stripSuffix(";").trim match {
+    text match {
       case SetSess(key, raw) =>
         Map("X-Presto-Set-Session" -> s"$key=${enc(unquote(raw.trim))}")
       case ResetSess(key) => Map("X-Presto-Clear-Session" -> key)

@@ -52,9 +52,8 @@ object SqlFunctions {
   private val characteristic =
     """(?is)\A(?:COMMENT\s+'(?:[^']|'')*'|LANGUAGE\s+\w+|NOT\s+DETERMINISTIC|DETERMINISTIC|RETURNS\s+NULL\s+ON\s+NULL\s+INPUT|CALLED\s+ON\s+NULL\s+INPUT)\s+""".r
 
-  /** Try `text` as CREATE/DROP FUNCTION; None → not a function statement. */
-  def dispatch(spark: SparkSession, text: String): Option[String] = {
-    val t = text.trim.stripSuffix(";").trim
+  /** Try `t` as CREATE/DROP FUNCTION; None → not a function statement. */
+  def dispatch(spark: SparkSession, t: String): Option[String] = {
     CreateHead.findPrefixMatchOf(t) match {
       case Some(m) =>
         val orReplace = m.group(1) != null

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.Tables
 import graft.functions.GraftFunctions
 
@@ -19,9 +19,11 @@ import graft.functions.GraftFunctions
   *
   * Dialect notes: Spark SQL already accepts the bulk of the reference's
   * ANSI surface (date literals, INTERVAL, FILTER (WHERE), GROUPING SETS,
-  * LATERAL, ||, 1-based element_at/subscripts). `Dialect.translate` shims
-  * the residual function-name differences plus the grammar idioms Spark
-  * spells differently: UNNEST-as-relation (→ LATERAL + explode TVFs),
+  * LATERAL, ||, 1-based element_at/subscripts). Reference function names
+  * resolve through the session's function registry (`GraftFunctions.all`,
+  * aliases included), so `spark.sql`, `expr` and lake-DML conditions see
+  * them too. `Dialect.translate` shims the grammar idioms Spark spells
+  * differently: UNNEST-as-relation (→ LATERAL + explode TVFs),
   * TABLESAMPLE BERNOULLI/SYSTEM (→ TABLESAMPLE PERCENT), TRY(expr),
   * 1-based subscripts, and GROUPS window frames (rewritten through the
   * same frame translation ops/Windows.scala uses — gated by
@@ -33,7 +35,10 @@ final class SqlSession private (val spark: SparkSession) {
     * UNNEST(x) AS t(a, b) is textually ambiguous between the map form and
     * array<row<a,b>> struct expansion — the map translation is tried
     * first and the struct translation on analysis failure. */
-  def sql(text0: String): DataFrame = {
+  def sql(raw: String): DataFrame = {
+    // every dispatcher below matches the statement itself: no
+    // surrounding whitespace, comments or `;`
+    val text0 = Text.statement(raw)
     // FROM-position lake scans (delta_scan/hudi_scan/iceberg_scan) bind
     // to temp views before any other dispatch — the dialect's stand-in
     // for the reference's delta/hudi/iceberg catalogs
@@ -81,6 +86,11 @@ final class SqlSession private (val spark: SparkSession) {
   }
 
   def table(name: String): DataFrame = spark.table(name)
+
+  /** A session over a clone of this one (SessionScope.fork): the clone
+    * copies the conf, the function registry and the optimizer rules that
+    * `wrap` set, so it needs no second `wrap`. */
+  def fork(): SqlSession = new SqlSession(SessionScope.fork(spark))
 }
 
 object SqlSession {
@@ -135,141 +145,54 @@ object SqlSession {
   /** One (catalog, schema, name, type) row per catalog entry — the
     * reference's information_schema.tables (ANSI; temp views report as
     * VIEW, persisted tables as BASE TABLE). Metadata-only listing. */
-  private[api] def informationSchemaTables(
-      spark: SparkSession): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val rows = spark.catalog.listTables().collect().toSeq.map { t =>
-      Row("graft", Option(t.database).getOrElse("default"), t.name,
-        if (t.tableType == "VIEW" || t.isTemporary) "VIEW" else "BASE TABLE")
-    }
-    val schema = StructType(Seq(
-      StructField("table_catalog", StringType),
-      StructField("table_schema", StringType),
-      StructField("table_name", StringType),
-      StructField("table_type", StringType)))
-    spark.createDataFrame(rows.asJava, schema)
-  }
+  private[api] def informationSchemaTables(spark: SparkSession): DataFrame =
+    rows(spark, "table_catalog STRING, table_schema STRING, " +
+      "table_name STRING, table_type STRING",
+      spark.catalog.listTables().collect().toSeq.map { t =>
+        Row("graft", Option(t.database).getOrElse("default"), t.name,
+          if (t.tableType == "VIEW" || t.isTemporary) "VIEW" else "BASE TABLE")
+      })
 
   /** ANSI information_schema.columns over every catalog entry, with the
     * reference's type spellings (DdlStatements.prestoTypeName — the same
     * mapping SHOW COLUMNS and the wire protocol use). */
-  private[api] def informationSchemaColumns(
-      spark: SparkSession): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val rows = spark.catalog.listTables().collect().toSeq.flatMap { t =>
-      val db = Option(t.database).getOrElse("default")
-      try {
-        spark.table(t.name).schema.fields.zipWithIndex.map { case (f, i) =>
-          Row("graft", db, t.name, f.name, (i + 1).toLong, null,
-            if (f.nullable) "YES" else "NO",
-            StatementServer.prestoType(f.dataType))
-        }.toSeq
-      } catch { case _: Throwable => Seq.empty } // unreadable entry: skip
-    }
-    val schema = StructType(Seq(
-      StructField("table_catalog", StringType),
-      StructField("table_schema", StringType),
-      StructField("table_name", StringType),
-      StructField("column_name", StringType),
-      StructField("ordinal_position", LongType),
-      StructField("column_default", StringType),
-      StructField("is_nullable", StringType),
-      StructField("data_type", StringType)))
-    spark.createDataFrame(rows.asJava, schema)
-  }
+  private[api] def informationSchemaColumns(spark: SparkSession): DataFrame =
+    rows(spark, "table_catalog STRING, table_schema STRING, " +
+      "table_name STRING, column_name STRING, ordinal_position BIGINT, " +
+      "column_default STRING, is_nullable STRING, data_type STRING",
+      spark.catalog.listTables().collect().toSeq.flatMap { t =>
+        val db = Option(t.database).getOrElse("default")
+        try {
+          spark.table(t.name).schema.fields.zipWithIndex.map { case (f, i) =>
+            Row("graft", db, t.name, f.name, (i + 1).toLong, null,
+              if (f.nullable) "YES" else "NO",
+              StatementServer.prestoType(f.dataType))
+          }.toSeq
+        } catch { case _: Throwable => Seq.empty } // unreadable entry: skip
+      })
+
+  private def rows(spark: SparkSession, ddl: String, rs: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rs: _*),
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 }
 
-/** Textual shims for reference function names Spark spells differently.
-  * Word-boundary, call-position replacement only (name followed by `(`),
-  * case-insensitive. The text is first segmented into code vs quoted/comment
-  * regions ('…' with '' escapes, "…" identifiers, `--` line and slash-star
-  * block comments) — renames only ever touch code, so `SELECT 'call
-  * arbitrary(x)'` keeps its literal intact. A 3-arg `strpos(s, sub, n)`
-  * (occurrence variant — no Spark builtin) routes to the registered
-  * `graft_strpos3` expression instead of the 2-arg `instr` rename. */
+/** The grammar idioms Spark spells differently, rewritten on the code
+  * segments of a statement (literals and comments are never touched).
+  * Reference function names resolve through the session's function
+  * registry (`GraftFunctions.all` aliases), not here; the two renames left
+  * are names Spark's registry already gives another meaning. */
 object Dialect {
   import Text.{masked, matchParen, topLevelArgs}
 
-  private val renames: Seq[(String, String)] = Seq(
-    "approx_distinct" -> "approx_count_distinct",
-    "arbitrary" -> "any_value",
-    "strpos" -> "instr",
-    "json_extract_scalar" -> "get_json_object",
-    "codepoint" -> "ascii",
-    // reference array surface: all_match/any_match are Spark's
-    // forall/exists; reduce is aggregate; repeat builds an array (string
-    // repetition is concat-based in the reference); contains is array
-    // membership (string containment is strpos > 0 there)
-    "fail" -> "raise_error",
-    "is_nan" -> "isnan",
-    "starts_with" -> "startswith",
-    "ends_with" -> "endswith",
-    "jarowinkler_similarity" -> "jaro_winkler_similarity",
-    "sketch_theta_estimate" -> "theta_sketch_estimate",
-    "sketch_theta" -> "theta_sketch_agg",
-    "split_to_map" -> "str_to_map",
-    // bitwise_left_shift / bitwise_right_shift[_arithmetic] are REGISTERED
-    // functions (GraftFunctions typedShift), not renames: the reference's
-    // typed variants mask to the value's width with sign preservation and
-    // zero out at shift >= 64 — java/Spark shiftleft wraps the shift
-    // instead (BitwiseFunctions.java:preserveSign)
-    "to_base64" -> "base64",
-    "from_base64" -> "unbase64",
-    "to_hex" -> "hex",
-    "from_hex" -> "unhex",
-    "bitwise_and_agg" -> "bit_and",
-    "bitwise_or_agg" -> "bit_or",
-    "bitwise_xor_agg" -> "bit_xor",
-    "all_match" -> "forall",
-    "any_match" -> "exists",
-    "reduce" -> "aggregate",
+  // Spark's builtins of these names take the same argument types and mean
+  // something else, so a registry alias would change them for every
+  // `spark.sql`/`expr` caller on the session: Spark's repeat repeats a
+  // string (the reference's builds an array), Spark's date_format takes
+  // Java patterns (the reference's takes MySQL %-patterns)
+  private val renames = Seq(
     "repeat" -> "array_repeat",
-    "contains" -> "array_contains",
-    "from_iso8601_date" -> "to_date",
-    "from_iso8601_timestamp" -> "to_timestamp",
-    "format" -> "format_string",
-    "day_of_month" -> "dayofmonth",
-    "last_day_of_month" -> "last_day",
-    "week" -> "weekofyear",
-    "week_of_year" -> "weekofyear",
-    "to_unixtime" -> "unix_timestamp",
-    "from_unixtime_ms" -> "timestamp_millis",
-    // TRY(expr): general error→NULL wrapper (functions/TryExpression.scala);
-    // \btry\b does not touch Spark's own try_* family (underscore = word char)
-    "try" -> "try_expr",
-    // reference date_format takes MySQL %-patterns, Spark's takes Java ones
-    "date_format" -> "mysql_date_format",
-    // KLL sketch family (reference KllSketchAggregationFunctions /
-    // KllSketchFunctions) — our names carry the same arities
-    "sketch_kll" -> "kll_sketch_agg",
-    "sketch_kll_with_k" -> "kll_sketch_agg",
-    "sketch_kll_quantile" -> "kll_quantile",
-    "sketch_kll_rank" -> "kll_rank")
-
-  private val strposCall = "(?i)\\bstrpos\\s*\\(".r
-
-  /** Route the 3-arg occurrence variant to the registered
-    * `graft_strpos3` (reference StringFunctions.java stringPosition with
-    * instance) before the generic strpos→instr rename; 2-arg calls are
-    * untouched. Arity is counted on the masked text so commas in string
-    * literals don't miscount. */
-  private def rewriteStrpos3(original: String): String = {
-    val m = masked(original)
-    val sb = new StringBuilder
-    var last = 0
-    strposCall.findAllMatchIn(m).foreach { hit =>
-      val close = matchParen(m, hit.end - 1)
-      if (topLevelArgs(m, hit.end, close - 1).length >= 3) {
-        sb.append(original.substring(last, hit.start))
-          .append("graft_strpos3(")
-        last = hit.end
-      }
-    }
-    sb.append(original.substring(last)).toString
+    "date_format" -> "mysql_date_format").map { case (from, to) =>
+    (s"(?i)\\b$from\\s*\\(".r, s"$to(")
   }
 
   /** Reference subscripts are 1-based `expr[i]` (ArraySubscriptOperator;
@@ -280,25 +203,11 @@ object Dialect {
   private val subscript =
     "(?i)\\b(?!array\\b)((?:[a-z_][a-z0-9_]*\\.)*[a-z_][a-z0-9_]*)\\s*\\[([^\\[\\]]+)\\]".r
 
-  /** Match subscripts on the masked text (so brackets inside literals are
-    * invisible) but splice replacement pieces from the original, keeping
-    * literal index expressions like m['k'] intact. */
-  private def rewriteSubscripts(original: String): String = {
-    val m = masked(original)
-    val sb = new StringBuilder
-    var last = 0
-    for (mt <- subscript.findAllMatchIn(m)) {
-      sb.append(original.substring(last, mt.start))
-      sb.append("strict_subscript(")
-        .append(original.substring(mt.start(1), mt.end(1)))
-        .append(", ")
-        .append(original.substring(mt.start(2), mt.end(2)))
-        .append(")")
-      last = mt.end
-    }
-    sb.append(original.substring(last))
-    sb.toString
-  }
+  /** Matched on the masked text (brackets inside literals are invisible);
+    * the pieces keep literal index expressions like m['k'] intact. */
+  private def rewriteSubscripts(original: String): String =
+    Text.replaceAll(original, subscript)(g =>
+      s"strict_subscript(${g(1)}, ${g(2)})")
 
   /** Reference char(n) semantics (COMMON/type/CharType.java): a char value
     * IS space-padded to its declared length — length() returns n and a
@@ -315,10 +224,14 @@ object Dialect {
 
   /** Reference DECIMAL 'n.n' typed literals (SqlBase.g4 typeConstructor,
     * e.g. `DECIMAL '1.2'` in the benchto TPC-DS texts) → Spark's
-    * BD-suffixed exact decimal literal. Runs pre-segmentation because the
-    * quoted number is lexically a string literal. */
+    * BD-suffixed exact decimal literal. The type name is found on the
+    * masked text, the quoted number read from the original. */
+  private val decimalHead = "(?i)\\bdecimal\\b".r
+  private val decimalLit = "\\s+'(-?[0-9]+(?:\\.[0-9]+)?)'".r
+
   private def rewriteDecimalLiteral(original: String): String =
-    original.replaceAll("(?i)\\bdecimal\\s+'(-?[0-9]+(?:\\.[0-9]+)?)'", "$1BD")
+    Text.rewriteCalls(original, decimalHead, decimalLit)((_, a) =>
+      s"${a.group(1)}BD")
 
   /** ANSI double-quoted identifiers (`"table"."column"` — every reference
     * text, SqlBase.g4 quotedIdentifier) → Spark backticks. Spark's
@@ -334,29 +247,29 @@ object Dialect {
   /** `TIME '<time> <zone>'` literals (per-value zone — the reference's
     * TIME WITH TIME ZONE literal form, SqlBase.g4 + SqlTimeWithTimeZone)
     * → the graft_timetz constructor. Zoneless TIME literals stay Spark
-    * TIME literals. Runs on the original text like the DECIMAL-literal
-    * rewrite: the zone lives inside the quotes, which masked() blanks. */
+    * TIME literals. Like the DECIMAL literal, the type name is found on
+    * the masked text and the quoted value read from the original. */
+  private val timeHead = "(?i)\\bTIME\\b".r
   private val timeTzLit =
-    ("(?i)\\bTIME\\s+'(\\d{1,2}:\\d{2}(?::\\d{2}(?:\\.\\d+)?)?" +
+    ("\\s+'(\\d{1,2}:\\d{2}(?::\\d{2}(?:\\.\\d+)?)?" +
       "(?:\\s+[^']+|[+-]\\d{1,2}:?\\d{2}))'").r
 
   private def rewriteTimeTzLiteral(original: String): String =
-    timeTzLit.replaceAllIn(original, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        s"graft_timetz('${m.group(1)}')"))
+    Text.rewriteCalls(original, timeHead, timeTzLit)((_, a) =>
+      s"graft_timetz('${a.group(1)}')")
 
   /** `TIMESTAMP '<datetime> <zone>'` literals (per-value zone — the
     * reference's TIMESTAMP WITH TIME ZONE literal form) → graft_tstz.
     * Zoneless TIMESTAMP literals stay Spark literals. */
+  private val timestampHead = "(?i)\\bTIMESTAMP\\b".r
   private val tsTzLit =
-    ("(?i)\\bTIMESTAMP\\s+'(\\d{4}-\\d{2}-\\d{2}[ T]\\d{1,2}:\\d{2}" +
+    ("\\s+'(\\d{4}-\\d{2}-\\d{2}[ T]\\d{1,2}:\\d{2}" +
       "(?::\\d{2}(?:\\.\\d+)?)?" +
       "(?:\\s+[A-Za-z_][^']*|\\s*[+-]\\d{1,2}:?\\d{2}))'").r
 
   private def rewriteTsTzLiteral(original: String): String =
-    tsTzLit.replaceAllIn(original, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        s"graft_tstz('${m.group(1)}')"))
+    Text.rewriteCalls(original, timestampHead, tsTzLit)((_, a) =>
+      s"graft_tstz('${a.group(1)}')")
 
   private val timeTzCastTail =
     "(?is)\\sAS\\s+TIME\\s+WITH\\s+TIME\\s+ZONE\\s*\\z".r
@@ -684,11 +597,13 @@ object Dialect {
   // Presto spells interval-arithmetic units as string literals
   // (date_add('day', n, ts) — DateTimeFunctions.java); Spark's parser form
   // wants bare identifiers (dateadd(DAY, n, ts)). Unquote in place.
-  private val unitCall =
-    "(?i)\\b(date_add|dateadd|date_diff|datediff|timestampadd|timestampdiff)\\s*\\(\\s*'([a-z]+)'\\s*,".r
+  private val unitHead =
+    "(?i)\\b(date_add|dateadd|date_diff|datediff|timestampadd|timestampdiff)\\s*\\(".r
+  private val unitArg = "(?i)\\s*'([a-z]+)'\\s*,".r
 
   private def rewriteUnitCalls(original: String): String =
-    unitCall.replaceAllIn(original, m => s"${m.group(1)}(${m.group(2)},")
+    Text.rewriteCalls(original, unitHead, unitArg)((h, a) =>
+      s"${h.group(1)}(${a.group(1)},")
 
   private val timeWithTz = "(?i)\\bTIME\\s+WITH\\s+TIME\\s+ZONE\\b".r
   private val tsWithTz = "(?i)\\bTIMESTAMP\\s+WITH\\s+TIME\\s+ZONE\\b".r
@@ -703,20 +618,9 @@ object Dialect {
     * `exclude_columns([input =>] TABLE(t), [columns =>] DESCRIPTOR(a, b))`
     * → Spark's star-except subquery `(SELECT * EXCEPT (a, b) FROM t)`.
     * Pure pass-through projection, so the rewrite is exact. */
-  private def rewriteExcludeColumns(original: String): String = {
-    val m = masked(original)
-    val sb = new StringBuilder
-    var last = 0
-    for (hit <- excludeColumnsRe.findAllMatchIn(m)) {
-      sb.append(original.substring(last, hit.start))
-      val table = original.substring(hit.start(1), hit.end(1))
-      val cols = original.substring(hit.start(2), hit.end(2)).trim
-      sb.append(s"(SELECT * EXCEPT ($cols) FROM $table)")
-      last = hit.end
-    }
-    sb.append(original.substring(last))
-    sb.toString
-  }
+  private def rewriteExcludeColumns(original: String): String =
+    Text.replaceAll(original, excludeColumnsRe)(g =>
+      s"(SELECT * EXCEPT (${g(2).trim}) FROM ${g(1)})")
 
   def translate(text: String, unnestStructRows: Boolean = false): String = {
     // time with time zone (per-value zones, TimeTzFunctions): zone-carrying
@@ -741,11 +645,11 @@ object Dialect {
           "graft_tstz_format); it is not supported as a DDL column type")
     Text.mapCode(rewriteTableSample(rewriteUnnest(rewriteSubscripts(
       rewriteExcludeColumns(rewriteGroupsFrame(rewriteUnitCalls(
-        rewriteCharCast(rewriteStrpos3(rewriteQuantified(
-          rewriteDecimalLiteral(base)))))))),
+        rewriteCharCast(rewriteQuantified(
+          rewriteDecimalLiteral(base))))))),
       unnestStructRows))) { seg =>
       val renamed = renames.foldLeft(seg) { case (t, (from, to)) =>
-        t.replaceAll(s"(?i)\\b$from\\s*\\(", s"$to(")
+        from.replaceAllIn(t, to)
       }
       // reference bare niladic spellings Spark only accepts with parens
       // (SqlBase.g4 specialDateTimeFunction: LOCALTIMESTAMP / LOCALTIME)

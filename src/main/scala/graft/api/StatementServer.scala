@@ -108,7 +108,7 @@ object StatementServer {
   private val seq = new AtomicLong(0)
   @volatile private var server: com.sun.net.httpserver.HttpServer = _
   @volatile private var boundPort: Int = -1
-  @volatile private var session: SparkSession = _
+  @volatile private var session: SqlSession = _
   @volatile private var pageRows: Int = 1000
   /** Default concurrency of the catch-all `global` resource group (the
     * reference's dispatch manager admits queries concurrently under
@@ -134,7 +134,7 @@ object StatementServer {
       t
     })
   private val SharedStateStmt = java.util.regex.Pattern.compile(
-    """\A\s*(CREATE|DROP|ALTER|INSERT|DELETE|UPDATE|MERGE|TRUNCATE|ANALYZE|CALL|GRANT|REVOKE|SET\s+ROLE|START\s+TRANSACTION|BEGIN|COMMIT|ROLLBACK|REFRESH|USE|CACHE|UNCACHE)\b.*""",
+    """\A(CREATE|DROP|ALTER|INSERT|DELETE|UPDATE|MERGE|TRUNCATE|ANALYZE|CALL|GRANT|REVOKE|SET\s+ROLE|START\s+TRANSACTION|BEGIN|COMMIT|ROLLBACK|REFRESH|USE|CACHE|UNCACHE)\b.*""",
     java.util.regex.Pattern.CASE_INSENSITIVE | java.util.regex.Pattern.DOTALL)
   private def mutatesSharedState(sql: String): Boolean =
     SharedStateStmt.matcher(sql).matches()
@@ -290,8 +290,8 @@ object StatementServer {
             if (execBreach) "Query exceeded the maximum execution time limit"
             else "Query exceeded maximum time limit",
             0x00020003, "EXCEEDED_TIME_LIMIT", "INSUFFICIENT_RESOURCES"))
-          val spark = session
-          if (spark != null) spark.sparkContext.cancelJobGroup(q.id)
+          val ses = session
+          if (ses != null) ses.spark.sparkContext.cancelJobGroup(q.id)
         }
       }
     }
@@ -347,7 +347,8 @@ object StatementServer {
     * a row cap is the same knob). */
   def ensureStarted(spark: SparkSession, pageSize: Int = 1000): String =
     synchronized {
-      session = spark
+      // wrapped once here; each read's clone inherits what wrap set
+      session = SqlSession.wrap(spark)
       pageRows = pageSize
       if (server != null) return s"http://127.0.0.1:$boundPort"
       val s = com.sun.net.httpserver.HttpServer.create(
@@ -612,8 +613,10 @@ object StatementServer {
     // reference id shape: yyyyMMdd_HHmmss_NNNNN_xxxxx (QueryIdGenerator)
     val stamp = new java.text.SimpleDateFormat("yyyyMMdd_HHmmss")
       .format(new java.util.Date())
+    // normalized once: lane choice, statementHeaders and run read one text
     val q = new QueryExec(f"${stamp}_${seq.getAndIncrement()}%05d_graft",
-      sql, sessionProps, prepares, user, source, defaultSchema, timeZone)
+      Text.statement(sql), sessionProps, prepares, user, source,
+      defaultSchema, timeZone)
     evict()
     queries.put(q.id, q)
     // Created fires as soon as the query is registered — BEFORE the
@@ -664,7 +667,7 @@ object StatementServer {
   /** Response-header side effects of the statement itself: USE here, the
     * session statements in SessionStatements.responseHeaders. */
   private def statementHeaders(sql: String): Map[String, String] =
-    sql.trim match {
+    sql match {
       case Use(cat, sch) =>
         Option(cat).map("X-Presto-Set-Catalog" -> _).toMap +
           ("X-Presto-Set-Schema" -> sch)
@@ -680,7 +683,6 @@ object StatementServer {
     }
     if (!started) return
     q.executionStartNanos = System.nanoTime()
-    val spark = session
     val shared = mutatesSharedState(q.sql)
     // queries run on a per-request session CLONE: isolated conf / temp
     // views / prepares, so concurrent requests cannot observe each
@@ -690,15 +692,15 @@ object StatementServer {
     // without its request state (SessionScope.fork). Shared-state DDL runs
     // on the SHARED session (serialized on its own lane) so catalog
     // effects persist.
-    val qSession = if (shared) spark else SessionScope.fork(spark)
-    val ses = SqlSession.wrap(qSession)
+    val ses = if (shared) session else session.fork()
+    val qSession = ses.spark // clones share the SparkContext
     // on the shared session, header context must unwind after the
     // statement; a clone's request state is released with the clone
     val applied = scala.collection.mutable.ListBuffer.empty[String]
     val appliedConf =
       scala.collection.mutable.ListBuffer.empty[(String, String)]
     try {
-      spark.sparkContext.setJobGroup(q.id, q.sql, interruptOnCancel = true)
+      qSession.sparkContext.setJobGroup(q.id, q.sql, interruptOnCancel = true)
       // X-Presto-Schema / X-Presto-Time-Zone session context (the
       // reference rebuilds the Session from these headers per request;
       // USE only RETURNS Set-Schema headers — the client carries the
@@ -785,7 +787,7 @@ object StatementServer {
         try ses.sql(stmt) catch { case _: Throwable => () })
       appliedConf.reverseIterator.foreach { case (k, v) =>
         try qSession.conf.set(k, v) catch { case _: Throwable => () } }
-      spark.sparkContext.clearJobGroup()
+      qSession.sparkContext.clearJobGroup()
     }
   }
 
@@ -865,8 +867,8 @@ object StatementServer {
       }
     }
     if (act) {
-      val spark = session
-      if (spark != null) spark.sparkContext.cancelJobGroup(q.id)
+      val ses = session
+      if (ses != null) ses.spark.sparkContext.cancelJobGroup(q.id)
       emitCompleted(q)
     }
     act
@@ -1012,10 +1014,10 @@ object StatementServer {
               // cancelJobGroup reaches them too
               val pulled =
                 try {
-                  session.sparkContext
-                    .setJobGroup(q.id, q.sql, interruptOnCancel = true)
+                  val sc = session.spark.sparkContext
+                  sc.setJobGroup(q.id, q.sql, interruptOnCancel = true)
                   try servePage(q, page)
-                  finally session.sparkContext.clearJobGroup()
+                  finally sc.clearJobGroup()
                 } catch {
                   case e: Throwable if !q.canceled =>
                     fail(q, ProtoError(String.valueOf(e.getMessage), 65536,

@@ -4,11 +4,13 @@ import scala.util.matching.Regex
 
 /** The statement front end's one SQL text scanner: quote/comment
   * segmentation, masking, balanced-paren matching, top-level comma
-  * splitting, and the two rewrite loops built on them (CAST type tails,
-  * call heads with literal arguments). Every textual rewrite under
-  * `graft.api` finds its positions on the masked text, so nothing inside a
-  * string literal, quoted identifier or comment is ever rewritten — the
-  * role the reference's single ANTLR lexer (SqlBase.g4) plays there. */
+  * splitting, the statement normalizer, statement patterns, and the two
+  * rewrite loops built on them (CAST type tails, call heads and typed
+  * literals). Every textual rewrite and statement pattern under
+  * `graft.api` finds its positions on the masked text, so nothing inside
+  * a string literal, quoted identifier or comment is ever rewritten or
+  * read as a keyword — the role the reference's single ANTLR lexer
+  * (SqlBase.g4) plays there. */
 private[api] object Text {
 
   /** Split into (segment, isCode): code vs '…' strings (with '' escapes),
@@ -49,19 +51,65 @@ private[api] object Text {
     out.toSeq
   }
 
-  /** Original text with non-code spans blanked — safe for paren matching.
-    * Offsets are unchanged, so a match on the masked text reads its
-    * literal contents back from the original at the same positions. */
+  /** Original text with comments and the insides of literals and quoted
+    * identifiers blanked — safe for paren matching. A literal keeps its
+    * quotes, so a `\s+` in a pattern never runs across one. Offsets are
+    * unchanged, so a match on the masked text reads its literal contents
+    * back from the original at the same positions. */
   def masked(text: String): String =
     segments(text).map { case (seg, isCode) =>
-      if (isCode) seg else " " * seg.length
+      val q = seg.charAt(0)
+      if (isCode) seg
+      else if (q != '\'' && q != '"') " " * seg.length
+      else if (seg.length > 1 && seg.last == q)
+        q + " " * (seg.length - 2) + q
+      else q + " " * (seg.length - 1) // unterminated
     }.mkString
+
+  /** A statement pattern: `regex` must match the whole masked text, so a
+    * keyword inside a literal or comment never splits the statement; the
+    * groups are read from the original (null when unmatched). */
+  final class Pattern(regex: Regex) {
+    def unapplySeq(text: String): Option[List[String]] = {
+      val m = regex.pattern.matcher(masked(text))
+      if (!m.matches()) None
+      else Some(List.tabulate(m.groupCount) { i =>
+        if (m.start(i + 1) < 0) null
+        else text.substring(m.start(i + 1), m.end(i + 1))
+      })
+    }
+  }
+
+  /** `text` with each match of `regex` on the masked text replaced by
+    * `f(group)`, where `group(i)` reads the i-th group from the original. */
+  def replaceAll(text: String, regex: Regex)(f: (Int => String) => String): String = {
+    val sb = new StringBuilder
+    var last = 0
+    for (hit <- regex.findAllMatchIn(masked(text))) {
+      sb.append(text.substring(last, hit.start))
+        .append(f(i => text.substring(hit.start(i), hit.end(i))))
+      last = hit.end
+    }
+    sb.append(text.substring(last)).toString
+  }
 
   /** `text` with `f` applied to each code segment; literals and comments
     * pass through untouched. */
   def mapCode(text: String)(f: String => String): String =
     segments(text).map { case (seg, isCode) => if (isCode) f(seg) else seg }
       .mkString
+
+  /** The statement itself: `text` without the whitespace and comments
+    * around it or a trailing `;`. Every statement pattern matches this. */
+  def statement(text: String): String = {
+    val m = masked(text) // comments blank; a literal keeps its quotes
+    val start = m.indexWhere(!_.isWhitespace)
+    if (start < 0) return ""
+    var end = m.length
+    while (end > start && (m(end - 1).isWhitespace || m(end - 1) == ';'))
+      end -= 1
+    text.substring(start, end)
+  }
 
   /** End index (exclusive) of the parenthesized group opening at `open`
     * (index of '('), measured on the masked text. */
@@ -116,11 +164,10 @@ private[api] object Text {
     * matches `tail` becomes `splice(expr, group)`, where `group(i)` reads
     * the tail's i-th group from the original text. `tail` is matched on
     * the masked text between `CAST(` and the closing paren (exclusive) and
-    * should be anchored at `\z` and open on a single `\s` before AS
-    * (masked literals read as spaces, so a greedy `\s+` would swallow a
-    * literal cast operand). Rewrites repeat until none matches, so nested
-    * casts are handled; past [[MaxCasts]] rewrites it raises rather than
-    * return a partly rewritten statement. */
+    * should be anchored at `\z` and open on a single `\s` before AS.
+    * Rewrites repeat until none matches, so nested casts are handled;
+    * past [[MaxCasts]] rewrites it raises rather than return a partly
+    * rewritten statement. */
   def rewriteCasts(text: String, tail: Regex)(
       splice: (String, Int => String) => String): String = {
     @annotation.tailrec
@@ -146,12 +193,13 @@ private[api] object Text {
     if (castOpen.findFirstIn(text).isEmpty) text else loop(text, 0)
   }
 
-  /** Rewrites each call whose head (`name(`) matches `head` on the masked
-    * text and whose leading arguments match `args` as a prefix of the
-    * original text right after the head: the span from the head to the
-    * end of `args` becomes `splice(head, args)`. Arguments are read from
-    * the original because masking blanks the literals they hold; a head
-    * inside a literal or comment is never found. */
+  /** Rewrites each call or typed literal whose head (`name(`, or a type
+    * name) matches `head` on the masked text and whose leading arguments
+    * (or literal) match `args` as a prefix of the original text right
+    * after the head: the span from the head to the end of `args` becomes
+    * `splice(head, args)`. Arguments are read from the original because
+    * masking blanks the literals they hold; a head inside a literal or
+    * comment is never found. */
   def rewriteCalls(text: String, head: Regex, args: Regex)(
       splice: (Regex.Match, Regex.Match) => String): String = {
     if (head.findFirstIn(text).isEmpty) return text

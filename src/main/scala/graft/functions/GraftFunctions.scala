@@ -28,8 +28,55 @@ object GraftFunctions {
         (es: Seq[Expression]) => DistCall.c3(n, es(0), es(1), es(2)))
     }
 
+  /** Reference spellings of functions Spark or graft has under another
+    * name (SURVEY §7.3), each resolved as SQL text resolves its target:
+    * graft's entry in [[all]], else Spark's builtin. `reduce` needs none
+    * (Spark's is `aggregate`); `repeat` and `date_format` stay renames in
+    * `api.Dialect`: Spark's builtins of those names mean something else. */
+  private val aliasEntries: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    "approx_distinct" -> "approx_count_distinct", "arbitrary" -> "any_value",
+    "json_extract_scalar" -> "get_json_object", "codepoint" -> "ascii", "fail" -> "raise_error",
+    "is_nan" -> "isnan", "starts_with" -> "startswith", "ends_with" -> "endswith",
+    "jarowinkler_similarity" -> "jaro_winkler_similarity",
+    "sketch_theta_estimate" -> "theta_sketch_estimate", "sketch_theta" -> "theta_sketch_agg",
+    "split_to_map" -> "str_to_map", "to_base64" -> "base64", "from_base64" -> "unbase64",
+    "to_hex" -> "hex", "from_hex" -> "unhex", "bitwise_and_agg" -> "bit_and",
+    "bitwise_or_agg" -> "bit_or", "bitwise_xor_agg" -> "bit_xor", "all_match" -> "forall",
+    "any_match" -> "exists", "from_iso8601_date" -> "to_date",
+    "from_iso8601_timestamp" -> "to_timestamp", "format" -> "format_string",
+    "day_of_month" -> "dayofmonth", "last_day_of_month" -> "last_day", "week" -> "weekofyear",
+    "week_of_year" -> "weekofyear", "to_unixtime" -> "unix_timestamp",
+    "from_unixtime_ms" -> "timestamp_millis",
+    // TRY(expr): the error→NULL wrapper (functions/TryExpression.scala)
+    "try" -> "try_expr",
+    // KLL sketch family: our names carry the same arities
+    "sketch_kll" -> "kll_sketch_agg", "sketch_kll_with_k" -> "kll_sketch_agg",
+    "sketch_kll_quantile" -> "kll_quantile", "sketch_kll_rank" -> "kll_rank"
+  ).map { case (name, target) =>
+    (name, s"$name(...) - reference spelling of $target",
+      (es: Seq[Expression]) => resolve(target, es))
+  } ++ Seq[(String, String, Seq[Expression] => Expression)](
+    // 3 arguments: the n-th occurrence (StringFunctions.java stringPosition)
+    ("strpos", "strpos(s, sub[, n]) - instr, or the n-th occurrence of sub",
+      es => resolve(if (es.length == 3) "graft_strpos3" else "instr", es)),
+    // reference contains is array membership; Spark's serves the rest
+    ("contains", "contains(a, x) - array_contains on an array, else Spark's contains",
+      es => builtin(es.headOption.map(_.dataType) match {
+        case Some(_: org.apache.spark.sql.types.ArrayType) => "array_contains"
+        case _ => "contains"
+      }, es)))
+
+  private lazy val byName = all.map(e => e._1 -> e._3).toMap
+
+  private def resolve(name: String, es: Seq[Expression]): Expression =
+    byName.get(name).fold(builtin(name, es))(_(es))
+
+  private def builtin(name: String, es: Seq[Expression]): Expression =
+    org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+      .lookupFunction(FunctionIdentifier(name), es)
+
   /** name → (usage, builder) for every custom function. */
-  val all: Seq[(String, String, Seq[Expression] => Expression)] = distEntries ++ Seq[
+  val all: Seq[(String, String, Seq[Expression] => Expression)] = distEntries ++ aliasEntries ++ Seq[
     (String, String, Seq[Expression] => Expression)](
     ("jaro_winkler_similarity", "jaro_winkler_similarity(s1, s2) - Jaro-Winkler similarity in [0,1]",
       es => JaroWinklerSimilarity(es(0), es(1))),
@@ -456,8 +503,7 @@ object GraftFunctions {
       "array_intersect(a, b) / array_intersect(array<array<T>>) - pairwise builtin or n-ary fold",
       es =>
         if (es.length == 1) rc(ArrayMapExtras.arrayIntersectAll(c(es.head)))
-        else org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
-          .lookupFunction(FunctionIdentifier("array_intersect"), es)),
+        else builtin("array_intersect", es)),
     ("replace_first",
       "replace_first(str, search, replace) - replace only the first occurrence",
       es => rc(StringExtras.replaceFirst(c(es(0)), c(es(1)), c(es(2))))),
@@ -1328,8 +1374,7 @@ object GraftFunctions {
     else if (es.length == 1 && tsKernel != null &&
         TimestampTzFunctions.isTimestampTz(es.head.dataType))
       rc(tsKernel(c(es.head)))
-    else org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
-      .lookupFunction(FunctionIdentifier(name), es)
+    else builtin(name, es)
 
   /** Session-zone offset seconds at a timestamp instant (reference
     * timezone_hour/minute on zoneless timestamps use the session zone). */

@@ -472,19 +472,25 @@ class DeltaSpec extends AnyFunSuite {
   test("DELETE FROM / UPDATE lake scans work in SQL text") {
     val ses = graft.api.SqlSession.wrap(spark)
     val dd = freshDir("sqldml")
-    val df = Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("k", "v")
+    val df = Seq((1L, 1.0, "a"), (2L, 2.0, "b"), (3L, 3.0, "c"))
+      .toDF("k", "v", "note")
     DeltaLake.writeDataFile(df, dd, "f0.parquet")
     DeltaLake.commit(dd, 0, Seq(DeltaLake.protocolAction,
       DeltaLake.metaDataAction(df.schema), DeltaLake.addAction("f0.parquet")))
     assert(ses.sql(s"DELETE FROM delta_scan('${dd.getPath}') WHERE k = 3")
       .collect()(0).getLong(0) == 1L)
+    // a WHERE inside a SET literal does not end the SET list
     assert(ses.sql(
       s"UPDATE delta_scan('${dd.getPath}') " +
-        "SET v = CASE WHEN 'x,y' <> '' THEN v * 10 END WHERE k = 2")
+        "SET v = CASE WHEN 'x,y' <> '' THEN v * 10 END, " +
+        "note = 'x WHERE y' WHERE k = 2")
       .collect()(0).getLong(0) == 1L)
     assert(ses.sql(s"SELECT k, v FROM delta_scan('${dd.getPath}') " +
       "ORDER BY k").collect().map(r => (r.getLong(0), r.getDouble(1)))
       .toSeq == Seq((1L, 1.0), (2L, 20.0)))
+    assert(ses.sql(s"SELECT note FROM delta_scan('${dd.getPath}') " +
+      "ORDER BY k").collect().map(_.getString(0)).toSeq ==
+      Seq("a", "x WHERE y"))
     // iceberg spelling routes to the merge-on-read writers
     val id = freshDir("sqldml_ice")
     val a = graft.ops.IcebergTable.writeDataFile(df, id, "a.parquet")
@@ -510,9 +516,9 @@ class DeltaSpec extends AnyFunSuite {
       DeltaLake.metaDataAction(df.schema), DeltaLake.addAction("f0.parquet")))
     val r = ses.sql(
       s"""MERGE INTO delta_scan('${dd.getPath}') AS t
-         |USING (SELECT * FROM (VALUES (2, 20.0), (3, 30.0), (4, 40.0))
-         |       AS x(mk, mv)) AS s
-         |ON t.k = s.mk
+         |USING (SELECT * FROM (VALUES (2, 20.0, 'n'), (3, 30.0, 'n'),
+         |       (4, 40.0, 'n')) AS x(mk, mv, note)) AS s
+         |ON t.k = s.mk AND s.note <> 'a WHEN b'
          |WHEN MATCHED AND s.mk = 3 THEN DELETE
          |WHEN MATCHED THEN UPDATE SET v = CASE WHEN 'x,y' <> '' THEN s.mv END
          |WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (s.mk, 'n,1', s.mv)
@@ -523,6 +529,37 @@ class DeltaSpec extends AnyFunSuite {
       (x.getLong(0), x.getString(1), x.getDouble(2)))
     assert(out.toSeq == Seq((1L, "a", 1.0), (2L, "b", 20.0),
       (4L, "n,1", 40.0)))
+  }
+
+  test("lake DML takes a trailing ; and leading comments") {
+    val ses = graft.api.SqlSession.wrap(spark)
+    val dd = freshDir("sqlnorm")
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "note")
+    DeltaLake.writeDataFile(df, dd, "f0.parquet")
+    DeltaLake.commit(dd, 0, Seq(DeltaLake.protocolAction,
+      DeltaLake.metaDataAction(df.schema), DeltaLake.addAction("f0.parquet")))
+    assert(ses.sql(s"DELETE FROM delta_scan('${dd.getPath}') WHERE k = 1;")
+      .collect()(0).getLong(0) == 1L)
+    assert(ses.sql(s"-- nightly\n/* purge */ DELETE FROM " +
+      s"delta_scan('${dd.getPath}') WHERE k = 2 -- done\n")
+      .collect()(0).getLong(0) == 1L)
+    assert(DeltaLake.read(spark, dd.getPath).collect().map(_.getLong(0))
+      .toSeq == Seq(3L))
+  }
+
+  test("lake-DML conditions and expr() resolve reference function names") {
+    val ses = graft.api.SqlSession.wrap(spark)
+    val dd = freshDir("sqlnames")
+    val df = Seq((1L, "xa"), (2L, "b"), (3L, "xc")).toDF("k", "note")
+    DeltaLake.writeDataFile(df, dd, "f0.parquet")
+    DeltaLake.commit(dd, 0, Seq(DeltaLake.protocolAction,
+      DeltaLake.metaDataAction(df.schema), DeltaLake.addAction("f0.parquet")))
+    assert(ses.sql(s"DELETE FROM delta_scan('${dd.getPath}') " +
+      "WHERE starts_with(note, 'x')").collect()(0).getLong(0) == 2L)
+    val left = DeltaLake.read(spark, dd.getPath)
+    assert(left.collect().map(_.getLong(0)).toSeq == Seq(2L))
+    // the same names serve expr() on the wrapped session
+    assert(left.select(expr("arbitrary(k)")).collect()(0).getLong(0) == 2L)
   }
 
   test("DELETE rewrites only the files holding matches; NULL keeps rows") {

@@ -546,6 +546,29 @@ class StatementProtocolSpec extends AnyFunSuite {
     }
   }
 
+  test("USE s; returns Set-Schema and leaves the shared session in default") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS wire_semi")
+    try {
+      var r = StatementClient.post(base, "USE wire_semi;")
+      var hdrs = Map.empty[String, String]
+      var guard = 0
+      while (r.nextUri.isDefined && guard < 10000) {
+        guard += 1
+        val (rr, hh) = StatementClient.advanceFull(r.nextUri.get)
+        r = rr; hdrs ++= hh
+      }
+      assert(r.state == "FINISHED", r.error.toString)
+      assert(hdrs.get("X-Presto-Set-Schema").contains("wire_semi"),
+        hdrs.toString)
+      val db = pagesOf(StatementClient.post(base,
+        "SELECT current_database() AS db"))
+      assert(db.map(_.getString(0)) == Vector("default"))
+    } finally {
+      spark.sql("USE default")
+      spark.sql("DROP DATABASE IF EXISTS wire_semi")
+    }
+  }
+
   test("X-Presto-Time-Zone sets the session zone for the request only") {
     val tokyo = pagesOf(StatementClient.post(base,
       "SELECT current_timezone() AS tz",

@@ -52,6 +52,15 @@ class SystemTablesSpec extends AnyFunSuite {
     assert(q.head.getLong(1) == 1L)
   }
 
+  test("CALL with a trailing ; reaches the procedure") {
+    val err = intercept[IllegalArgumentException] {
+      SqlSession.wrap(spark).sql("CALL system.runtime.kill_query('q');")
+        .collect()
+    }
+    assert(err.getMessage.contains("no running query with id q"),
+      err.getMessage)
+  }
+
   test("kill_query cancels a running query; unknown id errors") {
     base
     val r0 = StatementClient.post(base, sleepSql(8000))

@@ -11,6 +11,10 @@ object TestSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    // managed tables (StatsSpec's stats_nation) land in target/, not in
+    // the repo root
+    .config("spark.sql.warehouse.dir",
+      new java.io.File("target/spark-warehouse").getAbsolutePath)
     .getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
   /** The next fixture scale, beside `sf`. */
